@@ -39,40 +39,34 @@ final class NyTaxiBenchmark extends BaseBenchmark {
     val tm = new TimerManager
     val s = SparkBackend.session(params.numThreads, name)
     val dfilesNum = params.extra.getOrElse("dfiles_num", "1").toInt
-    var validationHashes = Map.empty[String, Long]
+    var validation = Map.empty[String, String]
     tm.timeit("total") {
       val trips = tm.timeit("t_readcsv") {
         SparkBackend.triggerLoading(loadTrips(s, params.dataDir, dfilesNum))
       }
-      def fence(q: String, df: DataFrame): Unit = {
-        tm.timeit(q)(SparkBackend.triggerExecution(df))
-        if (params.validation) validationHashes += q -> resultHash(df)
+      // the fence's order-insensitive digest is the -validation value
+      for ((q, df) <- queries(trips)) {
+        val (_, digest) = tm.timeit(q)(SparkBackend.triggerExecution(df))
+        if (params.validation) validation += s"validation_$q" -> digest.toString
       }
-      fence("Query1", trips.groupBy("cab_type").agg(count(lit(1)).as("cnt")))
-      fence("Query2", trips.groupBy("passenger_count")
-        .agg(avg("total_amount").as("avg_total")))
-      fence("Query3", trips.groupBy(col("passenger_count"),
-        year(col("pickup_datetime")).as("pickup_year")).agg(count(lit(1)).as("cnt")))
-      fence("Query4", trips.groupBy(col("passenger_count"),
-        year(col("pickup_datetime")).as("pickup_year"),
-        col("trip_distance").cast("long").as("distance"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("pickup_year").asc, col("cnt").desc))
       trips.unpersist()
     }
-    BenchmarkResults(tm.results,
-      Map("backend" -> params.backend, "dfiles_num" -> dfilesNum.toString) ++
-        validationHashes.map { case (k, v) => s"validation_$k" -> v.toString })
+    BenchmarkResults(tm.results, validation ++
+      Map("backend" -> params.backend, "dfiles_num" -> dfilesNum.toString))
   }
 
-  /** Order-insensitive result digest: XOR of per-row hashes — the canonical
-    * "collect → canonical form → compare" the reference left unimplemented,
-    * but without ordering or driver-side sorting (scales to any result set).
-    */
-  private def resultHash(df: DataFrame): Long = {
-    val hashed = df.select(xxhash64(df.columns.toIndexedSeq.map(col): _*).as("h"))
-    hashed.agg(expr("bit_xor(h)")).collect()(0).getLong(0)
-  }
+  /** The four timed queries over the loaded trips, in run order. */
+  private[graft] def queries(trips: DataFrame): Seq[(String, DataFrame)] = Seq(
+    "Query1" -> trips.groupBy("cab_type").agg(count(lit(1)).as("cnt")),
+    "Query2" -> trips.groupBy("passenger_count")
+      .agg(avg("total_amount").as("avg_total")),
+    "Query3" -> trips.groupBy(col("passenger_count"),
+      year(col("pickup_datetime")).as("pickup_year")).agg(count(lit(1)).as("cnt")),
+    "Query4" -> trips.groupBy(col("passenger_count"),
+      year(col("pickup_datetime")).as("pickup_year"),
+      col("trip_distance").cast("long").as("distance"))
+      .agg(count(lit(1)).as("cnt"))
+      .orderBy(col("pickup_year").asc, col("cnt").desc))
 
   private[graft] def loadTrips(s: SparkSession, dir: String,
                                dfilesNum: Int = 1): DataFrame = {

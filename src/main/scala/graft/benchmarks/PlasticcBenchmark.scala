@@ -26,6 +26,9 @@ import graft.functions.StatFunctions.skewSample
 final class PlasticcBenchmark extends BaseBenchmark {
   override def name: String = "plasticc"
 
+  /** o_orderpriority values; a metadata row's target is its index here. */
+  private val priorities = Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
+
   /** Staged inputs: the fixtures the offline mapping reads (analog of the
     * reference's plasticc S3 folder of training/test CSVs).
     */
@@ -68,40 +71,19 @@ final class PlasticcBenchmark extends BaseBenchmark {
         val m = SparkBackend.triggerLoading(metadata(s, params.dataDir))
         (o, m)
       }
-      // A5 multi-agg (incl. bias-corrected skew) + J1 left join
+      // one action builds the whole ETL cache and returns the row count
+      // with the order-insensitive key digest -validation compares
       val joined = tm.timeit("t_etl") {
-        val agg = obs.groupBy("object_id").agg(
-          avg("passband").as("passband_mean"),
-          min("flux").as("flux_min"), max("flux").as("flux_max"),
-          avg("flux").as("flux_mean"), skewSample(col("flux")).as("flux_skew"),
-          min("flux_err").as("flux_err_min"), max("flux_err").as("flux_err_max"),
-          avg("flux_err").as("flux_err_mean"),
-          avg("detected").as("detected_mean"),
-          min("mjd").as("mjd_min"), max("mjd").as("mjd_max"),
-          sum("flux_ratio_sq").as("flux_ratio_sq_sum"),
-          sum("flux_by_flux_ratio_sq").as("flux_by_flux_ratio_sq_sum"))
-          .withColumn("mjd_diff", col("mjd_max") - col("mjd_min"))
-          .withColumn("flux_diff", col("flux_max") - col("flux_min"))
-        val j = meta.join(agg, Seq("object_id"), "left").na.fill(0.0)
-        SparkBackend.triggerLoading(j)
-      }
-      if (params.validation) {
-        // order-insensitive digest of the ETL output (keys + row count),
-        // compared across iterations by the harness -validation machinery
-        val digest = joined
-          .select(xxhash64(col("object_id"), col("target")).as("h"))
-          .agg(expr("bit_xor(h)")).collect()(0).getLong(0)
-        extraParams += "validation_t_etl" -> s"${joined.count()}:$digest"
+        val j = etl(obs, meta).persist()
+        val (rows, digest) =
+          SparkBackend.triggerExecution(j.select("object_id", "target"))
+        if (params.validation) extraParams += "validation_t_etl" -> s"$rows:$digest"
+        j
       }
       obs.unpersist(); meta.unpersist()
       if (!params.noMl) {
-        // M1 stratified split with fixed seed (sampleBy per-class fractions)
         val (train, test) = tm.timeit("t_train_test_split") {
-          val classes = joined.select("target").distinct()
-            .collect().map(_.getInt(0))
-          val fractions = classes.map(c => (c, 0.9)).toMap
-          val tr = joined.stat.sampleBy("target", fractions, 126L)
-          val te = joined.exceptAll(tr)
+          val (tr, te) = split(joined)
           (SparkBackend.triggerLoading(tr), SparkBackend.triggerLoading(te))
         }
         tm.timeit("t_ml") {
@@ -158,7 +140,35 @@ final class PlasticcBenchmark extends BaseBenchmark {
     num / weights.sum
   }
 
-  private def observations(s: SparkSession, dir: String): DataFrame = {
+  /** A5 multi-agg (incl. bias-corrected skew) + J1 left join. */
+  private[graft] def etl(obs: DataFrame, meta: DataFrame): DataFrame = {
+    val agg = obs.groupBy("object_id").agg(
+      avg("passband").as("passband_mean"),
+      min("flux").as("flux_min"), max("flux").as("flux_max"),
+      avg("flux").as("flux_mean"), skewSample(col("flux")).as("flux_skew"),
+      min("flux_err").as("flux_err_min"), max("flux_err").as("flux_err_max"),
+      avg("flux_err").as("flux_err_mean"),
+      avg("detected").as("detected_mean"),
+      min("mjd").as("mjd_min"), max("mjd").as("mjd_max"),
+      sum("flux_ratio_sq").as("flux_ratio_sq_sum"),
+      sum("flux_by_flux_ratio_sq").as("flux_by_flux_ratio_sq_sum"))
+      .withColumn("mjd_diff", col("mjd_max") - col("mjd_min"))
+      .withColumn("flux_diff", col("flux_max") - col("flux_min"))
+    meta.join(agg, Seq("object_id"), "left").na.fill(0.0)
+  }
+
+  /** M1 stratified split of the persisted ETL output, fixed seed. Train
+    * is `sampleBy`, which keeps a row when its one draw `rand(126) <
+    * fraction(target)`; over the same partitions and row order the
+    * negation draws the same values, so test is its exact complement.
+    */
+  private[graft] def split(joined: DataFrame): (DataFrame, DataFrame) = {
+    val f = 0.9 // for every target, 0..4 by construction
+    (joined.stat.sampleBy("target", priorities.indices.map(c => (c, f)).toMap, 126L),
+      joined.filter(!(rand(126L) < f)))
+  }
+
+  private[graft] def observations(s: SparkSession, dir: String): DataFrame = {
     val li = graft.Tables.lineitem(s, dir)
     li.select(
       col("l_orderkey").as("object_id"),
@@ -177,8 +187,7 @@ final class PlasticcBenchmark extends BaseBenchmark {
       .withColumn("flux_by_flux_ratio_sq", col("flux") * col("flux_ratio_sq"))
   }
 
-  private def metadata(s: SparkSession, dir: String): DataFrame = {
-    val priorities = Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
+  private[graft] def metadata(s: SparkSession, dir: String): DataFrame = {
     val target = priorities.zipWithIndex.foldLeft(lit(0)) { case (acc, (p, i)) =>
       when(col("o_orderpriority") === p, lit(i)).otherwise(acc)
     }

@@ -1,6 +1,7 @@
 package graft.harness
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** The single execution backend. The reference multiplexes pandas / Modin /
   * HDK / Polars behind one API with explicit laziness fencing
@@ -34,10 +35,21 @@ object SparkBackend {
     cached
   }
 
-  /** Fence for a stage result that is measured but not necessarily reused:
-    * force full materialization (mirrors trigger_execution,
-    * /root/reference/timedf/backend.py:68-76 — which drains all partition
-    * futures, so a full count() is the faithful equivalent).
+  /** Fence for a stage result that is measured but not necessarily reused
+    * (mirrors trigger_execution, timedf/backend.py:68-76, which drains all
+    * partition futures). Not a `count()`: Catalyst prunes every column a
+    * count does not need, so a stage's `avg` or `sqrt` would never run.
+    * One action returns the row count and an order-insensitive digest.
     */
-  def triggerExecution(df: DataFrame): Long = df.count()
+  def triggerExecution(df: DataFrame): (Long, Long) = {
+    val r = fenced(df).collect()(0)
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** The one-row (rows, digest) frame [[triggerExecution]] collects. */
+  private[graft] def fenced(df: DataFrame): DataFrame = {
+    val names = df.columns.indices.map(i => s"c$i") // duplicate/dotted names resolve
+    df.toDF(names: _*).select(xxhash64(names.map(col): _*).as("h"))
+      .agg(count(lit(1)), coalesce(bit_xor(col("h")), lit(0L)))
+  }
 }

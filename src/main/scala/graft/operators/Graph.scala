@@ -296,6 +296,8 @@ object Graph {
     // — and the whole Generate input is built from codegen'd expressions
     // (concat/array_repeat/size) on single longs, where the reference
     // built struct rows through an interpreted per-edge-row `transform`.
+    // The price is rows: 3T exploded in total against the reference's
+    // 2E + T (T = edge-triangle incidences), up to ~3x on dense graphs.
     val corners = (if (codegenCorners)
       inter.select(explode(concat(
           array_repeat(col("lo"), size(col("third"))),

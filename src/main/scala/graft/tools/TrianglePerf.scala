@@ -8,12 +8,13 @@ package graft.tools
   * lazy plans dumped for the round's evidence (the public operator's
   * checkpoint hides the plan, same as the bucket-verify probe).
   *
-  * Usage: runMain graft.tools.TrianglePerf [sfDir] [reps]
+  * Usage: runMain graft.tools.TrianglePerf <planDir> <sfDir> [reps]
   */
 object TrianglePerf {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val reps = args.lift(1).map(_.toInt).getOrElse(3)
+    require(args.length >= 2, "usage: TrianglePerf <planDir> <sfDir> [reps]")
+    val Array(planDir, dir) = args.take(2)
+    val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val spark = graft.GraftSession.builder("graft-triangle-perf",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), dir).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -33,13 +34,14 @@ object TrianglePerf {
     val diff = a.exceptAll(b).count() + b.exceptAll(a).count()
     println(s"[triperf] mismatches=$diff (must be 0)")
     require(diff == 0, "corner forms diverge — do not time")
+    // release the checked results so the timed reps run without them
+    graft.operators.CacheLifecycle.release(a); graft.operators.CacheLifecycle.release(b)
 
-    val planDir = java.nio.file.Paths.get("plans/r12")
-    java.nio.file.Files.createDirectories(planDir)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(planDir))
     def dump(name: String, codegen: Boolean): Unit = {
       val (out, adj) = graft.operators.Graph.trianglesPlan(
         spark, dir, codegenCorners = codegen)
-      try java.nio.file.Files.write(planDir.resolve(name),
+      try java.nio.file.Files.write(java.nio.file.Paths.get(planDir, name),
         out.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
       finally adj.unpersist(false)
@@ -51,7 +53,7 @@ object TrianglePerf {
       val t0 = System.nanoTime()
       val out = run(codegen)
       println(f"[triperf] $tag ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      out.unpersist(false)
+      graft.operators.CacheLifecycle.release(out)
     }
     for (_ <- 1 to reps) {
       time("transform-structs", codegen = false)

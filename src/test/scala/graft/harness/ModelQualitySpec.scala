@@ -5,10 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Quality floors for the two ML benchmark stand-ins (M3/M4): the MLlib
   * substitutes are benchmark-timed elsewhere, but a broken feature
   * pipeline could hide behind a green timer — these specs run each
-  * training stage on the sf0.001 fixture and assert the model actually
-  * LEARNED something (beats the trivial predictor by a wide margin), so
-  * a silently shuffled label column, a dropped feature, or a broken
-  * split shows up as a red test, not a quietly worse number.
+  * training stage on the sf0.001 fixture. ny_taxi_ml must actually
+  * LEARN (beat the trivial predictor by a wide margin), so a silently
+  * shuffled label column, a dropped feature, or a broken split shows up
+  * as a red test, not a quietly worse number. plasticc's stand-in sits
+  * at chance, so its floor only guards against a NaN or divergent loss
+  * (see [[QualityFloors.PlasticcLoglossMax]]).
   */
 class ModelQualitySpec extends AnyFunSuite {
 
@@ -46,9 +48,12 @@ object QualityFloors {
     */
   val NyTaxiMseMax = 100.0
 
-  /** Measured on sf0.001: weighted_logloss = 1.665; the uniform-guess
-    * ceiling over the class set is ln(14) ≈ 2.64 — the floor requires
-    * decisively beating random, with ~1.5x headroom over observed.
+  /** The stand-in has 5 classes, so a uniform guess scores
+    * ln(5) ≈ 1.609 whatever the class weights. Measured: 1.665 on sf0.001
+    * and 1.6106 on sf0.01 — both at chance (the mapped features carry no
+    * signal about o_orderpriority). This floor therefore does not show
+    * that the classifier learned anything; it only catches a NaN or a
+    * divergent loss.
     */
   val PlasticcLoglossMax = 2.5
 }
