@@ -1,16 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
-  * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
+  * {"metric":"total","value":N,"unit":"sec","queries":{...},"failed":[...],"sf":...}.
   *
   * Each query is fenced with a full count() action (plan + execution, no
-  * result materialization on the driver). Queries run in name order; a
-  * small generic warm-up (range + one-row parquet read) runs first so the
-  * first measured query doesn't absorb JVM/codegen cold-start — table data
-  * itself is NOT pre-read, so scan cost stays inside the measurement.
+  * result materialization on the driver). A query that throws is named on
+  * stderr and listed in `failed`, never in `queries` or the total.
+  * Queries run in name order; a small generic warm-up (range + one-row
+  * parquet read) runs first so the first measured query doesn't absorb
+  * JVM/codegen cold-start — table data itself is NOT pre-read, so scan
+  * cost stays inside the measurement.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -142,46 +144,9 @@ object Bench {
     // per-query repetition would measure warm memoized state instead.
     // The driver runs the default single sweep.
     val sweeps = sys.env.get("SPARK_GRAFT_BENCH_SWEEPS").map(_.toInt).getOrElse(1)
-    // SPARK_GRAFT_BENCH_SPILL=1: per-query spill attribution IN-SUITE —
-    // the round-close instrument behind the r10 shingle-family closure
-    // (standalone probes run in a different memory regime than a suite
-    // JVM carrying family caches, so in-suite spill is its own fact).
-    val spillCounters = if (sys.env.get("SPARK_GRAFT_BENCH_SPILL").contains("1")) {
-      val mem = new java.util.concurrent.atomic.AtomicLong(0)
-      val dsk = new java.util.concurrent.atomic.AtomicLong(0)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val m = s.stageInfo.taskMetrics
-            if (m != null) {
-              mem.addAndGet(m.memoryBytesSpilled)
-              dsk.addAndGet(m.diskBytesSpilled)
-            }
-          }
-        })
-      Some((mem, dsk))
-    } else None
     val sweepResults = (1 to sweeps).map { _ =>
       val r = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val spill0 = spillCounters.map { case (m, d) => (m.get(), d.get()) }
-        try fn(spark, sfDir).count()
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        val secs = (System.nanoTime() - t0) / 1e9
-        spillCounters.foreach { case (m, d) =>
-          // listener events post asynchronously; drain so the counters
-          // attribute this query's tail stages to this query
-          org.apache.spark.GraftSparkShims.drainListenerBus(spark.sparkContext)
-          val (m0, d0) = spill0.get
-          val (dm, dd) = ((m.get() - m0) >> 20, (d.get() - d0) >> 20)
-          if (dm > 0 || dd > 0)
-            System.err.println(f"[bench-spill] $name%-28s memSp=${dm}%6d MB dskSp=${dd}%6d MB ${secs}%7.2f s")
-        }
-        name -> secs
+        name -> timeQuery(spark, sfDir, name, fn)
       }
       // drop memoized pairs + family-shared corpus intermediates so the
       // next sweep pays the builds again (and the JVM exits clean)
@@ -193,28 +158,9 @@ object Bench {
       graft.streaming.StreamOps.clearScratchDirs()
       r
     }
-    val results = sweepResults.head.map(_._1).map { name =>
-      val samples = sweepResults.map(_.find(_._1 == name).get._2).sorted
-      name -> samples(samples.length / 2)
-    }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val (results, failed) = summarize(sweepResults)
+    val fields = resultFields(results, failed)
     val sweepNote = if (sweeps > 1) s""","sweeps":$sweeps""" else ""
-    // env-supplied paths are interpolated into JSON string literals —
-    // escape them so a quote, backslash, or control character (newline,
-    // tab) in SPARK_GRAFT_BENCH_OUT or SPARK_GRAFT_SF_DIR cannot emit an
-    // invalid record
-    def jstr(raw: String): String =
-      raw.flatMap {
-        case '\\' => "\\\\"
-        case '"'  => "\\\""
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < 0x20 => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
     val sfJson = jstr(sfDir)
     // Per-run detail record: a UNIQUE timestamped file under bench_runs/,
     // never overwritten — the r11 postmortem found the driver's 8-core run
@@ -242,7 +188,7 @@ object Bench {
     val detailNote =
       try {
         java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-          s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfJson"$sweepNote}""".getBytes("UTF-8"))
+          s"""{$fields,"sf":"$sfJson"$sweepNote}""".getBytes("UTF-8"))
         s""","detail":"${jstr(outPath)}""""
       } catch {
         case e: Throwable =>
@@ -258,9 +204,68 @@ object Bench {
     // outputStrategy := StdoutOutput so this line reaches stdout verbatim;
     // the human-readable summary goes to stderr. Timing methodology is
     // UNCHANGED — this is output plumbing only.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"n":${results.size},"sf":"$sfJson"$sweepNote$detailNote}""")
+    println(s"""{$fields,"n":${results.size},"sf":"$sfJson"$sweepNote$detailNote}""")
     System.err.println(
-      s"""[bench] total=$total sec n=${results.size} sf=$sfDir sweeps=$sweeps detail=$outPath""")
+      s"""[bench] total=${results.map(_._2).sum} sec n=${results.size} failed=${failed.size} sf=$sfDir sweeps=$sweeps detail=$outPath""")
     spark.stop()
   }
+
+  /** One query's step of a sweep: Some(seconds) for plan + full count()
+    * when the entry returns, None — named on stderr — when it throws. A
+    * failed query is never recorded as a time.
+    */
+  private[graft] def timeQuery(spark: SparkSession, sfDir: String, name: String,
+                               fn: (SparkSession, String) => DataFrame): Option[Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).count()
+      Some((System.nanoTime() - t0) / 1e9)
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
+    }
+  }
+
+  /** Per-query medians over the sweeps (each sweep in the same query
+    * order) and the queries that failed in ANY sweep, which get no
+    * median.
+    */
+  private[graft] def summarize(sweeps: Seq[Seq[(String, Option[Double])]])
+  : (Seq[(String, Double)], Seq[String]) = {
+    val byName = sweeps.map(_.toMap)
+    val (ok, failed) = sweeps.head.map(_._1).partition(n => byName.forall(_(n).isDefined))
+    val results = ok.map { name =>
+      val samples = byName.map(_(name).get).sorted
+      name -> samples(samples.length / 2)
+    }
+    (results, failed)
+  }
+
+  /** The fields the stdout contract line and the detail file share: the
+    * total and per-query map over the queries that ran, and the failed
+    * names.
+    */
+  private[graft] def resultFields(results: Seq[(String, Double)],
+                                  failed: Seq[String]): String = {
+    val qs = results.map { case (k, v) => "\"" + jstr(k) + "\":" + v }
+      .mkString("{", ",", "}")
+    val fs = failed.map(n => "\"" + jstr(n) + "\"").mkString("[", ",", "]")
+    s""""metric":"total","value":${results.map(_._2).sum},"unit":"sec","queries":$qs,"failed":$fs"""
+  }
+
+  // env-supplied paths are interpolated into JSON string literals —
+  // escape them so a quote, backslash, or control character (newline,
+  // tab) in SPARK_GRAFT_BENCH_OUT or SPARK_GRAFT_SF_DIR cannot emit an
+  // invalid record
+  private def jstr(raw: String): String =
+    raw.flatMap {
+      case '\\' => "\\\\"
+      case '"'  => "\\\""
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < 0x20 => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local-mode session builder shared by every CLI main (Bench,
-  * Verify, FloorProbe). Engine-behavior conf lives HERE so a tuning tweak
+  * Verify, the tools). Engine-behavior conf lives HERE so a tuning tweak
   * lands in one place — a profiler building its own session would silently
   * measure a different engine than the bench.
   */
@@ -14,7 +14,7 @@ object GraftSession {
     * shuffle partition per ~5 MB of fixture parquet, floored at the core
     * count. At sf ≤ 1 this resolves to exactly `cpus` (no behavior
     * change vs every prior record); at sf10 it resolves to ~325, which
-    * the measured A/B (configs A–D, SpillProbe) showed turns 67 GB
+    * the measured A/B (configs A–D, a spill probe) showed turns 67 GB
     * spills and OOMs into spill-free runs at the DEFAULT 8g heap. On a
     * real cluster this mirrors the default geometry — task count tracks
     * cluster size while per-task memory stays fixed; locally the core
@@ -71,14 +71,13 @@ object GraftSession {
     SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
-      // The engine's own extension class — native functions, the as-of
-      // strategy, and the window-top-k → bounded-aggregate rewrite —
-      // enabled the way a cluster deployment would enable it. Individual
-      // operators keep their idempotent programmatic register() calls so
-      // they also work on sessions graft didn't build; this makes the
-      // whole surface deterministic per session rather than dependent on
-      // which operator ran first. Kill-switch for A/Bs:
-      // SPARK_GRAFT_TOPK_REWRITE=0 (checked inside GraftExtensions).
+      // The engine's own extension class — native functions and the
+      // as-of strategy — enabled the way a cluster deployment would
+      // enable it. Individual operators keep their idempotent
+      // programmatic register() calls so they also work on sessions graft
+      // didn't build; this makes the whole surface deterministic per
+      // session rather than dependent on which operator ran first. The
+      // window-top-k rewrite is not part of it (see GraftExtensions).
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")

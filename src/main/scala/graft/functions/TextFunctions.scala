@@ -280,24 +280,15 @@ object TextFunctions {
     */
   def portableTokenHash(c: Column): Column = md5Prefix60(c)
 
-  /** The declarative column form of [[portableTokenHash]] — the
-    * definition the DuckDB oracle replays, kept as the executable
-    * documentation of the semantics and pinned bit-equal to the kernel
-    * by OperatorSpec. Not used on hot paths: per row it allocates the
-    * 32-char hex string, substrings it, and reparses base-16.
-    */
-  def portableTokenHashColumnForm(c: Column): Column =
-    conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
-
-  /** Compiled kernel computing EXACTLY [[portableTokenHashColumnForm]]'s
-    * value straight from the digest bytes: the first 15 hex chars of md5
-    * are the first 60 bits of the digest, i.e. bytes 0–6 followed by the
-    * high nibble of byte 7 — so the column form's hex string, substring,
-    * and base-16 reparse (three allocations per row) collapse into eight
-    * byte reads. Measured 1.5× per hash (HashPerf, 5M rows: 0.46 →
-    * 0.30 s), and the hash runs once per payload BYTE on the phash gram
-    * path. Bit-equality asserted on every row by the HashPerf probe and
-    * OperatorSpec.
+  /** Compiled kernel computing EXACTLY the oracle's declarative rule
+    * `conv(substring(md5(x), 1, 15), 16, 10)` straight from the digest
+    * bytes: the first 15 hex chars of md5 are the first 60 bits of the
+    * digest, i.e. bytes 0–6 followed by the high nibble of byte 7 — so
+    * the column form's hex string, substring, and base-16 reparse (three
+    * allocations per row) collapse into eight byte reads. Measured 1.5×
+    * per hash (5M rows: 0.46 → 0.30 s), and the hash runs once per
+    * payload BYTE on the phash gram path. OperatorSpec pins it bit-equal
+    * to the column form on every row.
     */
   private def md5Prefix60(c: Column): Column = md5Prefix60Udf(c.cast("binary"))
 

@@ -108,9 +108,9 @@ object VectorFunctions {
     * lever for every sign-bucketed operator (knn graph, incremental knn,
     * streaming ANN ingest): with planes fixed, candidate volume grows as
     * n²/2^p — measured on the ×10 fixture step as a 90× pair blow-up
-    * (sumSq 20.9k → 1.87M, max bucket 26 → 205; tools.BucketBalance).
-    * Re-deriving p from n restores ~linear candidate growth; the floor
-    * keeps small corpora at the well-tested default geometry.
+    * (sumSq 20.9k → 1.87M, max bucket 26 → 205). Re-deriving p from n
+    * restores ~linear candidate growth; the floor keeps small corpora at
+    * the well-tested default geometry.
     */
   def adaptivePlaneCount(corpusSize: Long, targetBucketSize: Int = 32,
                          floor: Int = 8): Int =

@@ -41,14 +41,9 @@ private[graft] object CacheLifecycle {
     * DISK_ONLY. A round block's only consumer is the NEXT round, so it
     * reads back once through the OS page cache; even at sf0.1 the disk
     * route measured at-or-faster (4.81 → 4.33 s kcore) because the
-    * blocks skip the storage pool entirely. Override for A/Bs with
-    * SPARK_GRAFT_ROUND_CHECKPOINT_LEVEL (e.g. MEMORY_AND_DISK to
-    * revert).
+    * blocks skip the storage pool entirely.
     */
-  private val roundLevel: org.apache.spark.storage.StorageLevel =
-    sys.env.get("SPARK_GRAFT_ROUND_CHECKPOINT_LEVEL")
-      .map(org.apache.spark.storage.StorageLevel.fromString)
-      .getOrElse(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+  private val roundLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY
 
   /** RDD.doCheckpoint stops at the FIRST checkpoint-marked RDD it meets
     * unless `spark.checkpoint.checkpointAllMarkedAncestors` is set — so a
@@ -87,7 +82,7 @@ private[graft] object CacheLifecycle {
     * persists it (LocalRDDCheckpointData materializes any partition the
     * job missed at job end), so the separate eager-materialization job —
     * one scheduler round-trip per round, ~0.1–0.3 s each at fixture
-    * scale (JobCountProbe r11) and a redundant cached read of the frame
+    * scale (r11 job counts) and a redundant cached read of the frame
     * at any scale — disappears, while lineage truncation and block
     * release work exactly as in [[roundCheckpoint]].
     *

@@ -912,7 +912,6 @@ object Dedup {
       .filter(col("a") =!= col("b"))
       .transform(CacheLifecycle.roundCheckpoint)
     var checkpointed: DataFrame = edges
-    var oldCnt = -1L
     var round = 0
     var done = false
     while (!done && round < maxRounds) {
@@ -969,23 +968,21 @@ object Dedup {
       // already converts them and keeps the map-side partials).
       val st = next.agg(count(lit(1)).as("n"),
         count_distinct(col("b")).as("nb")).head()
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round=$round edges=$oldCnt -> ${st.getLong(0)}")
       // Hybrid finish (r8): contraction rounds exist to SHRINK the edge
       // set; the moment it fits the same driver guard componentsOf
       // applies to its input, another full round (≈10 AQE stage-jobs of
       // shuffles + fixpoint probes on a scheduler-floor-bound frame) is
-      // strictly worse than one collect + union-find — JobCountProbe
-      // measured graph_components at 34 jobs × ~0.11 s/job with the
-      // probes, all scheduler round-trips, not shuffle work. Contraction
-      // preserves the vertex set (every non-isolated vertex stays a
-      // center or member each round — Kiveris et al. §3), so union-find
-      // over the PARTIALLY contracted edges labels every original vertex
-      // with its component minimum, identical to running the loop to its
-      // star-forest fixpoint (spec-pinned: GraphGovSpec forces cap=0 and
-      // compares). At 100 TB the cap never triggers until the rounds
-      // have done their O(log n) work; cap=0 keeps the pure-distributed
-      // path with the direct star-forest fixpoint test.
+      // strictly worse than one collect + union-find — a job-count
+      // probe (r11) measured graph_components at 34 jobs × ~0.11 s/job
+      // with the probes, all scheduler round-trips, not shuffle work.
+      // Contraction preserves the vertex set (every non-isolated vertex
+      // stays a center or member each round — Kiveris et al. §3), so
+      // union-find over the PARTIALLY contracted edges labels every
+      // original vertex with its component minimum, identical to running
+      // the loop to its star-forest fixpoint (spec-pinned: GraphGovSpec
+      // forces cap=0 and compares). At 100 TB the cap never triggers
+      // until the rounds have done their O(log n) work; cap=0 keeps the
+      // pure-distributed path with the direct star-forest fixpoint test.
       if (driverFinishCap > 0 && st.getLong(0) <= driverFinishCap) {
         val collected = next.collect().map(r => (r.getLong(0), r.getLong(1)))
         if ((checkpointed ne null) && (checkpointed ne next))
@@ -1004,7 +1001,6 @@ object Dedup {
       if (checkpointed != null) CacheLifecycle.release(checkpointed)
       checkpointed = next
       edges = next
-      oldCnt = st.getLong(0)
       round += 1
     }
     // star forest: every edge is (component-min, member); the center

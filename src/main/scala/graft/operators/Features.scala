@@ -279,23 +279,17 @@ object Features {
     //  - per-round corpus token-count jobs: Σ len_r = Σ(len_r − 1) + |D|
     //    and Σ(len_r − 1) is exactly the NEXT round's pair-count total,
     //    already in its aggregate — only the final round pays a sum job.
-    def t[T](tag: String)(body: => T): T = {
-      val t0 = System.nanoTime(); val r = body
-      if (sys.env.contains("GRAFT_BPE_DEBUG"))
-        System.err.println(f"[bpe] $tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     // LAZY checkpoint: the nDocs count right below is the materializing
     // action, so tokenization runs once inside that job instead of
     // paying a separate eager-materialization job first (the r11
     // roundCheckpointLazy pattern; no upstream release is involved here)
-    var docs = t("tokenize+checkpoint")(Tables.documents(s, dir)
+    var docs = Tables.documents(s, dir)
       .select(col("doc_id"),
         graft.functions.TextFunctions.tokens(lower(col("text"))).as("toks"))
       .filter(size(col("toks")) > 0)
-      .localCheckpoint(eager = false))
+      .localCheckpoint(eager = false)
     val before = docs.select(col("doc_id"), size(col("toks")).cast("long").as("n"))
-    val nDocs = t("count")(docs.count())
+    val nDocs = docs.count()
     val rules = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     val pairTotals = scala.collection.mutable.ArrayBuffer.empty[Long]
     var exhausted = false
@@ -304,7 +298,7 @@ object Features {
       // ordinary array expressions, not CodegenFallback higher-order
       // lambdas), beating even the compiled scala UDF by skipping the
       // Tuple2 serializer round-trip per pair
-      val aggRow = t("round-agg")(docs
+      val aggRow = docs
         .select(explode(arrays_zip(
           slice(col("toks"), lit(1), size(col("toks")) - 1),
           slice(col("toks"), lit(2), size(col("toks")) - 1))).as("p"))
@@ -313,7 +307,7 @@ object Features {
         .agg(count(lit(1)).as("c"))
         .agg(min(struct((-col("c")).as("nc"), col("tok"), col("nxt"))).as("m"),
           sum(col("c")).as("s"))
-        .head())
+        .head()
       // a corpus can run out of adjacent pairs before `rounds` (every doc
       // merged to a single token, or empty/degenerate input): the global
       // aggregate still returns its one row, but with null min/sum —
@@ -328,7 +322,7 @@ object Features {
           .select(col("doc_id"), mergeKernel(a, b)(col("toks")).as("toks"))
       }
     }
-    val finalRow = t("final-sum")(docs.agg(sum(size(col("toks")))).head())
+    val finalRow = docs.agg(sum(size(col("toks")))).head()
     val finalTotal = if (finalRow.isNullAt(0)) 0L else finalRow.getLong(0)
     // corpus size after round r = pair total counted BY round r+1 + |D|
     val learned = rules.zipWithIndex.map { case ((a, b, c), i) =>

@@ -135,7 +135,7 @@ object Graph {
     *
     * History (r7 verdict): these operators used to keep the state as a
     * DRIVER map probed by a per-edge Scala UDF below this cap.
-    * RegimeProbe measured that path at parity with the broadcast join
+    * A regime probe measured that path at parity with the broadcast join
     * at the 8g default heap (SCALE.md "Driver-map vs broadcast-join
     * regimes") — and under a cold single-sweep JVM it was 10-13×
     * SLOWER (the G1 large-heap/cold-heap pathology concentrates in
@@ -251,15 +251,10 @@ object Graph {
   /** Lazy-plan variant of [[triangles]] — returns (plan, persisted
     * adjacency) so PlanSpec pins the physical shape before the public
     * operator's checkpoint hides it; callers unpersist the adjacency.
-    *
-    * `codegenCorners = false` keeps the r5–r11 corner-credit emission
-    * (struct rows via a higher-order `transform`, CodegenFallback —
-    * interpreted once per EDGE row) as the executable reference;
-    * TriangleCornersSpec pins both forms equal and TrianglePerf asserts
-    * it before every timing run.
+    * TriangleCornersSpec pins the output equal to an independent
+    * wedge-join formulation (the oracle's algorithm, run in Spark).
     */
-  private[graft] def trianglesPlan(s: SparkSession, dir: String,
-                                   codegenCorners: Boolean = true)
+  private[graft] def trianglesPlan(s: SparkSession, dir: String)
   : (DataFrame, DataFrame) = {
     val pairs = coPairs(s, dir)
     val deg = coDegrees(s, dir)
@@ -290,27 +285,20 @@ object Graph {
       .select(col("lo"), col("hi"),
         array_intersect(col("ln"), col("hn")).as("third"))
     // corner credits: lo and hi each earn size(third), every third node
-    // earns 1. The codegen form repeats lo/hi size(third) times so EVERY
-    // exploded element is one unit credit — count(*) ≡ the reference
-    // form's sum(c), zero-credit edges vanish as empty arrays either way
-    // — and the whole Generate input is built from codegen'd expressions
-    // (concat/array_repeat/size) on single longs, where the reference
-    // built struct rows through an interpreted per-edge-row `transform`.
-    // The price is rows: 3T exploded in total against the reference's
-    // 2E + T (T = edge-triangle incidences), up to ~3x on dense graphs.
-    val corners = (if (codegenCorners)
-      inter.select(explode(concat(
-          array_repeat(col("lo"), size(col("third"))),
-          array_repeat(col("hi"), size(col("third"))),
-          col("third"))).as("node"))
-        .groupBy("node").agg(count(lit(1)).as("tri"))
-    else
-      inter.select(explode(concat(
-          array(struct(col("lo").as("node"), size(col("third")).cast("long").as("c")),
-                struct(col("hi").as("node"), size(col("third")).cast("long").as("c"))),
-          transform(col("third"), x => struct(x.as("node"), lit(1L).as("c"))))).as("e"))
-        .filter(col("e.c") > 0)
-        .groupBy(col("e.node").as("node")).agg(sum(col("e.c")).as("tri")))
+    // earns 1. lo/hi repeat size(third) times so EVERY exploded element
+    // is one unit credit counted by count(*), zero-credit edges vanish as
+    // empty arrays, and the whole Generate input is built from codegen'd
+    // expressions (concat/array_repeat/size) on single longs — the
+    // r5–r11 form built (node, credit) struct rows through an interpreted
+    // per-edge-row `transform`. The price is rows: 3T exploded in total
+    // against that form's 2E + T (T = edge-triangle incidences), up to
+    // ~3x on dense graphs.
+    val corners = inter
+      .select(explode(concat(
+        array_repeat(col("lo"), size(col("third"))),
+        array_repeat(col("hi"), size(col("third"))),
+        col("third"))).as("node"))
+      .groupBy("node").agg(count(lit(1)).as("tri"))
     val out = deg.join(broadcast(corners), Seq("node"), "left")
       .select(col("node").as("part"),
         coalesce(col("tri"), lit(0L)).as("triangles"), col("deg"))
@@ -342,36 +330,17 @@ object Graph {
     */
   def commonNeighbors(s: SparkSession, dir: String, k: Int = 5,
                       candidateMod: Int = 4): DataFrame =
-    // byCenter is consumed exactly once in this form — nothing shared to
+    // the wedge centers are consumed exactly once — nothing shared to
     // persist; materialize only the output-sized result
     CacheLifecycle.materialize(
-      commonNeighborsPlan(s, dir, k, candidateMod, groupedSuffix = true))
+      rankLinks(s, dir, suffixWedges(wedgeCenters(s, dir, candidateMod)), k))
 
-  /** Lazy-plan body of [[commonNeighbors]] with both wedge-exchange
-    * formulations in-tree (WedgePerf A/Bs them; WedgeSuffixSpec pins
-    * value equality):
-    *
-    *  - `groupedSuffix = false` (the r6–r11 form): explode the full
-    *    per-center wedge set BEFORE the exchange — the shuffle carries
-    *    one (w, a, c) row PER WEDGE (92M rows at sf1, and every
-    *    fixed-width UnsafeRow field pays an 8-byte slot, so the "narrow"
-    *    wedge row is 32 B on the wire ≈ 2.9 GB shuffled).
-    *  - `groupedSuffix = true` (r12 — guide §2.3 "shuffle fewer bytes"
-    *    via §8 "pack the payload"): exchange one (w, a, cs) row per
-    *    (center, endpoint) where cs = the suffix of the center's sorted
-    *    array after a — the SAME wedge multiset packed as array payload
-    *    (8 B per wedge element + one ~48 B row per watchlist edge, ~10×
-    *    fewer rows through the shuffle writer/reader) — and explode
-    *    AFTER the exchange. Generate preserves its child's output
-    *    partitioning, so the one-exchange tail below is untouched; the
-    *    (w, a, c) multiset reaching the aggregate is identical by
-    *    construction (ns is sorted-distinct: suffix pairs ⟺ the old
-    *    in-order a < c pairs).
+  /** Wedge centers of [[commonNeighbors]]: one (w, ns) row per center
+    * with ≥ 2 watchlist neighbors, ns sorted-distinct and w = the
+    * center's Adamic-Adar weight 1/ln deg.
     */
-  private[graft] def commonNeighborsPlan(s: SparkSession, dir: String,
-                                         k: Int, candidateMod: Int,
-                                         groupedSuffix: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  private[graft] def wedgeCenters(s: SparkSession, dir: String,
+                                  candidateMod: Int): DataFrame = {
     val pairs = coPairs(s, dir)
     val deg = coDegrees(s, dir)
     val edges = pairs.union(pairs.select(col("dst").as("src"), col("src").as("dst")))
@@ -387,43 +356,61 @@ object Graph {
     // Per-wedge aa weight 1/ln(deg(b)) is a center constant, joined from
     // the node-sized degree table BEFORE the explode so wedge rows stay
     // narrow (a, c, w).
-    val byCenter = edges.filter(col("dst") % candidateMod === 0)
+    edges.filter(col("dst") % candidateMod === 0)
       .groupBy(col("src").as("b"))
       .agg(sort_array(collect_set(col("dst"))).as("ns"))
       .filter(size(col("ns")) >= 2)
       .join(broadcast(deg), col("b") === col("node"))
       .select((lit(1.0) / log(col("deg"))).as("w"), col("ns"))
-    // ONE exchange serves the whole tail: repartition(a) satisfies the
-    // pair aggregate's clustering (hash(a) ⊆ {a, c}), the degree joins
-    // are broadcasts, and the ranking window partitions by a — so after
-    // this shuffle the aggregate, joins, window sort, and rank filter
-    // all run within partitions. The r6 plan paid a partial-agg hash map
-    // over the full wedge stream (92M rows → 63M keys at sf1, dup factor
-    // 1.46 — the map was pure overhead) plus a second exchange of the
-    // survivors for the window; measured sf1: 24.2 → ~11 s.
-    val wedges =
-      if (groupedSuffix)
-        byCenter
-          .select(col("w"), col("ns"),
-            posexplode(col("ns")).as(Seq("i", "a")))
-          // drop the last position BEFORE projecting the suffix — a
-          // filter on size(cs) would be pushed below the projection and
-          // evaluate the slice twice per row (seen in the first plan cut)
-          .filter(col("i") < size(col("ns")) - 1)
-          // suffix after 0-based position i (slice is 1-based): every
-          // element is > a because ns is sorted-distinct — exactly the
-          // old in-order pairs, grouped per endpoint
-          .select(col("w"), col("a"),
-            slice(col("ns"), col("i") + lit(2),
-              size(col("ns")) - col("i") - lit(1)).as("cs"))
-          .repartition(col("a"))
-          .select(col("w"), col("a"), explode(col("cs")).as("c"))
-      else
-        byCenter
-          .select(col("w"), col("ns"), explode(col("ns")).as("a"))
-          .select(col("w"), col("a"), explode(col("ns")).as("c"))
-          .filter(col("a") < col("c"))
-          .repartition(col("a"))
+  }
+
+  /** The wedge step of [[commonNeighbors]]: every in-order (a, c) pair
+    * of each center's ns with the center's weight w, hash-partitioned on
+    * a. The exchange carries one (w, a, cs) row per (center, endpoint)
+    * where cs = the suffix of the center's sorted array after a — the
+    * wedge multiset packed as array payload (8 B per wedge element + one
+    * ~48 B row per watchlist edge) — and the explode runs AFTER the
+    * exchange. The r6–r11 form exploded every (w, a, c) wedge BEFORE the
+    * exchange: 92M rows at sf1, 32 B each on the wire (every fixed-width
+    * UnsafeRow field pays an 8-byte slot) ≈ 2.9 GB shuffled; r12 packed
+    * it here (guide §2.3 "shuffle fewer bytes" via §8 "pack the
+    * payload"). Generate preserves its child's
+    * output partitioning, so [[rankLinks]]' one-exchange tail is
+    * untouched. WedgeSuffixSpec pins this step equal to the per-wedge
+    * form.
+    */
+  private[graft] def suffixWedges(byCenter: DataFrame): DataFrame =
+    byCenter
+      .select(col("w"), col("ns"), posexplode(col("ns")).as(Seq("i", "a")))
+      // drop the last position BEFORE projecting the suffix — a filter on
+      // size(cs) would be pushed below the projection and evaluate the
+      // slice twice per row (seen in the first plan cut)
+      .filter(col("i") < size(col("ns")) - 1)
+      // suffix after 0-based position i (slice is 1-based): every element
+      // is > a because ns is sorted-distinct — exactly the in-order
+      // pairs, grouped per endpoint
+      .select(col("w"), col("a"),
+        slice(col("ns"), col("i") + lit(2),
+          size(col("ns")) - col("i") - lit(1)).as("cs"))
+      .repartition(col("a"))
+      .select(col("w"), col("a"), explode(col("cs")).as("c"))
+
+  /** Scores and ranks the (w, a, c) wedges of [[commonNeighbors]]: the
+    * top-k links per part_a by Jaccard, then cn, then part_b.
+    */
+  private[graft] def rankLinks(s: SparkSession, dir: String,
+                               wedges: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val deg = coDegrees(s, dir)
+    // ONE exchange serves the whole tail: the wedges' repartition(a)
+    // satisfies the pair aggregate's clustering (hash(a) ⊆ {a, c}), the
+    // degree joins are broadcasts, and the ranking window partitions by
+    // a — so after that shuffle the aggregate, joins, window sort, and
+    // rank filter all run within partitions. The r6 plan paid a
+    // partial-agg hash map over the full wedge stream (92M rows → 63M
+    // keys at sf1, dup factor 1.46 — the map was pure overhead) plus a
+    // second exchange of the survivors for the window; measured sf1:
+    // 24.2 → ~11 s.
     val cn = wedges
       .groupBy(col("a"), col("c"))
       .agg(count(lit(1)).as("cn"), round(sum(col("w")), 6).as("aa"))
@@ -598,8 +585,8 @@ object Graph {
       // filter, the all-survived fast path, and the count action all
       // read it without re-aggregating the edge set. LAZY: the cnts
       // aggregate below is the materializing action, so each round pays
-      // one job for (deg build + loop tests) instead of two (r11,
-      // JobCountProbe: 21 jobs → fewer, one eager-materialize job per
+      // one job for (deg build + loop tests) instead of two (r11 job
+      // count: 21 jobs → fewer, one eager-materialize job per
       // peel round gone; deg's plan reads only the previous round's
       // already-materialized edge checkpoint, so the release ordering
       // contract of roundCheckpointLazy holds). The previous round's

@@ -226,7 +226,7 @@ object Multimodal {
     * (explode one row per byte offset → gram hash expression → the
     * graft_simhash aggregate), kept as the executable reference for an
     * arbitrary `gramHash` and pinned bit-equal to the kernel below by
-    * OperatorSpec (and PhashPerf asserts both arms before timing). The bench entries run [[phashSignaturesKernel]].
+    * OperatorSpec. The bench entries run [[phashSignaturesKernel]].
     */
   private[graft] def phashSignatures(
       payload: DataFrame,

@@ -98,18 +98,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // config-driven sessions can plan AsOfJoinPlan without any driver
     // code (the programmatic mirror is AsOfJoin.register)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    // plan-rewrite tier: window top-k → bounded aggregate (programmatic
-    // mirror: TopKRewrite.register). injectOptimizerRule lands in the
-    // operator-optimization fixed-point batch, so later passes re-prune
-    // the rewritten subtree. OPT-IN (SPARK_GRAFT_TOPK_REWRITE=1): the
-    // r11 three-decade A/B (SCALE.md) measured the stock
-    // WindowGroupLimit + codegen sort AHEAD of the object-aggregate path
-    // at every local scale (sf0.1 0.49 vs 0.68 s, sf1 tie, sf10 10.1 vs
-    // 12.2 s on q68) — the rewrite's win condition is sorts that SPILL,
-    // which fixture-scale partitions never do. The rewritten path stays
-    // oracle-gated through q68_window_topk_native and spec-pinned equal
+    // The window top-k → bounded aggregate rewrite is deliberately NOT
+    // injected here: the r11 three-decade A/B (SCALE.md) measured the
+    // stock WindowGroupLimit + codegen sort AHEAD of the object-aggregate
+    // path at every local scale (sf0.1 0.49 vs 0.68 s, sf1 tie, sf10
+    // 10.1 vs 12.2 s on q68) — the rewrite's win condition is sorts that
+    // SPILL, which fixture-scale partitions never do. A session opts in
+    // with TopKRewrite.register; the rewritten path stays oracle-gated
+    // through q68_window_topk_native and spec-pinned equal
     // (TopKRewriteSpec).
-    if (sys.env.get("SPARK_GRAFT_TOPK_REWRITE").contains("1"))
-      ext.injectOptimizerRule(_ => TopKRewrite)
   }
 }

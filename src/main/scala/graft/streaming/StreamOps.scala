@@ -134,10 +134,10 @@ object StreamOps {
     // stateful parallelism is a data-size tradeoff: each micro-batch pays a
     // per-partition state-store open/commit, so small fixtures want few
     // stores, while the per-batch sort/merge inside the stateful operator
-    // wants many tasks once rows reach the millions. GRAFT_STREAM_PARTITIONS
-    // is the measured-tuning override (see SCALE.md).
+    // wants many tasks once rows reach the millions; the `partitions`
+    // default is the measured fixture value (see SCALE.md).
     //
-    // Default 4 → 2 (r12): the StreamProgressListener probe put the
+    // Default 4 → 2 (r12): a stream-progress listener probe put the
     // per-heartbeat-batch floor in state-store commits (200–500 ms summed
     // commitMs for 2-row state across 4 partitions × stateful ops);
     // interleaved 3-run family A/B at sf0.1: per-query minima total
@@ -146,8 +146,7 @@ object StreamOps {
     // heavy stateful entries 2–4× (sessionize 3.7 → 12.5 s) — the
     // fixture sweet spot is 2. On a cluster this knob tracks expected
     // state volume, exactly as before.
-    val p = sys.env.get("GRAFT_STREAM_PARTITIONS").map(_.toInt).getOrElse(partitions)
-    ss.conf.set("spark.sql.shuffle.partitions", p.toString)
+    ss.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     // events.parquet stores TIMESTAMP(NANOS) — see Tables.events
     ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // newSession starts from SparkConf defaults, not the parent's runtime
@@ -1117,12 +1116,7 @@ object StreamOps {
       .queryName(name)
       .start()
     try q.processAllAvailable()
-    finally {
-      if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-        q.recentProgress.foreach(p => println(
-          s"[graft-stream] batch=${p.batchId} rows=${p.numInputRows} durs=${p.durationMs}"))
-      q.stop()
-    }
+    finally q.stop()
     // the memory sink holds the drained rows in the child session's
     // catalog, independent of the staged files; it skips two driver-side
     // copies of an output that is SESSION-cardinality (≈ event count on

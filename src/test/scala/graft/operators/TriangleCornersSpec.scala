@@ -2,30 +2,26 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins graph_triangles' two corner-credit emissions equal on the fixture
-  * corpus (r12): the all-codegen unit-credit form (explode
-  * concat(array_repeat(lo, |third|), array_repeat(hi, |third|), third),
-  * count(*)) must produce exactly the struct-row reference form's output
-  * (per-edge interpreted `transform`, sum of credits). lo/hi repeated
-  * |third| times at credit 1 ≡ lo/hi once at credit |third|; zero-credit
-  * edges vanish as empty arrays in one form and under the c > 0 filter in
-  * the other — this spec guards the construction.
+/** Pins graph_triangles' all-codegen unit-credit corner emission
+  * (explode concat(array_repeat(lo, |third|), array_repeat(hi, |third|),
+  * third), count(*)) against an independent formulation on the fixture
+  * corpus: [[TriangleReference]]'s wedge-join, the oracle's algorithm
+  * with its own edge and degree build. Same (part, triangles, deg) rows
+  * as a multiset — a miscounted credit, a dropped zero-triangle node or
+  * a wrong degree all show.
   */
 class TriangleCornersSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  test("codegen unit-credit corners == struct-row reference on fixtures") {
-    val (refOut, refAdj) = Graph.trianglesPlan(spark, sf, codegenCorners = false)
-    val (cgOut, cgAdj) = Graph.trianglesPlan(spark, sf, codegenCorners = true)
+  test("codegen unit-credit corners == wedge-join reference on fixtures") {
+    val ref = TriangleReference.wedgeJoin(spark, sf)
+    val (out, adj) = Graph.trianglesPlan(spark, sf)
     try {
-      val extra = cgOut.exceptAll(refOut).count()
-      val missing = refOut.exceptAll(cgOut).count()
+      val extra = out.exceptAll(ref).count()
+      val missing = ref.exceptAll(out).count()
       assert(extra == 0 && missing == 0,
-        s"corner forms diverged: extra=$extra missing=$missing")
-      assert(refOut.count() === cgOut.count())
-    } finally {
-      refAdj.unpersist(false)
-      cgAdj.unpersist(false)
-    }
+        s"triangle counts diverged: extra=$extra missing=$missing")
+      assert(ref.count() === out.count())
+    } finally adj.unpersist(false)
   }
 }

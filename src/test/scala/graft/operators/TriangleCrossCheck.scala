@@ -3,14 +3,12 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-
 /** Algorithm cross-validation at scales where the DuckDB wedge-join
   * oracle is intractable (at sf1 it spilled 70 GB): compute per-node
   * triangle counts with TWO independent formulations — the
-  * wedge-materializing double join (the oracle's algorithm, run here in
-  * Spark) and the production array_intersect pipeline — and compare
-  * row-for-row. Test-scoped dev main:
+  * wedge-materializing double join ([[TriangleReference]], the oracle's
+  * algorithm run in Spark) and the production array_intersect pipeline
+  * — and compare row-for-row. Test-scoped dev main:
   * `sbt "Test/runMain graft.operators.TriangleCrossCheck <sfDir>"`.
   */
 object TriangleCrossCheck {
@@ -25,36 +23,7 @@ object TriangleCrossCheck {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // independent edge/degree build (not the family cache), then the
-    // ORACLE's algorithm: orient, enumerate wedges, close with a join
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .distinct()
-    val pairs = li.as("a").join(li.as("b"), Seq("l_orderkey"))
-      .filter(col("a.l_partkey") < col("b.l_partkey"))
-      .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-      .distinct().persist()
-    val deg = pairs.select(col("src").as("node"))
-      .union(pairs.select(col("dst").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg")).persist()
-    val oriented = pairs
-      .join(broadcast(deg.select(col("node").as("src"), col("deg").as("ds"))), Seq("src"))
-      .join(broadcast(deg.select(col("node").as("dst"), col("deg").as("dd"))), Seq("dst"))
-      .select(
-        when(col("ds") <= col("dd"), col("src")).otherwise(col("dst")).as("lo"),
-        when(col("ds") <= col("dd"), col("dst")).otherwise(col("src")).as("hi"))
-      .persist()
-    val wedgeCorners = oriented.as("e1")
-      .join(oriented.as("e2"), col("e1.hi") === col("e2.lo"))
-      .select(col("e1.lo").as("a"), col("e1.hi").as("b"), col("e2.hi").as("c"))
-      .join(oriented.as("e3"), col("a") === col("e3.lo") && col("c") === col("e3.hi"))
-      .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("tri"))
-    val wedgeResult = deg.join(wedgeCorners, Seq("node"), "left")
-      .select(col("node").as("part"),
-        coalesce(col("tri"), lit(0L)).as("triangles"), col("deg"))
-
+    val wedgeResult = TriangleReference.wedgeJoin(spark, dir)
     val production = Graph.triangles(spark, dir)
     val mismatches = production.as("p")
       .join(wedgeResult.as("w"), Seq("part"), "full_outer")
