@@ -122,10 +122,13 @@ object Bench {
     }
 
     // Streaming warm-up (same contract as above: engine init, not data):
-    // the first streaming query otherwise absorbs micro-batch machinery,
-    // state-store and streaming-codegen init — measured at ~4-5 s on a
-    // 5-row table — which mis-attributes engine cold-start to whichever
-    // stream_* query sorts first.
+    // the first streaming query otherwise absorbs micro-batch machinery
+    // and state-store init — measured at ~4-5 s on a 5-row table — which
+    // mis-attributes engine cold-start to whichever stream_* query sorts
+    // first. It warms the code generator, not the queries' own classes
+    // (its plan is not theirs); compiled classes carry from one streaming
+    // session to the next only because GraftSession turns per-session
+    // artifact isolation off.
     if (selected.keys.exists(_.startsWith("stream_"))) {
       val ss = spark.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")

@@ -71,46 +71,78 @@ object GraftSession {
     SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
-      // The engine's own extension class — native functions and the
-      // as-of strategy — enabled the way a cluster deployment would
-      // enable it. Individual operators keep their idempotent
-      // programmatic register() calls so they also work on sessions graft
-      // didn't build; this makes the whole surface deterministic per
-      // session rather than dependent on which operator ran first. The
-      // window-top-k rewrite is not part of it (see GraftExtensions).
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // spark.driver.maxResultSize stays at the 1g DEFAULT: it is the
-      // guard that catches a runaway driver collect before it buffers
-      // gigabytes. The one workload that used to cross it at sf10 — the
-      // sessionization verification's complete-mode memory sink — now
-      // drains through a parquet FILE sink (Sessionize.streaming), so no
-      // result bytes route through the driver. Dev override, if ever
-      // needed: SPARK_GRAFT_EXTRA_CONF="spark.driver.maxResultSize=8g".
-      //
-      // ObjectHashAggregate (collect_set/collect_list/typed aggregates)
-      // falls back to SORT-based aggregation after 128 distinct keys per
-      // partition by default — pathological for the grouped-array builds
-      // (co-purchase pair-gen, adjacency lists, minhash signatures) whose
-      // per-key state is small but key counts are corpus-sized. Raise the
-      // threshold so the hash path holds where the map FITS — but the
-      // threshold bounds PER-TASK MEMORY (keys × object state × concurrent
-      // tasks), so it must NOT track the corpus: the r9 value of 10M let a
-      // pre-shuffle partial aggregate hold 10M ArrayBuffer entries in
-      // every one of 32 concurrent tasks at sf10 (~48 GB of live objects
-      // — the OOM the decade blamed on "needs a 96g heap"). 500k × ~150 B
-      // × 32 tasks ≈ 2.4 GB worst case at the 8g default; beyond it the
-      // sort-based fallback spills gracefully, which is the correct
-      // behavior past memory, and post-shuffle aggregates (key counts ∝
-      // 1/partitions) never reach it at any measured scale.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "500000")
+      .config(engineConf)
       // dev knob: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overlays arbitrary conf
       // for config experiments without editing builders
       .config(extraConf)
+
+  /** The engine conf every graft session gets, as one pure map so
+    * GraftSessionSpec pins it without building a session.
+    *
+    * spark.driver.maxResultSize stays at the 1g DEFAULT: it is the guard
+    * that catches a runaway driver collect before it buffers gigabytes.
+    * The one workload that used to cross it at sf10 — the sessionization
+    * verification's complete-mode memory sink — now drains through a
+    * parquet FILE sink (Sessionize.streaming), so no result bytes route
+    * through the driver. Dev override, if ever needed:
+    * SPARK_GRAFT_EXTRA_CONF="spark.driver.maxResultSize=8g".
+    */
+  private[graft] val engineConf: Map[String, String] = Map(
+    // The engine's own extension class — native functions and the as-of
+    // strategy — enabled the way a cluster deployment would enable it.
+    // Individual operators keep their idempotent programmatic register()
+    // calls so they also work on sessions graft didn't build; this makes
+    // the whole surface deterministic per session rather than dependent
+    // on which operator ran first. The window-top-k rewrite is not part
+    // of it (see GraftExtensions).
+    "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    // ObjectHashAggregate (collect_set/collect_list/typed aggregates)
+    // falls back to SORT-based aggregation after 128 distinct keys per
+    // partition by default — pathological for the grouped-array builds
+    // (co-purchase pair-gen, adjacency lists, minhash signatures) whose
+    // per-key state is small but key counts are corpus-sized. Raise the
+    // threshold so the hash path holds where the map FITS — but the
+    // threshold bounds PER-TASK MEMORY (keys × object state × concurrent
+    // tasks), so it must NOT track the corpus: the r9 value of 10M let a
+    // pre-shuffle partial aggregate hold 10M ArrayBuffer entries in
+    // every one of 32 concurrent tasks at sf10 (~48 GB of live objects
+    // — the OOM the decade blamed on "needs a 96g heap"). 500k × ~150 B
+    // × 32 tasks ≈ 2.4 GB worst case at the 8g default; beyond it the
+    // sort-based fallback spills gracefully, which is the correct
+    // behavior past memory, and post-shuffle aggregates (key counts ∝
+    // 1/partitions) never reach it at any measured scale.
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "500000",
+    // `file:` without subprocesses (graft.fs): without libhadoop, Hadoop's
+    // local filesystem forks chmod on every create and mkdir and readlink
+    // on every FileContext rename — ~110 forks per streaming query from
+    // its checkpoint and state-store files, ~30 per lake commit.
+    "spark.hadoop.fs.file.impl" -> "graft.fs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.fs.NioLocalFs",
+    // Codegen is cached by (context classloader, source). Every streaming
+    // query runs in a cloneSession(), and with per-session artifact
+    // isolation each clone gets its own classloader, so identical
+    // micro-batch code recompiled for every query. The engine adds no
+    // session artifacts (no addArtifact/addJar), so isolation buys
+    // nothing. Read at session creation; newSession() and cloneSession()
+    // inherit it.
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    // The compiled-class cache is an LRU; over a cyclic working set larger
+    // than itself it never hits. One pass of the streaming benchmark's six
+    // ops compiles 131–136 classes, against the default 100 entries. A
+    // static conf: it takes effect when it is set before the first codegen.
+    "spark.sql.codegen.cache.maxEntries" -> "512",
+    // TorrentBroadcast allocates one full block up front for every
+    // broadcast, task binaries included. The default 4m block is a
+    // humongous G1 allocation on a local heap of 2 MB regions (3 GB
+    // heap), straight into old-gen regions, and peak RSS follows those
+    // between young GCs; 512k stays below half a region. The value
+    // follows the local JVM's region size — a cluster deployment sets its
+    // own.
+    "spark.broadcast.blockSize" -> "512k")
 
   private def extraConf: Map[String, String] =
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq

@@ -137,14 +137,15 @@ object StreamOps {
     // wants many tasks once rows reach the millions; the `partitions`
     // default is the measured fixture value (see SCALE.md).
     //
-    // Default 4 → 2 (r12): a stream-progress listener probe put the
-    // per-heartbeat-batch floor in state-store commits (200–500 ms summed
-    // commitMs for 2-row state across 4 partitions × stateful ops);
-    // interleaved 3-run family A/B at sf0.1: per-query minima total
-    // 61.8 s @4 → 48.9 s @2 (−21%), 11 of 21 entries ≥15% faster, worst
-    // regression +3% (noise). P=1 was ALSO measured and regresses the
-    // heavy stateful entries 2–4× (sessionize 3.7 → 12.5 s) — the
-    // fixture sweet spot is 2. On a cluster this knob tracks expected
+    // Default 2, from the r12 interleaved 3-run family A/B at sf0.1:
+    // per-query minima total 61.8 s @4 → 48.9 s @2 (−21%), 11 of 21
+    // entries ≥15% faster, worst regression +3% (noise). P=1 was ALSO
+    // measured and regresses the heavy stateful entries 2–4× (sessionize
+    // 3.7 → 12.5 s) — the fixture sweet spot is 2. State-store commits
+    // are not the per-batch floor: their commitMs was mostly Hadoop
+    // forking chmod/readlink per checkpoint file, which the engine's
+    // graft.fs filesystem removes (traced streaming pass: 0.48 → 0.03 s
+    // of state commits). On a cluster this knob tracks expected
     // state volume, exactly as before.
     ss.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     // events.parquet stores TIMESTAMP(NANOS) — see Tables.events

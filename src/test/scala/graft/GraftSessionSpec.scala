@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Spec-pin of the r10 partition regime (SCALE.md "partitions ∝ data"):
   * the session policy that closed the decade-2 superlinear set must not
-  * silently revert. Pure-function checks on the conf overlay — no
-  * session is built (building one in a shared-JVM suite would leak conf
+  * silently revert, and neither may the engine conf every graft session
+  * gets. Pure-function checks on the conf maps — no session is built (building one in a shared-JVM suite would leak conf
   * into every other spec via getOrCreate).
   *
   * Fixture sizes come from sparse files (setLength without writing), so
@@ -75,5 +75,22 @@ class GraftSessionSpec extends AnyFunSuite {
   test("a missing data dir falls back to cores (dev convenience, never a crash)") {
     val conf = GraftSession.scaledConf("32", "/nonexistent/graft/dir")
     assert(conf == Map("spark.sql.shuffle.partitions" -> "32"))
+  }
+
+  test("the engine conf is pinned entry by entry") {
+    assert(GraftSession.engineConf == Map(
+      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "500000",
+      // no fork per chmod/readlink on file: paths
+      "spark.hadoop.fs.file.impl" -> classOf[graft.fs.NioLocalFileSystem].getName,
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.fs.NioLocalFs].getName,
+      // one classloader, so one compiled class per plan across query sessions
+      "spark.sql.artifact.isolation.enabled" -> "false",
+      "spark.sql.codegen.cache.maxEntries" -> "512",
+      // broadcast chunks below G1's humongous threshold (half a 2 MB region)
+      "spark.broadcast.blockSize" -> "512k"))
   }
 }
