@@ -3,6 +3,8 @@ package graft.harness
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** The single execution backend. The reference multiplexes pandas / Modin /
   * HDK / Polars behind one API with explicit laziness fencing
   * (/root/reference/timedf/backend.py:14-76); on Spark that collapses to a
@@ -12,16 +14,12 @@ import org.apache.spark.sql.functions._
   */
 object SparkBackend {
 
+  /** The engine's session (`GraftSession.builder`), so the harness
+    * stages run on the conf every graft session gets.
+    */
   def session(numThreads: Int = Runtime.getRuntime.availableProcessors(),
               appName: String = "graft"): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$numThreads]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", numThreads.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder(appName, numThreads.toString).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

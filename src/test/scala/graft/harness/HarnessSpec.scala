@@ -1,5 +1,7 @@
 package graft.harness
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 class HarnessSpec extends AnyFunSuite {
@@ -78,6 +80,34 @@ class HarnessSpec extends AnyFunSuite {
     // reference: int((1 - 16/38.4) * n)
     assert(b.computeSkipRows(16, 1000L) === 583L)
     assert(b.computeSkipRows(64, 1000L) === 0L) // budget exceeds data
+  }
+
+  test("weighted logloss reads each row's probability at its label") {
+    val b = new graft.benchmarks.PlasticcBenchmark
+    // classes 0, 2 and 3 present: a label's column is its value, not its
+    // position among the present classes
+    val probs = Array(
+      Array(0.5, 0.1, 0.2, 0.1, 0.1),
+      Array(0.1, 0.1, 0.5, 0.2, 0.1),
+      Array(0.1, 0.1, 0.1, 0.5, 0.2))
+    assert(math.abs(b.weightedLogLoss(Array(0, 2, 3), probs) - math.log(2)) < 1e-12)
+  }
+
+  test("SparkBackend.session carries every GraftSession.engineConf entry") {
+    // in a fresh JVM: static confs bind at a JVM's first session, and this
+    // suite's JVM may hold one a plain builder made
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++
+      jvm.getInputArguments.asScala.filterNot(_.startsWith("-Xmx")) ++
+      Seq("-Xmx1g", "-cp", jvm.getClassPath, "graft.harness.SessionConfDump")
+    val out = new StringBuilder
+    val exit = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
+      line => out.append(line).append('\n'), _ => ()))
+    assert(exit === 0, out)
+    val seen = out.toString.linesIterator.collect {
+      case l if l.startsWith("conf ") => val Array(k, v) = l.drop(5).split("=", 2); k -> v
+    }.toMap
+    assert(seen === graft.GraftSession.engineConf)
   }
 
   test("dfiles_num caps the number of trips CSV files loaded") {
@@ -227,5 +257,18 @@ class HarnessSpec extends AnyFunSuite {
     mt.start()
     Thread.sleep(30)
     assert(mt.stop() > 0)
+  }
+}
+
+/** Prints `conf key=value` for each engine conf key as the session
+  * `SparkBackend.session` returns sees it; `HarnessSpec` runs it in a
+  * fresh JVM.
+  */
+object SessionConfDump {
+  def main(args: Array[String]): Unit = {
+    val s = SparkBackend.session(2, "session-conf-dump")
+    try graft.GraftSession.engineConf.keys.foreach { k =>
+      println(s"conf $k=${s.conf.getOption(k).getOrElse("<unset>")}")
+    } finally s.stop()
   }
 }

@@ -1,10 +1,13 @@
 #!/usr/bin/env bash
 # Pre-commit gate (VERDICT r6 item 2): a commit that fails this script
-# must not land. Chains Test/compile (main + test sources) with an
-# sf0.001 smoke over one query per operator family (graft.tools.Smoke,
-# exits non-zero on any query failure). Run from the repo root:
+# must not land. Chains Test/compile (main + test sources), an sf0.001
+# smoke over one query per operator family (graft.tools.Smoke, exits
+# non-zero on any query failure) and one sf0.001 run of the plasticc
+# harness benchmark, whose forest trains through the MLlib shim in
+# org.apache.spark.ml (a Spark upgrade that moves those internals fails
+# here). Run from the repo root:
 #
-#   tools/gate.sh            # compile + family-slice smoke (~1 min)
+#   tools/gate.sh            # compile + family-slice smoke + plasticc
 #   GRAFT_SMOKE_ALL=1 tools/gate.sh   # full 200+-query smoke
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -16,4 +19,9 @@ sbt -batch "runMain graft.tools.Smoke /root/testdata/sf0.001" \
   > /tmp/gate_smoke.log 2>&1 || {
   tail -40 /tmp/gate_smoke.log; echo "[gate] SMOKE FAILED"; exit 1; }
 grep "\[smoke\] OK" /tmp/gate_smoke.log
+echo "[gate] plasticc @ sf0.001"
+# the CLI's default data dir is the sf0.001 fixture
+sbt -batch "runMain graft.harness.BenchmarkRun plasticc" \
+  > /tmp/gate_plasticc.log 2>&1 || {
+  tail -40 /tmp/gate_plasticc.log; echo "[gate] PLASTICC FAILED"; exit 1; }
 echo "[gate] PASS"
