@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main (driver contract): times every SparkEntry query on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line
+/** Benchmark main: times `SparkEntry.defaultSweep` (or
+  * the SPARK_GRAFT_QUERIES selection) on SPARK_GRAFT_SF_DIR and prints ONE
+  * JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"failed":[...],"sf":...}.
   *
   * Each query is fenced with a full count() action (plan + execution, no
@@ -17,8 +18,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val selected = SparkEntry.selected("bench", SparkEntry.defaultSweep)
+    val outOfSweep = SparkEntry.entries.filterNot(e => e.inDefaultSweep || selected.contains(e))
+    if (outOfSweep.nonEmpty)
+      System.err.println(s"[bench] not in the default sweep: ${outOfSweep.map(_.name).mkString(",")}")
+    val cpus = GraftSession.cpus
     val spark = GraftSession.builder("graft-bench", cpus, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -57,40 +61,11 @@ object Bench {
         .filter(col("rank") <= 2).collect()
     }
 
-    // optional dev filters: SPARK_GRAFT_QUERIES=q01_group_count,q12_topk
-    // (include list), SPARK_GRAFT_EXCLUDE=a,b (drop list — used for the
-    // sf10 record where dedup_embedding_cosine, documented super-linear,
-    // is measured standalone instead of inside the sweeps)
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).toSet)
-    // q25_range_join_binned is DEMOTED from the default sweep (r9 verdict
-    // item 6): its cost is Θ(matches) by construction — a certified
-    // negative exemplar whose aggregate question the suite answers
-    // linearly via q25_range_join (the prefix form, the default entry).
-    // It stays in the CORRECTNESS gate (Verify runs every queries()
-    // entry) and is re-included here by naming it in SPARK_GRAFT_QUERIES
-    // or SPARK_GRAFT_INCLUDE. Logged, never silent.
-    val reIncluded = sys.env.get("SPARK_GRAFT_INCLUDE")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val demoted = Set("q25_range_join_binned") --
-      reIncluded -- only.getOrElse(Set.empty)
-    val excluded = sys.env.get("SPARK_GRAFT_EXCLUDE")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String]) ++
-      demoted
-    val selected = only.fold(SparkEntry.queries)(f =>
-      SparkEntry.queries.filter { case (k, _) => f(k) })
-      .filter { case (k, _) => !excluded(k) }
-    if (excluded.nonEmpty)
-      System.err.println(s"[bench] excluding ${excluded.mkString(",")}" +
-        (if (demoted.nonEmpty)
-          s" (default-demoted: ${demoted.mkString(",")})" else ""))
-
     // Custom-expression warm-up (same contract as above: engine init, not
     // table data): the vector/aggregate expressions compile and JIT on
     // first use — ~2 s measured — which otherwise lands entirely on
-    // whichever ann_/emb_ query sorts first. One-row literal data only.
-    if (selected.keys.exists(n => n.startsWith("ann_") || n.startsWith("emb_")
-        || n.startsWith("dedup_embedding"))) {
+    // whichever similarity query sorts first. One-row literal data only.
+    if (selected.exists(_.family == Family.Similarity)) {
       import org.apache.spark.sql.functions._
       graft.expressions.DotProduct.register(spark)
       graft.expressions.TopKAgg.register(spark)
@@ -102,7 +77,7 @@ object Bench {
         .agg(call_function("graft_topk", col("d"), col("id"), lit(1)))
         .collect()
       // ARRAY<float> parquet decode + localCheckpoint write machinery:
-      // the vector family's first query otherwise pays the first
+      // the similarity family's first query otherwise pays the first
       // array-column vectorized-reader init and the first checkpoint
       // block write of the JVM (r9 cold-sweep attribution: the ann_*
       // family sat 2.8-3.6x over its matched medians with only the
@@ -124,12 +99,12 @@ object Bench {
     // Streaming warm-up (same contract as above: engine init, not data):
     // the first streaming query otherwise absorbs micro-batch machinery
     // and state-store init — measured at ~4-5 s on a 5-row table — which
-    // mis-attributes engine cold-start to whichever stream_* query sorts
+    // mis-attributes engine cold-start to whichever streaming query sorts
     // first. It warms the code generator, not the queries' own classes
     // (its plan is not theirs); compiled classes carry from one streaming
     // session to the next only because GraftSession turns per-session
     // artifact isolation off.
-    if (selected.keys.exists(_.startsWith("stream_"))) {
+    if (selected.exists(_.family == Family.Streaming)) {
       val ss = spark.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
       val rSchema = ss.read.parquet(s"$sfDir/region.parquet").schema
@@ -148,9 +123,8 @@ object Bench {
     // The driver runs the default single sweep.
     val sweeps = sys.env.get("SPARK_GRAFT_BENCH_SWEEPS").map(_.toInt).getOrElse(1)
     val sweepResults = (1 to sweeps).map { _ =>
-      val r = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-        name -> timeQuery(spark, sfDir, name, fn)
-      }
+      val r = selected.sortBy(_.name).map(e =>
+        e.name -> timeQuery(spark, sfDir, e.name, e.run))
       // drop memoized pairs + family-shared corpus intermediates so the
       // next sweep pays the builds again (and the JVM exits clean)
       graft.operators.Dedup.releasePairs()
@@ -170,12 +144,10 @@ object Bench {
     // destroying the 32-core per-query record because every run wrote the
     // same bench_out.json. The committed bench_out.json stays as the last
     // r11 quiet-host record; Bench no longer writes it (r11 verdict item 1).
-    // SPARK_GRAFT_BENCH_OUT still overrides for scripted A/Bs. Subset /
-    // superset runs (SPARK_GRAFT_QUERIES / extra excludes / re-included
-    // demoted entries) are labelled `_subset` in the filename so a partial
-    // run can never masquerade as a canonical full-suite record.
-    val subset =
-      only.isDefined || (excluded -- demoted).nonEmpty || reIncluded.nonEmpty
+    // SPARK_GRAFT_BENCH_OUT still overrides for scripted A/Bs. A run of
+    // any other selection than the default sweep is labelled `_subset` in
+    // the filename so it can never masquerade as a canonical record.
+    val subset = selected.toSet != SparkEntry.defaultSweep.toSet
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", {
       val ts = java.time.format.DateTimeFormatter
         .ofPattern("yyyyMMdd'T'HHmmss").withZone(java.time.ZoneOffset.UTC)
@@ -257,11 +229,12 @@ object Bench {
     s""""metric":"total","value":${results.map(_._2).sum},"unit":"sec","queries":$qs,"failed":$fs"""
   }
 
-  // env-supplied paths are interpolated into JSON string literals —
-  // escape them so a quote, backslash, or control character (newline,
-  // tab) in SPARK_GRAFT_BENCH_OUT or SPARK_GRAFT_SF_DIR cannot emit an
-  // invalid record
-  private def jstr(raw: String): String =
+  /** JSON string-literal body: env-supplied paths and the oracle SQL are
+    * interpolated into JSON, so a quote, backslash or control character
+    * (newline, tab) in them cannot emit an invalid record. Verify's
+    * oracle_sql.json goes through it too.
+    */
+  private[graft] def jstr(raw: String): String =
     raw.flatMap {
       case '\\' => "\\\\"
       case '"'  => "\\\""

@@ -26,6 +26,12 @@ object GraftSession {
     math.max(coreCount(cpus), (bytes / (5L << 20)).toInt)
   }
 
+  /** SPARK_GRAFT_CPUS, the local[N] thread spec every main builds its
+    * session with; unset, the machine's core count.
+    */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
+
   /** `cpus` comes from SPARK_GRAFT_CPUS, whose contract is the local[N]
     * thread spec — which admits "*". The 2-arg builder passes it through
     * verbatim (local[*] is valid), so the 3-arg builder must not crash on

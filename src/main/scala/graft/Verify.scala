@@ -1,42 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each selected registry entry's result → parquet
+  * (every entry unless SPARK_GRAFT_QUERIES names some), plus
+  * oracle_sql.json, for the DuckDB compare (`tools/check.py`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder("graft-verify", cpus, sfDir).getOrCreate()
+    val selected = SparkEntry.selected("verify", SparkEntry.entries)
+    val spark = GraftSession.builder("graft-verify", GraftSession.cpus, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // optional dev filter, same convention as Bench:
-    // SPARK_GRAFT_QUERIES=ann_ivf_pq,q01_group_count (driver sets none)
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(f) => SparkEntry.queries.filter { case (k, _) => f(k) }
-      case None    => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    selected.foreach { e =>
+      try e.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${e.name}")
+      catch { case ex: Throwable =>
+        System.err.println(s"[verify] ${e.name} failed: ${ex.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String): String = "\"" + Bench.jstr(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

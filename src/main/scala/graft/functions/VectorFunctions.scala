@@ -23,37 +23,14 @@ object VectorFunctions {
       element_at(a, i).cast("double") * element_at(b, i).cast("double")
     }.reduce(_ + _)
 
-  /** Dot with a constant vector (e.g. an LSH hyperplane). */
-  def dotConst(a: Column, w: Seq[Double]): Column =
-    w.zipWithIndex.map { case (wi, i) =>
-      element_at(a, i + 1).cast("double") * lit(wi)
-    }.reduce(_ + _)
-
   /** L2 norm over a fixed dimension. */
   def l2normFixed(a: Column, dim: Int = Dim): Column = sqrt(dotFixed(a, a, dim))
 
-  /** Primitive-array dot kernel for O(n²) pair scoring. In an all-pairs
-    * join Catalyst pushes a threshold filter (and the whole scoring
-    * expression under it) into the nested-loop join condition, where a
-    * 64-term expression tree evaluates per candidate pair — interpreter
-    * overhead dominates. A compiled tight loop over primitive Float arrays
-    * (Spark extracts array<float> to Array[Float] without boxing) keeps the
-    * kernel at memory bandwidth wherever the expression lands in the plan.
-    * Accumulation order is left-to-right in double, bit-identical to the
-    * sequential oracle sum.
+  /** Primitive-array dot kernel: a compiled tight loop over primitive
+    * Float arrays (Spark extracts array<float> to Array[Float] without
+    * boxing). Accumulation order is left-to-right in double, bit-identical
+    * to the sequential oracle sum.
     */
-  val dotKernel: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (a: Array[Float], b: Array[Float]) =>
-      val n = math.min(a.length, b.length)
-      var i = 0
-      var s = 0.0d
-      while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-      s
-    }.asNondeterministic() // deliberately opaque: keeps Catalyst from
-  // duplicating the kernel into join conditions / pushing the threshold
-  // filter beneath the pair-forming join (results are deterministic).
-
-  /** Deterministic variant for single-evaluation projections. */
   val dotKernelDet: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (a: Array[Float], b: Array[Float]) =>
       val n = math.min(a.length, b.length)
@@ -61,20 +38,6 @@ object VectorFunctions {
       var s = 0.0d
       while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
       s
-    }
-
-  /** L2-norm kernel (same accumulation order as the oracle's squared sum).
-    * Note: the unrolled `dotFixed`/`l2normFixed` expressions are correct and
-    * fully codegen'd, but a 64-dim unroll costs seconds of janino compile
-    * per plan — the primitive kernels win everywhere except inside
-    * whole-stage-codegen-critical paths.
-    */
-  val normKernel: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (a: Array[Float]) =>
-      var i = 0
-      var s = 0.0d
-      while (i < a.length) { s += a(i).toDouble * a(i).toDouble; i += 1 }
-      math.sqrt(s)
     }
 
   /** Sorted-long-array intersection-count kernel — the exact-Jaccard

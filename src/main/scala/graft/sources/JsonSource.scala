@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.StructType
   *
   * Schema discipline mirrors CsvSource: production reads pass an explicit
   * schema (inference costs a full extra pass over 100 TB and can drift
-  * per shard); inference stays available for exploration.
+  * per shard).
   */
 object JsonSource {
 
@@ -21,10 +21,6 @@ object JsonSource {
   def read(s: SparkSession, schema: StructType, paths: Seq[String],
            mode: String = "PERMISSIVE"): DataFrame =
     s.read.schema(schema).option("mode", mode).json(paths: _*)
-
-  /** Exploratory read with schema inference (one extra pass — dev only). */
-  def readInferred(s: SparkSession, paths: Seq[String]): DataFrame =
-    s.read.json(paths: _*)
 
   /** JSONL sink: one object per line, split across `partitions` files —
     * the shard layout downstream tokenizer jobs expect. Compression by

@@ -294,8 +294,6 @@ class SegmentReader(file: String, required: StructType)
   private val lines = Files.newBufferedReader(
     Paths.get(file), StandardCharsets.UTF_8)
   private var current: InternalRow = _
-  private val wantId = required.fieldNames.contains("doc_id")
-  private val wantText = required.fieldNames.contains("text")
 
   override def next(): Boolean = {
     val line = lines.readLine()

@@ -65,7 +65,7 @@ object EdgeSweep {
       case other     =>
         sys.error(s"mode must be empty|tiny|uniform|nulls|hotkey|allnull, got $other")
     }
-    val spark = graft.GraftSession.builder(s"graft-edgesweep-$mode", "8")
+    val spark = graft.GraftSession.builder(s"graft-edgesweep-$mode", graft.GraftSession.cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // exit AFTER the session stops — System.exit does not unwind the

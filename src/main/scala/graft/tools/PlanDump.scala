@@ -1,32 +1,29 @@
 package graft.tools
 
-/** Dev probe: writes `.explain("formatted")` for named suite queries to
-  * files — the r11 optimization round's plan-evidence artifact
+/** Dev probe: writes `.explain("formatted")` for suite queries to files —
+  * the r11 optimization round's plan-evidence artifact
   * (`plans/r11/<query>_{before,after}.txt`). The session is built by the
   * same GraftSession builder as Bench, so the dumped plan is the plan the
-  * bench executes (same partition regime, same extensions).
+  * bench executes (same partition regime, same extensions). The queries
+  * are Bench's: the default sweep, or the SPARK_GRAFT_QUERIES selection.
   *
-  * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <query> [query ...]
-  * e.g.   runMain graft.tools.PlanDump /root/testdata/sf0.1 plans/r11 before graph_kcore
+  * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix>
+  * e.g.   SPARK_GRAFT_QUERIES=graph_kcore runMain graft.tools.PlanDump <sf0.1 dir> plans/r11 before
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 4, "usage: PlanDump <sfDir> <outDir> <suffix> <query>...")
-    val dir = args(0)
-    val outDir = java.nio.file.Paths.get(args(1))
-    val suffix = args(2)
-    val names = args.drop(3).toSeq
+    require(args.length == 3, "usage: PlanDump <sfDir> <outDir> <suffix>")
+    val Array(dir, out, suffix) = args
+    val selected = graft.SparkEntry.selected("plandump", graft.SparkEntry.defaultSweep)
+    val outDir = java.nio.file.Paths.get(out)
     java.nio.file.Files.createDirectories(outDir)
-    val spark = graft.GraftSession.builder("graft-plan-dump",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), dir).getOrCreate()
+    val spark = graft.GraftSession.builder("graft-plan-dump", graft.GraftSession.cpus, dir)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { name =>
-      val fn = graft.SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query: $name"))
-      val df = fn(spark, dir)
-      val plan = df.queryExecution.explainString(
+    selected.foreach { e =>
+      val plan = e.run(spark, dir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      val f = outDir.resolve(s"${name}_$suffix.txt")
+      val f = outDir.resolve(s"${e.name}_$suffix.txt")
       java.nio.file.Files.write(f, plan.getBytes("UTF-8"))
       println(s"[plandump] wrote $f (${plan.length} chars)")
     }

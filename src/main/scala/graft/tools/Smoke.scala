@@ -6,14 +6,15 @@ package graft.tools
   * driver's compare can still grade partial output. This main is the
   * "did I just break the suite?" contract for `tools/gate.sh`.
   *
-  * Default slice: one query per operator family (~25 entries, seconds at
-  * sf0.001). `GRAFT_SMOKE_ALL=1` runs the full surface;
+  * Default slice: representatives of every operator family (~25 entries,
+  * seconds at sf0.001). `SPARK_GRAFT_QUERIES=all` runs the full surface;
   * `SPARK_GRAFT_QUERIES=a,b` selects explicitly.
   */
 object Smoke {
-  /** One representative per family — chosen to touch every source file's
-    * hot path (relational, dedup, ANN, text, governance, multimodal,
-    * sketches, streaming, lake, graph, BPE, ML-prep, harness-shaped).
+  /** Representatives of every `graft.Family` (RegistrySpec pins that each
+    * has one), chosen to touch every source file's hot path (relational,
+    * dedup, ANN, text, multimodal, sketches, streaming, lake, graph, BPE,
+    * ML-prep).
     */
   val slice: Seq[String] = Seq(
     "q01_group_count", "q05_multi_agg_skew", "q06_join_agg", "q12_topk",
@@ -27,36 +28,25 @@ object Smoke {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.GraftSession.builder("graft-smoke", cpus).getOrCreate()
+    val selected = graft.SparkEntry.selected("smoke",
+      graft.SparkEntry.entries.filter(e => slice.contains(e.name)))
+    val spark = graft.GraftSession.builder("graft-smoke", graft.GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val names: Seq[String] =
-      sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSeq)
-        .orElse(if (sys.env.get("GRAFT_SMOKE_ALL").contains("1"))
-          Some(graft.SparkEntry.queries.keys.toSeq.sorted) else None)
-        .getOrElse(slice)
-
-    val missing = names.filterNot(graft.SparkEntry.queries.contains)
-    if (missing.nonEmpty) {
-      System.err.println(s"[smoke] unknown queries: ${missing.mkString(",")}")
-      sys.exit(1)
-    }
-
     var failed = 0
-    names.foreach { name =>
+    selected.foreach { e =>
       val t0 = System.nanoTime()
       try {
-        val n = graft.SparkEntry.queries(name)(spark, dir).count()
+        val n = e.run(spark, dir).count()
         val ms = (System.nanoTime() - t0) / 1e6
-        println(f"[smoke] $name%-28s rows=$n%-8d ${ms}%8.0f ms")
-      } catch { case e: Throwable =>
+        println(f"[smoke] ${e.name}%-28s rows=$n%-8d ${ms}%8.0f ms")
+      } catch { case ex: Throwable =>
         failed += 1
-        System.err.println(s"[smoke] FAIL $name: ${e.getMessage}")
+        System.err.println(s"[smoke] FAIL ${e.name}: ${ex.getMessage}")
       }
     }
     spark.stop()
     if (failed > 0) { System.err.println(s"[smoke] $failed FAILED"); sys.exit(1) }
-    println(s"[smoke] OK ${names.size} queries")
+    println(s"[smoke] OK ${selected.size} queries")
   }
 }

@@ -31,9 +31,15 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
-  test("every oracle key has a matching query") {
+  test("every entry name is unique and declares one oracle decision") {
+    val names = SparkEntry.entries.map(_.name)
+    assert(names.distinct.size === names.size, "duplicate entry names")
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle entries without queries: $missing")
+    SparkEntry.entries.foreach(e => e.oracle match {
+      case graft.Oracle.Sql(text) => assert(text.nonEmpty, e.name)
+      case graft.Oracle.RowsOnly(reason) => assert(reason.nonEmpty, e.name)
+    })
   }
 
   test("entry flagship returns rows") {

@@ -8,7 +8,7 @@
 # here). Run from the repo root:
 #
 #   tools/gate.sh            # compile + family-slice smoke + plasticc
-#   GRAFT_SMOKE_ALL=1 tools/gate.sh   # full 200+-query smoke
+#   SPARK_GRAFT_QUERIES=all tools/gate.sh   # full 200+-query smoke
 set -euo pipefail
 cd "$(dirname "$0")/.."
 echo "[gate] sbt Test/compile"
