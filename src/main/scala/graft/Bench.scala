@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main: times `SparkEntry.defaultSweep` (or
+/** Benchmark main: times every `SparkEntry.entries` entry (or
   * the SPARK_GRAFT_QUERIES selection) on SPARK_GRAFT_SF_DIR and prints ONE
   * JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"failed":[...],"sf":...}.
@@ -18,10 +18,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val selected = SparkEntry.selected("bench", SparkEntry.defaultSweep)
-    val outOfSweep = SparkEntry.entries.filterNot(e => e.inDefaultSweep || selected.contains(e))
-    if (outOfSweep.nonEmpty)
-      System.err.println(s"[bench] not in the default sweep: ${outOfSweep.map(_.name).mkString(",")}")
+    val selected = SparkEntry.selected("bench", SparkEntry.entries)
     val cpus = GraftSession.cpus
     val spark = GraftSession.builder("graft-bench", cpus, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -145,9 +142,9 @@ object Bench {
     // same bench_out.json. The committed bench_out.json stays as the last
     // r11 quiet-host record; Bench no longer writes it (r11 verdict item 1).
     // SPARK_GRAFT_BENCH_OUT still overrides for scripted A/Bs. A run of
-    // any other selection than the default sweep is labelled `_subset` in
-    // the filename so it can never masquerade as a canonical record.
-    val subset = selected.toSet != SparkEntry.defaultSweep.toSet
+    // any other selection than every entry is labelled `_subset` in the
+    // filename so it can never masquerade as a canonical record.
+    val subset = selected.toSet != SparkEntry.entries.toSet
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", {
       val ts = java.time.format.DateTimeFormatter
         .ofPattern("yyyyMMdd'T'HHmmss").withZone(java.time.ZoneOffset.UTC)

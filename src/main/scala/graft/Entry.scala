@@ -36,12 +36,12 @@ object Oracle {
   */
 final class Entry(val name: String, val family: Family,
                   val run: (SparkSession, String) => DataFrame,
-                  oracleDecl: => Oracle, val inDefaultSweep: Boolean = true) {
+                  oracleDecl: => Oracle) {
   lazy val oracle: Oracle = oracleDecl
 }
 
 object Entry {
   def apply(name: String, family: Family, run: (SparkSession, String) => DataFrame,
-            oracle: => Oracle, inDefaultSweep: Boolean = true): Entry =
-    new Entry(name, family, run, oracle, inDefaultSweep)
+            oracle: => Oracle): Entry =
+    new Entry(name, family, run, oracle)
 }

@@ -134,11 +134,14 @@ object SparkEntry {
         "OperatorSpec pins them within tolerance of the exact values")),
     // the asof oracle is DuckDB's NATIVE ASOF JOIN — an independent
     // implementation of the same semantics, not a transcription of ours
-    Entry("q24_asof_join", Family.Relational, Relational.q24AsofJoin _, Sql(asofBackwardSql)),
-    // the NATIVE-operator twin (graft.plans.AsOfJoinExec) answers the
-    // identical question — same independent DuckDB ASOF JOIN oracle
-    Entry("q24_asof_join_native", Family.Relational, Relational.q24AsofJoinNative _,
-      Sql(asofBackwardSql)),
+    Entry("q24_asof_join", Family.Relational, Relational.q24AsofJoin _, Sql(
+      """WITH c0 AS (SELECT user_id, ts, max(event_id) AS click_id FROM events
+        |            WHERE event_type = 'click' GROUP BY 1, 2),
+        |c AS (SELECT c0.user_id, c0.ts, c0.click_id, e.value AS click_value
+        |      FROM c0 JOIN events e ON e.event_id = c0.click_id),
+        |err AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'error')
+        |SELECT err.event_id, err.user_id, c.click_id, c.ts AS click_ts, c.click_value
+        |FROM err ASOF LEFT JOIN c ON err.user_id = c.user_id AND err.ts >= c.ts""".stripMargin)),
     // forward direction: the SAME independent ASOF oracle with the
     // inequality flipped (earliest click at-or-after each error)
     Entry("q24_asof_join_forward", Family.Relational, Relational.q24AsofJoinForward _, Sql(
@@ -149,15 +152,12 @@ object SparkEntry {
         |err AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'error')
         |SELECT err.event_id, err.user_id, c.click_id, c.ts AS click_ts, c.click_value
         |FROM err ASOF LEFT JOIN c ON err.user_id = c.user_id AND err.ts <= c.ts""".stripMargin)),
-    // the headline range join runs the linear prefix-sum form; the
-    // match-materializing binned equi-join is its own entry, out of Bench's
-    // default sweep: its cost is Θ(matches) by construction, a negative
-    // exemplar whose aggregate question the prefix form answers linearly.
-    // Verify still checks it; SPARK_GRAFT_QUERIES naming it (or `all`)
-    // benches it.
-    Entry("q25_range_join", Family.Relational, Relational.q25RangeJoinPrefix _, Sql(rangeJoinSql)),
-    Entry("q25_range_join_binned", Family.Relational, Relational.q25RangeJoin(_, _),
-      Sql(rangeJoinSql), inDefaultSweep = false),
+    Entry("q25_range_join", Family.Relational, Relational.q25RangeJoinPrefix _, Sql(
+      """WITH r AS (SELECT s_suppkey, abs(s_acctbal) % 500 - 10 AS lo,
+        |                  abs(s_acctbal) % 500 + 10 AS hi FROM supplier)
+        |SELECT s_suppkey, count(*) AS n_events, round(sum(value), 2) AS sum_v
+        |FROM r JOIN events e ON e.value >= r.lo AND e.value < r.hi
+        |GROUP BY 1""".stripMargin)),
     Entry("q26_dim_join", Family.Relational, Relational.q26DimJoin _, Sql(
       """SELECT r_name, n_name, count(*) AS n_customers,
         |round(sum(c_acctbal), 2) AS sum_acctbal
@@ -1105,12 +1105,17 @@ object SparkEntry {
         |FROM c""".stripMargin)),
     // eval slice = doc_id % 10 = 0; shared-shingle counts over the same
     // distinct 3-gram shingle sets as the near-dup oracles
-    Entry("text_decontaminate", Family.Text, TextOps.decontaminate(_, _), Sql(decontaminateSql)),
-    // the Bloom prefilter has no false negatives and the survivor
-    // semi-join is exact, so the result is definitionally identical to
-    // the broadcast-dictionary plan — same oracle
-    Entry("text_decontaminate_bloom", Family.Text, TextOps.decontaminateBloom(_, _),
-      Sql(decontaminateSql)),
+    Entry("text_decontaminate", Family.Text, TextOps.decontaminate(_, _), Sql(
+      """WITH w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
+        |sh AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS sh
+        |       FROM w, UNNEST(range(1, len(w)-1)) AS t(i) WHERE len(w) >= 3),
+        |ev AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 10 = 0),
+        |hits AS (SELECT s.doc_id, count(*) AS n_shared FROM sh s JOIN ev USING (sh)
+        |         WHERE s.doc_id % 10 <> 0 GROUP BY 1)
+        |SELECT d.doc_id, coalesce(h.n_shared, 0) AS n_shared,
+        |  coalesce(h.n_shared, 0) > 0 AS contaminated
+        |FROM documents d LEFT JOIN hits h USING (doc_id)
+        |WHERE d.doc_id % 10 <> 0""".stripMargin)),
     Entry("text_repetition", Family.Text, TextOps.repetition _, Sql(
       """WITH w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
         |uc AS (SELECT doc_id, g, count(*) AS c
@@ -1827,11 +1832,6 @@ object SparkEntry {
         |SELECT CAST(to_timestamp(floor(epoch(ts) / 21600) * 21600) AS TIMESTAMP) AS win_start,
         |  event_type, count(*) AS cnt, round(sum(value), 2) AS sum_v
         |FROM acc GROUP BY 1, 2""".stripMargin)),
-    // the staged heartbeat advances the watermark past every real
-    // session, so append mode emits the complete batch session set →
-    // the batch islands oracle gates the native streaming twin too
-    Entry("stream_session_native", Family.Streaming, StreamOps.streamSessionWindow(_, _),
-      Sql(sessionizeSql)),
     // dedup→aggregate chained stateful pipeline drains to the exact
     // batch distinct count (heartbeats flush the final windows)
     Entry("stream_distinct_users", Family.Streaming, StreamOps.streamDistinctUsers(_, _), Sql(
@@ -1950,11 +1950,6 @@ object SparkEntry {
       case Sql(text) => Some(e.name -> text)
       case RowsOnly(_) => None
     }).toMap
-
-  /** Bench's default selection: every entry but the ones declared out of
-    * the sweep.
-    */
-  def defaultSweep: Seq[Entry] = entries.filter(_.inDefaultSweep)
 
   /** The entries a main runs. `SPARK_GRAFT_QUERIES` names them — a comma
     * list of entry names, or `all` — and with no value the main runs its
@@ -2089,41 +2084,6 @@ object SparkEntry {
   private def knnGraphOracle: String =
     annLshOracleWith("q.bucket = n.bucket", numPlanes = 8, queryCond = "TRUE")
 
-  /** The backward as-of oracle (DuckDB ASOF JOIN) of q24_asof_join and
-    * its native-operator twin.
-    */
-  private def asofBackwardSql: String =
-    """WITH c0 AS (SELECT user_id, ts, max(event_id) AS click_id FROM events
-      |            WHERE event_type = 'click' GROUP BY 1, 2),
-      |c AS (SELECT c0.user_id, c0.ts, c0.click_id, e.value AS click_value
-      |      FROM c0 JOIN events e ON e.event_id = c0.click_id),
-      |err AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'error')
-      |SELECT err.event_id, err.user_id, c.click_id, c.ts AS click_ts, c.click_value
-      |FROM err ASOF LEFT JOIN c ON err.user_id = c.user_id AND err.ts >= c.ts""".stripMargin
-
-  /** The eval-contamination oracle of text_decontaminate and its Bloom-
-    * prefiltered twin.
-    */
-  private def decontaminateSql: String =
-    """WITH w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
-      |sh AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS sh
-      |       FROM w, UNNEST(range(1, len(w)-1)) AS t(i) WHERE len(w) >= 3),
-      |ev AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 10 = 0),
-      |hits AS (SELECT s.doc_id, count(*) AS n_shared FROM sh s JOIN ev USING (sh)
-      |         WHERE s.doc_id % 10 <> 0 GROUP BY 1)
-      |SELECT d.doc_id, coalesce(h.n_shared, 0) AS n_shared,
-      |  coalesce(h.n_shared, 0) > 0 AS contaminated
-      |FROM documents d LEFT JOIN hits h USING (doc_id)
-      |WHERE d.doc_id % 10 <> 0""".stripMargin
-
-  /** The range-join oracle of q25_range_join and its binned twin. */
-  private def rangeJoinSql: String =
-    """WITH r AS (SELECT s_suppkey, abs(s_acctbal) % 500 - 10 AS lo,
-      |                  abs(s_acctbal) % 500 + 10 AS hi FROM supplier)
-      |SELECT s_suppkey, count(*) AS n_events, round(sum(value), 2) AS sum_v
-      |FROM r JOIN events e ON e.value >= r.lo AND e.value < r.hi
-      |GROUP BY 1""".stripMargin
-
   /** Latest version per key, the oracle of q33_merge_upsert and the two
     * streaming upserts that converge to it.
     */
@@ -2137,8 +2097,7 @@ object SparkEntry {
       |  FROM events) WHERE rn = 1""".stripMargin
 
   /** One oracle for BOTH window-top-k plans (composed q68_window_topk and
-    * the TopKRewrite-driven q68_window_topk_native) — same contract as
-    * the q24 as-of pair.
+    * the TopKRewrite-driven q68_window_topk_native).
     */
   private val windowTopKSql: String =
     """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
@@ -2529,8 +2488,8 @@ object SparkEntry {
     * of two integer columns: bit i of x at position 2i, bit i of y at 2i+1.
     */
   /** Gap-based sessionization as SQL islands — gates both the batch
-    * `session_window` (q17) and its append-mode streaming twin
-    * (stream_session_native): same gap, same (ts, event_id) tie order.
+    * `session_window` (q17) and its streaming twin (stream_sessionize):
+    * same gap, same (ts, event_id) tie order.
     */
   private val sessionizeSql: String =
     """WITH o AS (SELECT user_id, ts, value,

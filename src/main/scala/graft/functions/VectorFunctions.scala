@@ -1,30 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Fixed-dimension vector math as flat codegen'd expressions.
+/** Vector math kernels over primitive arrays.
   *
   * Spark's array higher-order functions (`zip_with`/`aggregate`) are
   * CodegenFallback — interpreted per row — which makes them the bottleneck
-  * in O(n²) similarity kernels. For a known embedding dimension, unrolling
-  * the dot product into a flat `element_at` multiply-add chain keeps the
-  * whole kernel inside whole-stage codegen: left-to-right evaluation order
-  * also matches a sequential oracle sum bit-for-bit (IEEE doubles).
+  * in O(n²) similarity kernels. These kernels are compiled tight loops
+  * instead; left-to-right accumulation also matches a sequential oracle
+  * sum bit-for-bit (IEEE doubles).
   */
 object VectorFunctions {
 
   /** Embedding dimension of the fixtures (FIXTURES.md §B). */
   val Dim = 64
-
-  /** dot(a, b) unrolled over a fixed dimension; elements cast to double. */
-  def dotFixed(a: Column, b: Column, dim: Int = Dim): Column =
-    (1 to dim).map { i =>
-      element_at(a, i).cast("double") * element_at(b, i).cast("double")
-    }.reduce(_ + _)
-
-  /** L2 norm over a fixed dimension. */
-  def l2normFixed(a: Column, dim: Int = Dim): Column = sqrt(dotFixed(a, a, dim))
 
   /** Primitive-array dot kernel: a compiled tight loop over primitive
     * Float arrays (Spark extracts array<float> to Array[Float] without

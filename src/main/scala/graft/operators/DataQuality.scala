@@ -142,14 +142,13 @@ object DataQuality {
     * the hint (a left_anti ignores right-side duplicates, so the
     * distinct was a full extra shuffle purely to shrink the broadcast).
     *
-    * A Bloom pre-filter (`expressions.BloomProbe`) was evaluated for
-    * these passes and rejected — SCALE.md r10 records the argument: a
-    * Bloom over parent keys splits probe keys into definite-orphans and
-    * maybes, but false positives land ORPHANS in the maybe set, so exact
-    * counts still need the full maybe-side join, and in a referential
-    * audit the probe side mostly HITS (nearly every child key has a
-    * parent — the opposite of decontaminate_bloom, where the probe
-    * mostly misses and the filter pays for itself).
+    * A Bloom pre-filter was evaluated for these passes and rejected —
+    * SCALE.md r10 records the argument: a Bloom over parent keys splits
+    * probe keys into definite-orphans and maybes, but false positives
+    * land ORPHANS in the maybe set, so exact counts still need the full
+    * maybe-side join, and in a referential audit the probe side mostly
+    * HITS (nearly every child key has a parent), so the filter cannot
+    * pay for itself.
     */
   def referential(s: SparkSession, dir: String): DataFrame = {
     def edge(name: String, fact: DataFrame, fk: String,

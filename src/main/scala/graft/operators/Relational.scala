@@ -183,8 +183,7 @@ object Relational {
   }
 
   /** The [[graft.plans.TopKRewrite]] plan of the same query, kept
-    * oracle-gated next to the composed form exactly like
-    * `q24_asof_join_native` vs `q24_asof_join`: the rule runs on a
+    * oracle-gated next to the composed form: the rule runs on a
     * DERIVED session (`newSession` — same context, fixture caches, and
     * data; fresh experimental methods) so registration never leaks into
     * the shared suite session and query order stays irrelevant. The
@@ -304,188 +303,84 @@ object Relational {
 
   /** As-of join (beyond the reference; pandas merge_asof / kdb aj
     * territory): attribute each `error` event to the user's most recent
-    * click at-or-before it. Spark has no asof operator; the scalable form
-    * is NOT a join at all but a tagged union + one window pass:
-    * click and error rows interleave in (ts, kind) order per user, and
-    * `last(_, ignoreNulls)` carries the latest click forward — ONE shuffle
-    * on user_id, no row amplification, no inequality join. (The join-based
-    * phrasing — join all pairs, argmax per error — would shuffle twice and
-    * amplify by clicks×errors per user.) Clicks are deduplicated per
-    * (user, ts) by max event_id so the at-same-instant tie is
-    * deterministic on both engines.
+    * click at-or-before it. Clicks are deduplicated per (user, ts) by max
+    * event_id so the at-same-instant tie is deterministic on both
+    * engines. The oracle is DuckDB's native ASOF JOIN.
     */
-  def q24AsofJoin(s: SparkSession, dir: String): DataFrame = {
+  def q24AsofJoin(s: SparkSession, dir: String): DataFrame =
+    errorsAsOfClicks(s, dir, forward = false)
+
+  /** FORWARD as-of: attribute each error to the user's NEXT click
+    * at-or-after it (the "what did the user do about it" direction —
+    * merge_asof direction='forward'). Oracle is DuckDB's native ASOF with
+    * the inequality flipped.
+    */
+  def q24AsofJoinForward(s: SparkSession, dir: String): DataFrame =
+    errorsAsOfClicks(s, dir, forward = true)
+
+  private def errorsAsOfClicks(s: SparkSession, dir: String, forward: Boolean): DataFrame = {
     val e = Tables.events(s, dir)
     val clicks = e.filter(col("event_type") === "click")
       .groupBy("user_id", "ts")
       .agg(max(struct(col("event_id"), col("value"))).as("m"))
-      .select(col("user_id"), col("ts"),
-        col("m.event_id").as("c_id"), col("m.value").as("c_val"))
+      .select(col("user_id"), col("ts"), col("m.event_id").as("click_id"),
+        col("ts").as("click_ts"), col("m.value").as("click_value"))
     val errors = e.filter(col("event_type") === "error")
       .select(col("user_id"), col("ts"), col("event_id"))
-    val tagged = clicks
-      .select(col("user_id"), col("ts"), lit(0).as("kind"),
-        lit(null).cast("long").as("event_id"),
-        col("c_id"), col("ts").as("c_ts"), col("c_val"))
-      .unionByName(errors
-        .select(col("user_id"), col("ts"), lit(1).as("kind"),
-          col("event_id"),
-          lit(null).cast("long").as("c_id"),
-          lit(null).cast("timestamp").as("c_ts"),
-          lit(null).cast("double").as("c_val")))
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("kind"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tagged
-      .withColumn("click_id", last(col("c_id"), ignoreNulls = true).over(w))
-      .withColumn("click_ts", last(col("c_ts"), ignoreNulls = true).over(w))
-      .withColumn("click_value", last(col("c_val"), ignoreNulls = true).over(w))
-      .filter(col("kind") === 1)
+    asOfOf(errors, clicks, forward)
       .select("event_id", "user_id", "click_id", "click_ts", "click_value")
   }
 
-  /** [[q24AsofJoin]] through the NATIVE as-of operator
-    * (`graft.plans.AsOfJoinExec` — custom LogicalPlan + Strategy +
-    * physical merge, the whole-operator extension tier): same clicks
-    * dedup, same output, same oracle; the plan replaces the tagged
-    * union + carry-forward window with one streaming merge per
-    * key-clustered sorted partition. Spec-pinned row-identical to the
-    * composed form ON NULL-FREE TIMESTAMPS (the fixture's domain): a
-    * null-ts click would ride the window's nulls-first ordering into
-    * every later error under the composed form, while the native
-    * operator follows SQL comparison semantics and never matches it —
-    * the native behavior is the correct one, and the oracle
-    * value-checks both on the null-free fixture.
+  /** As-of join of `left` onto `right`, both carrying `user_id` and `ts`:
+    * each left row gets the right row of its user with the latest `ts`
+    * at-or-before its own (`forward`: the earliest at-or-after), whose
+    * other columns are appended — null when none matches (left outer).
+    *
+    * Spark has no as-of operator, and the scalable form is NOT a join at
+    * all but a tagged union + one window pass: both sides interleave per
+    * user in time order (descending when `forward`, so one running frame
+    * serves both directions), a right row ahead of a left row at the same
+    * instant, and `last(_, ignoreNulls)` carries the latest right row — as
+    * one struct, so every appended column comes from the same row — onto
+    * each left row. ONE shuffle on user_id, no row amplification, no
+    * inequality join. (The join-based phrasing — join all pairs, argmax
+    * per left row — would shuffle twice and amplify by lefts×rights per
+    * user.)
+    *
+    * Nulls follow SQL's ASOF JOIN: a right row with a null `user_id` or
+    * `ts` is never a candidate, so a left row with a null `user_id` finds
+    * none in its partition; a left row with a null `ts` sorts ahead of
+    * every right row and so matches nothing. Right rows tied on
+    * (user_id, ts) resolve arbitrarily — deduplicate them first.
     */
-  def q24AsofJoinNative(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir)
-    val clicks = e.filter(col("event_type") === "click")
-      .groupBy("user_id", "ts")
-      .agg(max(struct(col("event_id"), col("value"))).as("m"))
-      .select(col("user_id").as("r_uid"), col("ts").as("click_ts"),
-        col("m.event_id").as("click_id"), col("m.value").as("click_value"))
-    val errors = e.filter(col("event_type") === "error")
-      .select(col("user_id"), col("ts"), col("event_id"))
-    graft.plans.AsOfJoin.joinAsOf(errors, clicks,
-        keys = Seq("user_id" -> "r_uid"),
-        leftTsCol = "ts", rightTsCol = "click_ts")
-      .select(col("event_id"), col("user_id"), col("click_id"),
-        col("click_ts"), col("click_value"))
+  def asOfOf(left: DataFrame, right: DataFrame, forward: Boolean): DataFrame = {
+    val carried = right.columns.filterNot(Set("user_id", "ts"))
+    val clash = carried.intersect(left.columns)
+    require(clash.isEmpty, s"asOfOf: ${clash.mkString(", ")} on both sides")
+    val candidates = right.filter(col("user_id").isNotNull && col("ts").isNotNull)
+      .select(col("user_id"), col("ts"), lit(0).as("side"),
+        struct(carried.toSeq.map(col): _*).as("match"))
+    val time = if (forward) col("ts").desc_nulls_first else col("ts").asc_nulls_first
+    val w = Window.partitionBy("user_id").orderBy(time, col("side"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    left.withColumn("side", lit(1))
+      .unionByName(candidates, allowMissingColumns = true)
+      .withColumn("match", last(col("match"), ignoreNulls = true).over(w))
+      .filter(col("side") === 1)
+      .select(left.columns.map(col) :+ col("match.*"): _*)
   }
 
-  /** FORWARD as-of through the same native operator: attribute each
-    * error to the user's NEXT click at-or-after it (the "what did the
-    * user do about it" direction — merge_asof direction='forward').
-    * Oracle is DuckDB's native ASOF with the inequality flipped.
-    */
-  def q24AsofJoinForward(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir)
-    val clicks = e.filter(col("event_type") === "click")
-      .groupBy("user_id", "ts")
-      .agg(max(struct(col("event_id"), col("value"))).as("m"))
-      .select(col("user_id").as("r_uid"), col("ts").as("click_ts"),
-        col("m.event_id").as("click_id"), col("m.value").as("click_value"))
-    val errors = e.filter(col("event_type") === "error")
-      .select(col("user_id"), col("ts"), col("event_id"))
-    graft.plans.AsOfJoin.joinAsOf(errors, clicks,
-        keys = Seq("user_id" -> "r_uid"),
-        leftTsCol = "ts", rightTsCol = "click_ts", forward = true)
-      .select(col("event_id"), col("user_id"), col("click_id"),
-        col("click_ts"), col("click_value"))
-  }
-
-  /** Range (interval) join (beyond the reference): events whose value falls
-    * in a per-supplier band, aggregated per supplier. A naive inequality
-    * join is a nested loop; the scale form bins the value axis — each
-    * interval replicates to the bins it covers (explode(sequence)), each
-    * point maps to one bin, and the match becomes a shuffled EQUI-join on
-    * the bin plus an exact residual predicate. Cost is
-    * O(points + intervals·span/binW + matches), evenly hash-distributed;
-    * no BroadcastNestedLoopJoin appears in the plan (PlanSpec).
-    */
-  /** Binned form with a DATA-PROPORTIONAL bin axis (binW ≤ 0 = adaptive,
-    * the default): the r9 sf10 run certified the fixed binW=10 axis as
-    * key-starved — ~56 distinct bin keys ceiling the equi-join's
-    * parallelism at min(bins, partitions), so the tail ran single-
-    * threaded regardless of cluster size. Bins now scale with the event
-    * count (clamped 256..65536), so parallelism tracks the data and the
-    * per-pair overhead ratio (span+binW)/span → 1. The per-supplier
-    * AGGREGATE is binW-invariant (every true match is touched exactly
-    * once under any axis; fixture values are 1e-6 fixed-point, so sums
-    * are association-order-exact), hence no oracle change — and the
-    * remaining cost is the honest Θ(matches) output bound the
-    * cardinality spec pins, which [[q25RangeJoinPrefix]] (the suite
-    * default) answers in linear time. The three stats are one tiny
-    * driver-side scan, the same regime as the prefix path's.
-    */
-  /** Width of every q25 interval: (c−10, c+10) around the band center.
-    * The adaptive bin axis floors its width against this so per-interval
-    * bin replication stays bounded whatever the event-value distribution.
-    */
-  private val IntervalWidth = 20.0
-
-  def q25RangeJoin(s: SparkSession, dir: String, binW: Double = 0.0): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val w =
-      if (binW > 0) binW
-      else {
-        val st = ev.agg(count(lit(1)), min("value"), max("value")).head()
-        val n = st.getLong(0)
-        // empty / all-null value column: min/max are NULL and no pair can
-        // match — any positive width yields the (empty) result
-        if (n == 0 || st.isNullAt(1)) 10.0
-        else {
-          val span = math.max(st.getDouble(2) - st.getDouble(1), 1e-6)
-          val bins = math.min(math.max(n / 10000L, 256L), 65536L)
-          // Floor the width at intervalWidth/2048: the axis must track the
-          // EVENT span for parallelism, but the replication factor is
-          // intervalWidth/w per supplier — with a degenerate span (constant
-          // event values: span→1e-6) an unfloored w≈1e-11 would explode
-          // each ±10 interval into ~2^41 sequence() elements (the "Too
-          // long sequence" crash) and saturate the floor(x/w) int casts.
-          // The floor bounds replication at ≤2049 bins/interval and keeps
-          // bin ids ≤ ~500/w ≈ 102k, far from Int overflow. Correctness is
-          // binW-invariant (documented above), so the oracle is unchanged.
-          math.max(span / bins.toDouble, IntervalWidth / 2048.0)
-        }
-      }
-    q25RangeJoinOf(Tables.supplier(s, dir), ev, w)
-  }
-
-  /** Frame-level binned range join — exposed so the output-cardinality
-    * spec can pin that this variant's cost is OUTPUT-BOUND (VERDICT r6
-    * item 5): its match set is Θ(S·N·span/R), so doubling BOTH inputs
-    * quadruples the matches it must touch — the measured super-linear
-    * wall exponent is the output's growth, not a plan defect. The
-    * aggregate QUESTION is answered at exponent 0.08 by
-    * [[q25RangeJoinPrefix]], which never materializes matches.
-    */
-  def q25RangeJoinOf(supplier: DataFrame, events: DataFrame,
-                     binW: Double = 10.0): DataFrame = {
-    // band center from abs(acctbal) % 500: abs and fmod are exact in IEEE
-    // doubles, so both engines derive bit-identical bounds
-    val c = abs(col("s_acctbal")) % lit(500.0)
-    val ranges = supplier
-      .select(col("s_suppkey"), (c - 10.0).as("lo"), (c + 10.0).as("hi"))
-      .withColumn("bin", explode(sequence(
-        floor(col("lo") / binW).cast("int"), floor(col("hi") / binW).cast("int"))))
-    val ev = events
-      .select(col("event_id"), col("value"))
-      .withColumn("bin", floor(col("value") / binW).cast("int"))
-    ranges.join(ev, Seq("bin"))
-      .filter(col("value") >= col("lo") && col("value") < col("hi"))
-      .groupBy("s_suppkey")
-      .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("sum_v"))
-  }
-
-  /** Prefix-sum form of the range join: same semantics and oracle as
-    * `q25RangeJoin`, but linear instead of match-proportional. The binned
-    * equi-join must still TOUCH every (interval, point) match — Θ(S·N·
-    * span/R) pairs, super-linear in sf when both sides grow — yet the
-    * OUTPUT is only a per-supplier aggregate, so the matches never need
-    * to be materialized. This path aggregates events once into a bucket
-    * histogram, turns it into cumulative (count, sum) prefixes, and
-    * answers each interval with two prefix lookups plus an exact
-    * residual join on the 4 boundary buckets:
+  /** Range (interval) join (beyond the reference): events whose value
+    * falls in a per-supplier band, aggregated per supplier. A naive
+    * inequality join is a nested loop, and a binned equi-join (each
+    * interval replicated to the bins it covers, each point in one bin)
+    * is match-proportional: it must still TOUCH every (interval, point)
+    * match — Θ(S·N·span/R) pairs, super-linear in sf when both sides grow
+    * — yet the OUTPUT is only a per-supplier aggregate, so the matches
+    * never need to be materialized. This path is linear: it aggregates
+    * events once into a bucket histogram, turns it into cumulative
+    * (count, sum) prefixes, and answers each interval with two prefix
+    * lookups plus an exact residual join on the 4 boundary buckets:
     *
     *   1. histogram: one event-sized shuffle → (bucket, cnt, sum) with
     *      bucket width adapted to the corpus (span / clamp(n/16, 1k, 64k))
@@ -506,9 +401,9 @@ object Relational {
     * fixed axis size of 64k buckets the boundary join touches ~0.006% of
     * events per supplier. The three stats collected up front (min, max,
     * count) are index-metadata, the same driver-side regime as the ANN
-    * quantizers. Equality with the binned path is spec-pinned
-    * (counts exact, sums to fp tolerance before rounding; in the
-    * fixed-point regime below the prefix sums are exact).
+    * quantizers. Equality with a binned reference is spec-pinned
+    * (Batch56Spec; in the fixed-point regime below the prefix sums are
+    * exact).
     */
   def q25RangeJoinPrefix(s: SparkSession, dir: String): DataFrame = {
     val evRaw = Tables.events(s, dir).select(col("event_id"), col("value"))
@@ -523,7 +418,7 @@ object Relational {
     val st = evRaw.agg(min("value"), max("value"), count(lit(1)),
       max(abs(col("value") * 1e6 - round(col("value") * 1e6)))).collect()(0)
     // empty events: min/max come back null — return the same empty
-    // (s_suppkey, n_events, sum_v) frame the binned path produces
+    // (s_suppkey, n_events, sum_v) frame a non-empty input produces
     // instead of NPEing on getDouble (ADVICE r6)
     if (st.isNullAt(0))
       return s.range(0).select(col("id").cast("long").as("s_suppkey"),

@@ -539,72 +539,6 @@ object TextOps {
         (col("n_shared") > 0).as("contaminated"))
   }
 
-  /** Bloom-prefiltered decontamination — IDENTICAL output to
-    * [[decontaminate]] (same oracle), with the 100 TB join shape: the
-    * broadcast-dictionary plan above needs the whole eval shingle set
-    * resident on every executor, which stops working when the eval suite
-    * grows past broadcast size. Here the dictionary is compressed into a
-    * fixed-budget Bloom filter (built distributed via
-    * `DataFrameStatFunctions.bloomFilter` — per-partition partials,
-    * OR-merged), applied as a map-side whole-stage-codegen predicate
-    * (Spark's own `BloomFilterMightContain`, see
-    * expressions.BloomProbe) over the exploded corpus stream. No false
-    * negatives, so docs whose every shingle misses are PROVABLY clean and
-    * never shuffle; the survivors (true hits + the fpp tail) go through
-    * an exact semi-join against the dictionary, which eliminates false
-    * positives — the join is now survivor-proportional instead of
-    * corpus-proportional, and free to shuffle (no broadcast requirement).
-    * Per-doc zero counts come back from a column-pruned doc_id scan +
-    * left join (parquet reads one column), not a second text pass.
-    *
-    * The serialized filter ships as a foldable binary literal in the plan
-    * (~1.2 MB per million eval shingles at fpp=0.01 — the point: CONSTANT
-    * in corpus size, tunable in eval size via fpp).
-    */
-  def decontaminateBloom(s: SparkSession, dir: String, k: Int = 3,
-                         evalMod: Int = 10, fpp: Double = 0.01): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val isEval = col("doc_id") % evalMod === 0
-    decontaminateBloomOf(s, docs.filter(!isEval), docs.filter(isEval), k, fpp)
-  }
-
-  def decontaminateBloomOf(s: SparkSession, train: DataFrame,
-                           eval: DataFrame, k: Int = 3,
-                           fpp: Double = 0.01): DataFrame = {
-    graft.expressions.BloomProbe.register(s)
-    val evalShingles = eval
-      .select(explode(shingles(col("text"), k)).as("sh"))
-      .distinct()
-    val hashed = evalShingles.select(xxhash64(col("sh")).as("h"))
-    // expected-items sizing needs the dictionary cardinality — one small
-    // aggregation over the EVAL side only (the small side by definition)
-    val nEvalRaw = hashed.count()
-    // empty eval dictionary: nothing can be contaminated, and Spark's
-    // distributed bloom build returns a null filter over zero rows —
-    // answer directly instead of serializing it
-    if (nEvalRaw == 0)
-      return train.select(col("doc_id"), lit(0L).as("n_shared"),
-        lit(false).as("contaminated"))
-    val bloom = hashed.stat.bloomFilter("h", nEvalRaw, fpp)
-    val bytes = {
-      val bos = new java.io.ByteArrayOutputStream()
-      bloom.writeTo(bos)
-      bos.toByteArray
-    }
-    val mightHit = call_function("graft_bloom_might_contain",
-      lit(bytes), xxhash64(col("sh")))
-    val candCounts = train
-      .select(col("doc_id"), explode(shingles(col("text"), k)).as("sh"))
-      .filter(mightHit)
-      .join(evalShingles, Seq("sh"), "left_semi") // exact: kills fpp tail
-      .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
-    train.select("doc_id")
-      .join(candCounts, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_shared"), lit(0L)).as("n_shared"),
-        (coalesce(col("n_shared"), lit(0L)) > 0).as("contaminated"))
-  }
-
   /** Repetition filters (Gopher / MassiveText quality rules, Rae et al.
     * 2021 §A1.1): fraction of tokens claimed by the most frequent unigram
     * and bigram, and the duplicate-3-gram fraction (1 − distinct/total).

@@ -94,10 +94,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         }
         BottomKAgg(children.head, children(1), k)
       }))
-    // whole-operator tier: the native as-of join's planner strategy, so
-    // config-driven sessions can plan AsOfJoinPlan without any driver
-    // code (the programmatic mirror is AsOfJoin.register)
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     // The window top-k → bounded aggregate rewrite is deliberately NOT
     // injected here: the r11 three-decade A/B (SCALE.md) measured the
     // stock WindowGroupLimit + codegen sort AHEAD of the object-aggregate

@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.expressions.TopKRowsAgg
 
-/** Optimizer rewrite: per-group window top-k → bounded aggregate — the
-  * second whole-plan-tier extension next to [[AsOfJoin]].
+/** Optimizer rewrite: per-group window top-k → bounded aggregate, a
+  * whole-plan-tier extension.
   *
   * Matches the canonical top-k-per-group idiom
   *

@@ -105,8 +105,7 @@ object Sessionize {
     * timeout flushes sessions whose gap has passed the watermark.
     *
     * The fixture is staged with two far-future heartbeat batches
-    * (`StreamOps.stageEventsWithHeartbeats`, the `stream_session_native`
-    * technique): the first heartbeat advances the watermark past every
+    * (`StreamOps.stageEventsWithHeartbeats`): the first heartbeat advances the watermark past every
     * real session's gap, the second forces the timeout pass that acts on
     * it — so every FINAL session per user times out and emits too, and
     * the drained output equals the batch `session_window` result

@@ -980,26 +980,6 @@ object StreamOps {
     ss.table(name)
   }
 
-  /** Native `session_window` sessionization in APPEND mode — the
-    * finalized-only emission contract a production sessionizer runs
-    * under (the flatMapGroupsWithState variant in [[Sessionize]] shows
-    * the custom-state route; this one shows Spark's built-in merging
-    * session windows + watermark eviction doing the same job with zero
-    * user state code).
-    *
-    * Append mode only emits a session once the watermark passes its end,
-    * so a drained finite source would swallow every still-open tail
-    * session. The fixture is therefore staged ([[streamLateAudit]]'s
-    * technique) as three pinned-order files: all events, then two
-    * far-future heartbeats (user_id −1). Batch 2's heartbeat advances
-    * the watermark past every real session; batch 3 exists because the
-    * EVICTION watermark for batch N is computed from data through batch
-    * N−1 — the second heartbeat forces the final eviction pass that
-    * flushes everything the first one finalized. Heartbeat sessions
-    * themselves never finalize and are filtered by user_id ≥ 0. Output
-    * equals the batch `session_window` result, so q17's oracle gates it
-    * row-for-row.
-    */
   /** Stage the events fixture plus two far-future heartbeat rows
     * (user_id −1, pinned mtimes, one file per micro-batch under
     * `maxFilesPerTrigger=1`) into `watch` — the shared setup for every
@@ -1089,43 +1069,6 @@ object StreamOps {
     // NEXT batch acts on; chains of S stateful operators need S+1 of them
     // for the final eviction to propagate through every operator
     (1 to nHeartbeats).foreach(i => stageFile(heartbeat(i + 1, 10L * i), i + 1))
-  }
-
-  def streamSessionWindow(s: SparkSession, dir: String,
-                          gap: String = "30 minutes",
-                          delay: String = "10 minutes"): DataFrame = {
-    val ss = streamingSession(s)
-    // shared staged fixture (read-only; lives until Tables.invalidate)
-    val watch = stagedHeartbeatDir(ss, dir, nHeartbeats = 2)
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val schema = ss.read.parquet(watch.toString).schema
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(watch.toString)
-      .transform(graft.Tables.normalizeTs) // staged bytes are the raw fixture
-      .withWatermark("ts", delay)
-      .groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))
-      // coalesce after the null-skipping sum — aligned with the batch
-      // session_window form and the oracle's COALESCE (ADVICE r7)
-      .agg(count(lit(1)).as("n_events"),
-        round(coalesce(sum("value"), lit(0.0)), 2).as("sum_v"),
-        max("ts").as("last_ts"))
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    // the memory sink holds the drained rows in the child session's
-    // catalog, independent of the staged files; it skips two driver-side
-    // copies of an output that is SESSION-cardinality (≈ event count on
-    // the sparse fixture), which collect()+createDataFrame paid for
-    ss.table(name)
-      .filter(col("user_id") >= 0)
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("last_ts"), col("n_events"), col("sum_v"))
   }
 
   /** CHAINED stateful operators — windowed DISTINCT-user counts as

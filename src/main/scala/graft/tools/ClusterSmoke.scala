@@ -30,7 +30,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ClusterSmoke {
 
-  private val Slice = Seq(
+  private[graft] val Slice = Seq(
     "q01_group_count",      // baseline agg
     "q05_multi_agg_skew",   // custom skew aggregate
     "dedup_simhash",        // SimHashAgg across executors
@@ -55,7 +55,7 @@ object ClusterSmoke {
     // rows across micro-batches; these three chain timeouts
     // (flatMapGroupsWithState), watermark-late audits, and CDC
     // last-writer-wins state through executor JVM boundaries
-    "stream_session_native",
+    "stream_sessionize",
     "stream_late_audit",
     "stream_cdc_apply",
     // r6 additions (VERDICT item 8): manifest set-algebra + explicit-path
@@ -69,18 +69,16 @@ object ClusterSmoke {
     // multi-executor partition ids)
     "graph_components",
     "q45_decile_lift_dist",
-    // native as-of join: custom SparkPlan zipPartitions merge — the
-    // co-partitioning contract (two ClusteredDistribution children) and
-    // the streaming merge's row-buffer copies must hold across real
-    // executor shuffles, not just local[n]'s in-process exchanges
-    "q24_asof_join_native",
+    // as-of join: the tagged union's one exchange on user_id and the
+    // carry-forward window, whose struct-valued frame state must hold
+    // across real executor shuffles, not just local[n]'s in-process ones
     "q24_asof_join_forward")
 
   /** Regime-forcing entries that the public `SparkEntry.queries` map
     * (rightly) serves through their fixture-scale fast path — the smoke
     * must exercise the DISTRIBUTED path on real executor boundaries.
     */
-  private val Forced: Map[String, (SparkSession, String) =>
+  private[graft] val Forced: Map[String, (SparkSession, String) =>
       org.apache.spark.sql.DataFrame] = Map(
     "q45_decile_lift_dist" -> ((s, d) =>
       graft.operators.Relational.q45DecileLift(s, d, windowRowCap = 0L)))

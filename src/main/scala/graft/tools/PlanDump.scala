@@ -5,7 +5,7 @@ package graft.tools
   * (`plans/r11/<query>_{before,after}.txt`). The session is built by the
   * same GraftSession builder as Bench, so the dumped plan is the plan the
   * bench executes (same partition regime, same extensions). The queries
-  * are Bench's: the default sweep, or the SPARK_GRAFT_QUERIES selection.
+  * are Bench's: every entry, or the SPARK_GRAFT_QUERIES selection.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix>
   * e.g.   SPARK_GRAFT_QUERIES=graph_kcore runMain graft.tools.PlanDump <sf0.1 dir> plans/r11 before
@@ -14,7 +14,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: PlanDump <sfDir> <outDir> <suffix>")
     val Array(dir, out, suffix) = args
-    val selected = graft.SparkEntry.selected("plandump", graft.SparkEntry.defaultSweep)
+    val selected = graft.SparkEntry.selected("plandump", graft.SparkEntry.entries)
     val outDir = java.nio.file.Paths.get(out)
     java.nio.file.Files.createDirectories(outDir)
     val spark = graft.GraftSession.builder("graft-plan-dump", graft.GraftSession.cpus, dir)

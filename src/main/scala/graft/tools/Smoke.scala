@@ -18,7 +18,7 @@ object Smoke {
     */
   val slice: Seq[String] = Seq(
     "q01_group_count", "q05_multi_agg_skew", "q06_join_agg", "q12_topk",
-    "q25_range_join", "dedup_exact_docs", "dedup_minhash_lsh",
+    "q24_asof_join_forward", "q25_range_join", "dedup_exact_docs", "dedup_minhash_lsh",
     "dedup_simhash", "ann_brute_topk", "ann_ivf_pq", "emb_knn_graph",
     "text_token_counts", "doc_quality_calibrate", "text_lang_id",
     "text_decontaminate", "mm_dedup_phash", "mm_dedup_phash_fast",

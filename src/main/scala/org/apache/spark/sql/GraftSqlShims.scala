@@ -1,36 +1,17 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.SparkStrategy
 
-/** The two `private[sql]` touch points a whole-operator extension needs
-  * (the standard shim every LogicalPlan-level Spark extension ships):
-  * wrap a custom logical plan back into a DataFrame, and read a
-  * DataFrame's resolved plan to build one. Everything else in
-  * `graft.plans` uses public/DeveloperApi Catalyst surfaces.
+/** The two `private[sql]` touch points graft's plan-level code needs:
+  * read a DataFrame's resolved plan, and add an optimizer rule to a live
+  * session. Everything else in `graft.plans` uses public/DeveloperApi
+  * Catalyst surfaces.
   */
 object GraftSqlShims {
 
-  /** DataFrame over an already-resolved custom logical plan. */
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** The analyzed (resolved-attribute) plan of a DataFrame — the child
-    * plans a custom operator composes over.
-    */
+  /** The analyzed (resolved-attribute) plan of a DataFrame. */
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
-
-  /** Idempotently register an extra planner strategy on a live session
-    * (the programmatic mirror of `spark.sql.extensions`).
-    */
-  def addStrategy(spark: SparkSession, strategy: SparkStrategy): Unit = {
-    val exp = spark.asInstanceOf[classic.SparkSession].experimental
-    exp.synchronized {
-      if (!exp.extraStrategies.contains(strategy))
-        exp.extraStrategies = exp.extraStrategies :+ strategy
-    }
-  }
 
   /** Idempotently register an extra optimizer rule on a live session —
     * extraOptimizations run AFTER the built-in batches, so the rule sees

@@ -30,14 +30,11 @@ class RegistrySpec extends AnyFunSuite {
     })
   }
 
-  test("the default sweep is every entry except q25_range_join_binned") {
-    assert(SparkEntry.defaultSweep.map(_.name).toSet === names.toSet - "q25_range_join_binned")
-    assert(names.contains("q25_range_join_binned"))
-  }
-
   test("every family has a Smoke.slice member, and every slice name is an entry") {
-    assert(tools.Smoke.slice.toSet.subsetOf(names.toSet),
-      s"unknown slice names: ${tools.Smoke.slice.filterNot(names.contains)}")
+    // ClusterSmoke also runs its regime-forced variants under their own names
+    for ((slice, known) <- Seq(tools.Smoke.slice -> names.toSet,
+        tools.ClusterSmoke.Slice -> (names.toSet ++ tools.ClusterSmoke.Forced.keySet)))
+      assert(slice.toSet.subsetOf(known), s"unknown slice names: ${slice.filterNot(known)}")
     val covered = SparkEntry.entries.filter(e => tools.Smoke.slice.contains(e.name))
       .map(_.family).toSet
     assert(SparkEntry.entries.map(_.family).toSet -- covered === Set.empty[Family])
@@ -50,8 +47,6 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.select(Some("all"), default) === Right(SparkEntry.entries))
     assert(SparkEntry.select(Some("q12_topk, q01_group_count,q12_topk"), default)
       .map(_.map(_.name)) === Right(Seq("q12_topk", "q01_group_count")))
-    assert(SparkEntry.select(Some("q25_range_join_binned"), SparkEntry.defaultSweep)
-      .map(_.map(_.name)) === Right(Seq("q25_range_join_binned")))
   }
 
   test("the selector rejects unknown names instead of dropping them") {

@@ -126,17 +126,6 @@ class GraphGovSpec extends AnyFunSuite {
     assert(stats.map(_.getLong(1)).sum == Tables.lineitem(spark, sf).count())
   }
 
-  test("native streaming session window equals batch sessionization") {
-    val streamed = graft.streaming.StreamOps.streamSessionWindow(spark, sf)
-      .collect().map(_.toString).sorted
-    val batch = graft.streaming.Sessionize.batch(spark, sf)
-      .select(col("user_id"), col("session_start"), col("last_ts"),
-        col("n_events"), col("sum_v"))
-      .collect().map(_.toString).sorted
-    assert(streamed.nonEmpty)
-    assert(streamed.toSeq == batch.toSeq)
-  }
-
   test("graph components: star == propagation == driver union-find") {
     import graft.Tables
     // rebuild the co-purchase edges independently of the family cache

@@ -1011,27 +1011,6 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
-  test("bloom decontamination equals the exact plan, even under a saturated filter") {
-    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-    val exact = asMap(TextOps.decontaminate(spark, sf))
-    // default sizing: the prefilter admits true hits + an fpp tail; the
-    // survivor semi-join kills the tail, so outputs are identical
-    val bloomed = asMap(TextOps.decontaminateBloom(spark, sf))
-    assert(bloomed === exact)
-    assert(exact.values.exists(_._2), "fixture lost its contaminated docs")
-    // adversarial sizing: fpp = 0.5 saturates the filter with false
-    // positives — the NO-FALSE-NEGATIVES guarantee plus exact verify must
-    // still reproduce the exact result bit-for-bit (the claim that makes
-    // the shared oracle sound at any filter budget)
-    val docs = graft.Tables.documents(spark, sf)
-    val evalSlice = docs.filter(col("doc_id") % 10 === 0)
-    val trainSlice = docs.filter(col("doc_id") % 10 =!= 0)
-    val saturated = asMap(
-      TextOps.decontaminateBloomOf(spark, trainSlice, evalSlice, fpp = 0.5))
-    assert(saturated === exact)
-  }
-
   test("repetition metrics match hand-computed values and stay in [0,1]") {
     import spark.implicits._
     // "a a a b": top unigram a=3/4; bigrams [a a, a a, a b] → 2/3;

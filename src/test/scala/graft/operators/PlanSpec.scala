@@ -62,16 +62,12 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), p.take(2000))
   }
 
-  test("range join plans a shuffled equi-join on bins, not a nested loop") {
-    val p = planOf(Relational.q25RangeJoin(spark, sf))
-    assert(!p.contains("BroadcastNestedLoopJoin"), p.take(2000))
-    assert(!p.contains("CartesianProduct"), p.take(2000))
-  }
-
   test("asof join plans a single per-user window pass, no join operator") {
-    val p = planOf(Relational.q24AsofJoin(spark, sf))
-    assert(!p.contains("Join"), p.take(2000))
-    assert(p.contains("Window"), p.take(2000))
+    for (q <- Seq(Relational.q24AsofJoin _, Relational.q24AsofJoinForward _)) {
+      val p = planOf(q(spark, sf))
+      assert(!p.contains("Join"), p.take(2000))
+      assert(p.contains("Window"), p.take(2000))
+    }
   }
 
   test("dimension join plans broadcast hash joins, fact side unshuffled") {

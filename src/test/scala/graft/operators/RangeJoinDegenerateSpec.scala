@@ -3,19 +3,16 @@ package graft.operators
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SparkTestSession.spark
 
-/** The ADVICE r10 regression shape: constant event values collapse the
-  * adaptive bin axis's span to the 1e-6 floor, and an unfloored width
-  * (span/bins ≈ 1e-11) would explode every ±10 interval into ~10¹²
-  * sequence() elements — the "Too long sequence" crash — while
-  * saturating the floor(x/w) int casts. The width floor
-  * (IntervalWidth/2048) bounds per-interval replication at ≤ 2049 bins
-  * under ANY value distribution; this spec runs the adaptive path on the
-  * EdgeSweep-uniform shape and pins it equal to the fixed-axis result.
+/** The ADVICE r10 regression shape: constant event values collapse an
+  * adaptive value axis's span to nothing, the shape that once exploded
+  * the binned form's bins into the "Too long sequence" crash. The prefix
+  * form sizes its bucket axis from the same (min, max, count) stats, so
+  * this spec runs it on the EdgeSweep-uniform shape and pins it equal to
+  * the fixed-axis binned reference.
   */
 class RangeJoinDegenerateSpec extends AnyFunSuite {
 
@@ -35,8 +32,8 @@ class RangeJoinDegenerateSpec extends AnyFunSuite {
   }
 
   test("adaptive bin axis survives constant event values and matches the fixed axis") {
-    val adaptive = Relational.q25RangeJoin(spark, dir, binW = 0.0)
-    val fixed = Relational.q25RangeJoin(spark, dir, binW = 10.0)
+    val adaptive = Relational.q25RangeJoinPrefix(spark, dir)
+    val fixed = Batch56Spec.binnedRangeJoin(spark, dir)
     val a = adaptive.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val f = fixed.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(a == f, s"adaptive=$a fixed=$f")

@@ -2,210 +2,85 @@ package graft.plans
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.SparkTestSession.{sf, spark}
+import graft.operators.Relational.asOfOf
+import graft.operators.SparkTestSession.spark
 
-/** The native as-of operator (custom LogicalPlan + Strategy + physical
-  * merge) against three independent anchors: the composed window form on
-  * the real fixture (the DuckDB ASOF JOIN oracle value-checks both in the
-  * driver gate), a hand-computed synthetic corpus covering the edge
-  * semantics, and the physical-plan shape.
+/** The composed as-of join (`Relational.asOfOf`, the plan of both q24
+  * entries) on hand-computed synthetic corpora covering the edge
+  * semantics the DuckDB ASOF JOIN oracle fixes: inclusive ties, per-key
+  * matching, both directions, SQL null handling and empty sides. The
+  * oracle value-checks both q24 entries on the fixture.
   */
 class AsOfJoinSpec extends AnyFunSuite {
+  import spark.implicits._
 
-  test("native as-of equals the composed window form on the fixture") {
-    val composed = graft.operators.Relational.q24AsofJoin(spark, sf)
-    val native = graft.operators.Relational.q24AsofJoinNative(spark, sf)
-    assert(composed.count() > 0)
-    assert(composed.exceptAll(native).isEmpty && native.exceptAll(composed).isEmpty,
-      "native and composed as-of joins disagree")
-  }
+  private def ts(m: Int) = Timestamp.valueOf(f"2026-01-01 00:$m%02d:00")
+
+  private def pxByTag(left: DataFrame, right: DataFrame, forward: Boolean) =
+    asOfOf(left, right, forward).select("tag", "px")
+      .as[(String, Option[Double])].collect().toMap
+
+  // user 1: quotes at :10 and :20; user 2: quotes at :30 and :35, the
+  // later one without a price; user 3: none
+  private def quotes = Seq((1L, ts(10), Some(100.0)), (1L, ts(20), Some(200.0)),
+    (2L, ts(30), Some(300.0)), (2L, ts(35), None))
+    .toDF("user_id", "ts", "px")
+  private def probes = Seq(
+    (1L, ts(5), "before-any"), (1L, ts(10), "at-equal"),
+    (1L, ts(15), "between"), (1L, ts(25), "after-last"),
+    (2L, ts(30), "other-key"), (2L, ts(40), "null-payload"),
+    (3L, ts(40), "no-right-key"))
+    .toDF("user_id", "ts", "tag")
 
   test("as-of semantics on a synthetic corpus: backward-inclusive, per-key, null on no-match") {
-    import spark.implicits._
-    def ts(m: Int) = Timestamp.valueOf(f"2026-01-01 00:$m%02d:00")
-    // key 1: quotes at :10 and :20; key 2: quote at :30; key 3: none
-    val right = Seq((1L, ts(10), 100.0), (1L, ts(20), 200.0), (2L, ts(30), 300.0))
-      .toDF("r_k", "r_ts", "px")
-    val left = Seq(
-      (1L, ts(5), "before-any"), (1L, ts(10), "at-equal"),
-      (1L, ts(15), "between"), (1L, ts(25), "after-last"),
-      (2L, ts(30), "other-key"), (3L, ts(40), "no-right-key"))
-      .toDF("k", "ts", "tag")
-    val out = AsOfJoin.joinAsOf(left, right, Seq("k" -> "r_k"), "ts", "r_ts")
-      .select("tag", "px").as[(String, Option[Double])].collect().toMap
+    val out = pxByTag(probes, quotes, forward = false)
     assert(out("before-any") === None)       // strictly before every right ts
     assert(out("at-equal") === Some(100.0))  // inclusive at equality
     assert(out("between") === Some(100.0))   // latest at-or-before, not nearest
     assert(out("after-last") === Some(200.0))
     assert(out("other-key") === Some(300.0)) // never crosses keys
+    assert(out("null-payload") === None)     // the matched row's null, not an older price
     assert(out("no-right-key") === None)
   }
 
   test("forward direction matches the earliest right at-or-after, per key") {
-    import spark.implicits._
-    def ts(m: Int) = Timestamp.valueOf(f"2026-01-01 00:$m%02d:00")
-    val right = Seq((1L, ts(10), 100.0), (1L, ts(20), 200.0), (2L, ts(30), 300.0))
-      .toDF("r_k", "r_ts", "px")
-    val left = Seq(
-      (1L, ts(5), "before-any"), (1L, ts(10), "at-equal"),
-      (1L, ts(15), "between"), (1L, ts(25), "after-last"),
-      (2L, ts(30), "other-key"), (3L, ts(40), "no-right-key"))
-      .toDF("k", "ts", "tag")
-    val out = AsOfJoin.joinAsOf(left, right, Seq("k" -> "r_k"), "ts", "r_ts",
-        forward = true)
-      .select("tag", "px").as[(String, Option[Double])].collect().toMap
+    val out = pxByTag(probes, quotes, forward = true)
     assert(out("before-any") === Some(100.0)) // earliest at-or-after
     assert(out("at-equal") === Some(100.0))   // inclusive at equality
     assert(out("between") === Some(200.0))
     assert(out("after-last") === None)        // nothing later exists
     assert(out("other-key") === Some(300.0))
+    assert(out("null-payload") === None)
     assert(out("no-right-key") === None)
   }
 
-  test("null timestamps follow SQL semantics: no match either direction, key types validated") {
-    import spark.implicits._
-    def ts(m: Int) = Timestamp.valueOf(f"2026-01-01 00:$m%02d:00")
+  test("null timestamps follow SQL semantics: no match either direction") {
+    // a null ts sorts at one end of the window order; SQL's `lts >= rts`
+    // is UNKNOWN on null, so neither side's null-ts row may match
     val right = Seq((1L, Some(ts(10)), 100.0), (1L, None, 999.0))
-      .toDF("r_k", "r_ts", "px")
-    val left = Seq((1L, Some(ts(15)), "real"), (1L, None, "null-ts"))
-      .toDF("k", "ts", "tag")
-    val out = AsOfJoin.joinAsOf(left, right, Seq("k" -> "r_k"), "ts", "r_ts")
-      .select("tag", "px").as[(String, Option[Double])].collect().toMap
-    assert(out("real") === Some(100.0))  // null-ts right row never matches
-    assert(out("null-ts") === None)      // null-ts left row matches nothing
-    // mismatched key types are rejected at construction, not mis-joined
-    val badRight = Seq((1, ts(10), 1.0)).toDF("r_k", "r_ts", "px") // Int key
-    intercept[IllegalArgumentException] {
-      AsOfJoin.joinAsOf(left, badRight, Seq("k" -> "r_k"), "ts", "r_ts")
-    }
+      .toDF("user_id", "ts", "px")
+    val left = Seq((1L, Some(ts(5)), "early"), (1L, Some(ts(15)), "late"),
+      (1L, None, "null-ts")).toDF("user_id", "ts", "tag")
+    val back = pxByTag(left, right, forward = false)
+    assert(back === Map("early" -> None, "late" -> Some(100.0), "null-ts" -> None))
+    val fwd = pxByTag(left, right, forward = true)
+    assert(fwd === Map("early" -> Some(100.0), "late" -> None, "null-ts" -> None))
   }
 
   test("empty sides degrade to the left-outer contract") {
-    import spark.implicits._
-    val right = Seq((1L, Timestamp.valueOf("2026-01-01 00:00:00"), 1.0))
-      .toDF("r_k", "r_ts", "px")
-    val noLeft = Seq.empty[(Long, Timestamp, String)].toDF("k", "ts", "tag")
-    assert(AsOfJoin.joinAsOf(noLeft, right, Seq("k" -> "r_k"), "ts", "r_ts")
-      .count() === 0)
-    val left = Seq((1L, Timestamp.valueOf("2026-01-01 00:00:01"), "x"))
-      .toDF("k", "ts", "tag")
-    val noRight = Seq.empty[(Long, Timestamp, Double)].toDF("r_k", "r_ts", "px")
-    val out = AsOfJoin.joinAsOf(left, noRight, Seq("k" -> "r_k"), "ts", "r_ts")
-    assert(out.count() === 1 && out.filter(col("px").isNull).count() === 1)
-  }
-
-  test("GraftExtensions injects the as-of planner strategy") {
-    // spark.sql.extensions is a static conf; apply the extensions object
-    // directly and read back its strategy list (builder is private[sql]
-    // in Scala but public in bytecode — the DotProductSpec pattern)
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    val m = classOf[org.apache.spark.sql.SparkSessionExtensions].getMethods
-      .find(_.getName == "buildPlannerStrategies").get
-    val strategies = m.invoke(ext, spark).asInstanceOf[Seq[_]]
-    assert(strategies.contains(AsOfJoinStrategy))
-  }
-
-  test("the config-driven extensions path (spark.sql.extensions) plans the native exec") {
-    // A FRESH SparkSession over the shared context, created with the
-    // static conf the deployment story documents — no programmatic
-    // register() anywhere on this path. The logical node is built
-    // directly because joinAsOf would inject the strategy itself and
-    // mask what this test gates.
-    import org.apache.spark.sql.SparkSession
-    val sc = spark.sparkContext // ensure the shared context is live
-    // Session builders read spark.sql.extensions from the CONTEXT conf
-    // when reusing a live SparkContext (builder options only reach a
-    // context being created) — so the config lands where a spark-submit
-    // --conf would put it: the live SparkConf, via its private[spark]
-    // accessor (public in bytecode, the buildPlannerStrategies pattern).
-    val liveConf = classOf[org.apache.spark.SparkContext]
-      .getMethod("conf").invoke(sc)
-      .asInstanceOf[org.apache.spark.SparkConf]
-    val prevActive = SparkSession.getActiveSession
-    val prevDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    liveConf.set("spark.sql.extensions", "graft.plans.GraftExtensions")
-    try {
-      val s2 = SparkSession.builder()
-        .getOrCreate() // reuses the live SparkContext, fresh session state
-      assert(s2 ne spark)
-      import s2.implicits._
-      def ts(m: Int) = Timestamp.valueOf(f"2026-01-01 00:$m%02d:00")
-      val right = Seq((1L, ts(10), 100.0)).toDF("r_k", "r_ts", "px")
-      val left = Seq((1L, ts(15), "x"), (2L, ts(5), "y")).toDF("k", "ts", "tag")
-      val lPlan = org.apache.spark.sql.GraftSqlShims.analyzed(left)
-      val rPlan = org.apache.spark.sql.GraftSqlShims.analyzed(right)
-      def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-               n: String) = p.output.find(_.name == n).get
-      val df = org.apache.spark.sql.GraftSqlShims.ofRows(s2, AsOfJoinPlan(
-        lPlan, rPlan, Seq(attr(lPlan, "k")), Seq(attr(rPlan, "r_k")),
-        attr(lPlan, "ts"), attr(rPlan, "r_ts"), forward = false))
-      val execs = df.queryExecution.sparkPlan.collect { case e: AsOfJoinExec => e }
-      assert(execs.length === 1,
-        s"config-injected strategy did not plan the native exec:\n${df.queryExecution.sparkPlan}")
-      val out = df.select(col("tag"), col("px"))
-        .as[(String, Option[Double])].collect().toMap
-      assert(out === Map("x" -> Some(100.0), "y" -> None))
-    } finally {
-      liveConf.remove("spark.sql.extensions")
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prevActive.foreach(SparkSession.setActiveSession)
-      prevDefault.foreach(SparkSession.setDefaultSession)
+    val right = Seq((1L, ts(0), 1.0)).toDF("user_id", "ts", "px")
+    val noLeft = Seq.empty[(Long, Timestamp, String)].toDF("user_id", "ts", "tag")
+    for (forward <- Seq(false, true))
+      assert(asOfOf(noLeft, right, forward).count() === 0)
+    val left = Seq((1L, ts(1), "x")).toDF("user_id", "ts", "tag")
+    val noRight = Seq.empty[(Long, Timestamp, Double)].toDF("user_id", "ts", "px")
+    for (forward <- Seq(false, true)) {
+      val out = asOfOf(left, noRight, forward)
+      assert(out.count() === 1 && out.filter(col("px").isNull).count() === 1)
     }
-  }
-
-  test("AQE finalizes the as-of plan with adaptive shuffle reads on a skewed input") {
-    // skewed left (80% of rows on one key) through the native operator
-    // under AQE: the exchanges below AsOfJoinExec become query stages
-    // whose final reads AQE re-plans — the gate is that the adaptive
-    // final plan still contains the native exec AND the output matches
-    // the statically-computable expectation row-for-row (a co-partitioning
-    // violation between the two adaptively-read children would mis-join
-    // the skewed key immediately).
-    val left = spark.range(0, 60000).select(
-      when(col("id") % 5 =!= 0, lit(7L)).otherwise(col("id") % 100).as("k"),
-      timestamp_seconds(col("id") % 1000 + 1).as("ts"),
-      col("id").as("payload"))
-    val right = spark.range(0, 100).select(
-      col("id").as("r_k"),
-      timestamp_seconds(lit(500)).as("r_ts"),
-      (col("id") * 10).as("px"))
-    val out = AsOfJoin.joinAsOf(left, right, Seq("k" -> "r_k"), "ts", "r_ts")
-    // execute THIS QueryExecution (count() would plan its own) so the
-    // adaptive plan below is the finalized one
-    assert(out.collect().length === 60000) // left-outer: every left row survives
-    val planStr = out.queryExecution.executedPlan.toString
-    assert(planStr.contains("isFinalPlan=true"), s"AQE did not finalize:\n$planStr")
-    assert(planStr.contains("AsOfJoin"), s"native exec missing from final plan:\n$planStr")
-    assert(planStr.contains("AQEShuffleRead"),
-      s"expected adaptive shuffle reads below the as-of exec:\n$planStr")
-    // exactly one right candidate per key, so the as-of pick is statically
-    // computable: matched iff r_ts (500 s) <= ts
-    val expected = left.join(right, col("k") === col("r_k"), "left")
-      .select(col("payload"),
-        when(col("ts") >= col("r_ts"), col("px")).as("px"))
-    val got = out.select(col("payload"), col("px"))
-    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
-      "as-of result under AQE diverges from the static expectation")
-  }
-
-  test("the query plans the native exec, key-clustered and sorted") {
-    val native = graft.operators.Relational.q24AsofJoinNative(spark, sf)
-    val p = native.queryExecution.executedPlan.toString
-    assert(p.contains("AsOfJoin"), s"expected AsOfJoinExec in plan:\n$p")
-    // both inputs arrive through exchanges/sorts satisfying the declared
-    // requirements — no per-row lookup structure, no broadcast of a fact.
-    // collect over sparkPlan: AQE's adaptive wrapper reports no children,
-    // so executedPlan.collect can't see inside it
-    val execs = native.queryExecution.sparkPlan.collect {
-      case e: AsOfJoinExec => e
-    }
-    assert(execs.length === 1)
   }
 }

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SparkTestSession.{sf, spark}
 
-/** Pins the window-top-k → bounded-aggregate rewrite three ways, the
-  * AsOfJoin discipline: result equality against the UNREWRITTEN window
+/** Pins the window-top-k → bounded-aggregate rewrite three ways: result
+  * equality against the UNREWRITTEN window
   * form (same fixture, same query, plain session), plan shape (the
   * rewritten plan has no Window/sort of the input — the aggregate and
   * the explode are there instead), and scope (shapes the rule must NOT
@@ -134,8 +134,7 @@ class TopKRewriteSpec extends AnyFunSuite {
   }
 
   test("the oracle-gated native entry rewrites; the composed entry keeps its Window") {
-    // the q24-style pair: q68_window_topk_native self-registers on a
-    // derived session, the composed form stays stock — on ANY session
+    // q68_window_topk_native self-registers on a derived session, the composed form stays stock — on ANY session
     val pNative = optimized(
       graft.operators.Relational.q68WindowTopKNative(spark, sf))
     assert(!pNative.contains("Window") && pNative.contains("graft_topk_rows"))

@@ -10,16 +10,16 @@ import graft.operators.SparkTestSession.{sf, spark}
   * yet is routine, and a driver-side NPE there takes down the whole
   * pipeline. This spec replays the sweep for the operator families the
   * r7 sweep actually caught crashing (null max-event-time heartbeat
-  * anchors, null BPE argmax, null bloom build, empty quantile axis, null
-  * covariance fit, empty PQ seed set) plus the q25 prefix form ADVICE r6
-  * flagged — the fast canary slice; `runMain graft.tools.EdgeSweep <dir>
-  * empty|tiny` covers all 206.
+  * anchors, null BPE argmax, empty quantile axis, null covariance fit,
+  * empty PQ seed set) plus the q25 prefix form ADVICE r6 flagged — the
+  * fast canary slice; `runMain graft.tools.EdgeSweep <dir> empty|tiny`
+  * covers every entry.
   */
 class EdgeSweepSpec extends AnyFunSuite {
 
   private val canaries = Seq(
     "ann_ivf_pq", "emb_pca_project", "q41_quantile_bucket",
-    "q25_range_join", "text_decontaminate_bloom",
+    "q25_range_join", "text_decontaminate",
     "tok_bpe_train", "tok_bpe_encode",
     "stream_sessionize", "stream_late_audit")
 
