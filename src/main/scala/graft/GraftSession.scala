@@ -95,14 +95,6 @@ object GraftSession {
     * SPARK_GRAFT_EXTRA_CONF="spark.driver.maxResultSize=8g".
     */
   private[graft] val engineConf: Map[String, String] = Map(
-    // The engine's own extension class — native functions and the as-of
-    // strategy — enabled the way a cluster deployment would enable it.
-    // Individual operators keep their idempotent programmatic register()
-    // calls so they also work on sessions graft didn't build; this makes
-    // the whole surface deterministic per session rather than dependent
-    // on which operator ran first. The window-top-k rewrite is not part
-    // of it (see GraftExtensions).
-    "spark.sql.extensions" -> "graft.plans.GraftExtensions",
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false",

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftSqlShims}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -130,8 +130,7 @@ object BitmapAgg {
     n
   }
 
-  /** Register `graft_bitmap(id)` on the session. */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bitmap", exprs => BitmapAgg(exprs.head), "built-in")
+  /** The sorted distinct ids of a group as a bitmap artifact. */
+  def bitmap(id: Column): Column = GraftSqlShims.column(
+    BitmapAgg(GraftSqlShims.expression(id)).toAggregateExpression())
 }

@@ -2,10 +2,10 @@ package graft.expressions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftSqlShims}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -143,15 +143,8 @@ object BottomKAgg {
     }
   }
 
-  /** Register `graft_bottomk(key, id, k)` — k must be an integer literal. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bottomk", exprs => {
-        val k = exprs(2) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_bottomk k must be an integer literal, got $other")
-        }
-        BottomKAgg(exprs(0), exprs(1), k)
-      }, "built-in")
+  /** The k smallest distinct (key, id) pairs of a group, key asc, id asc. */
+  def bottomk(key: Column, id: Column, k: Int): Column = GraftSqlShims.column(
+    BottomKAgg(GraftSqlShims.expression(key), GraftSqlShims.expression(id), k)
+      .toAggregateExpression())
 }

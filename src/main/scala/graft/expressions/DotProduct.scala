@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftSqlShims}
 
 /** Native Catalyst expression: dot product of two array<float> columns in
   * double precision, with whole-stage codegen (`doGenCode` emits a tight
@@ -72,10 +72,7 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  /** Register `graft_dot` in the session's function registry (idempotent) so
-    * it is usable from both SQL text and `call_function`.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
+  /** `a · b` over two array<float> columns, as a double. */
+  def dot(a: Column, b: Column): Column = GraftSqlShims.column(
+    DotProduct(GraftSqlShims.expression(a), GraftSqlShims.expression(b)))
 }

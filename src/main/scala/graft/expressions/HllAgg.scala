@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftSqlShims}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -95,7 +95,7 @@ object HllAgg {
 
   val DefaultP = 12 // 4096 registers = 4 KiB, σ ≈ 1.6%
 
-  /** splitmix64 finalizer — same mixer family as CountMinAgg.bucket. */
+  /** splitmix64 finalizer. */
   def mix(x: Long): Long = {
     var z = x + 0x9E3779B97F4A7C15L
     z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
@@ -127,8 +127,9 @@ object HllAgg {
     math.rint(est).toLong
   }
 
-  /** Register `graft_hll(token)` with the default p=12 geometry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hll", exprs => HllAgg(exprs.head, DefaultP), "built-in")
+  /** The distinct-count estimate of a bigint token column, with the
+    * default p=12 geometry.
+    */
+  def hll(token: Column): Column = GraftSqlShims.column(
+    HllAgg(GraftSqlShims.expression(token), DefaultP).toAggregateExpression())
 }

@@ -2,7 +2,7 @@ package graft.expressions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftSqlShims}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -17,7 +17,7 @@ import graft.functions.TextFunctions
   * signature of a group of 64-bit element tokens in ONE aggregate.
   *
   * The Column-level alternative (numPerm separate `min()` aggregates over
-  * numPerm permuted-hash projections — Dedup.minhashSignatures round 1)
+  * numPerm permuted-hash projections — the first MinHash signature form)
   * is semantically identical but generates numPerm aggregate buffers of
   * codegen per plan; janino compile time scales with aggregate count and
   * dominated the local wall-time. One TypedImperativeAggregate keeps a
@@ -96,11 +96,7 @@ case class MinHashAgg(
 }
 
 object MinHashAgg {
-  /** Register `graft_minhash(token)` (32 permutations) in the session
-    * registry; the analyzer wraps the AggregateFunction when it appears in
-    * an aggregation context.
-    */
-  def register(spark: SparkSession, numPerm: Int = 32): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", exprs => MinHashAgg(exprs.head, numPerm), "built-in")
+  /** The `numPerm`-permutation MinHash signature of a group's tokens. */
+  def minhash(token: Column, numPerm: Int): Column = GraftSqlShims.column(
+    MinHashAgg(GraftSqlShims.expression(token), numPerm).toAggregateExpression())
 }

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftSqlShims}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -89,8 +89,7 @@ case class ModeAgg(
 }
 
 object ModeAgg {
-  /** Register `graft_mode(value)` on the session. */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_mode", exprs => ModeAgg(exprs.head), "built-in")
+  /** The most frequent bigint of a group, ties to the smallest value. */
+  def mode(value: Column): Column = GraftSqlShims.column(
+    ModeAgg(GraftSqlShims.expression(value)).toAggregateExpression())
 }

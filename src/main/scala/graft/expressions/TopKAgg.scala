@@ -2,10 +2,10 @@ package graft.expressions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftSqlShims}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -124,16 +124,8 @@ object TopKAgg {
     }
   }
 
-  /** Register `graft_topk(score, id, k)` — k must be an integer literal. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk", exprs => {
-        require(exprs.length == 3, "graft_topk takes (score, id, k)")
-        val k = exprs(2) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_topk k must be an integer literal, got $other")
-        }
-        TopKAgg(exprs(0), exprs(1), k)
-      }, "built-in")
+  /** The k best (score, id) pairs of a group, score desc, id asc. */
+  def topk(score: Column, id: Column, k: Int): Column = GraftSqlShims.column(
+    TopKAgg(GraftSqlShims.expression(score), GraftSqlShims.expression(id), k)
+      .toAggregateExpression())
 }

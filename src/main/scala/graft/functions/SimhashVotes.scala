@@ -52,7 +52,7 @@ private[graft] final class SimhashVotes {
   }
 
   /** Majority-vote signature over everything added: bit b set iff
-    * 2·count(b) > n — SimHashAgg's rule, identical to the pipeline's.
+    * 2·count(b) > n — the SimHash rule, identical to the pipeline's.
     */
   def signature: Long = {
     if (pending > 0) flush()

@@ -132,53 +132,14 @@ object TextFunctions {
       (a, b)
     }
 
-  /** Per-element permuted hash h_i(x) = (a_i·(x mod p) + b_i) mod p for one
-    * minhash permutation, in Column form. The production signature path is
-    * the custom `graft_minhash` TypedImperativeAggregate
-    * (expressions.MinHashAgg — one aggregate, primitive buffer, identical
-    * arithmetic); this Column variant documents the construction and pins
-    * the aggregate's correctness in tests. NOTE: array-lambda
-    * (`transform`) based signatures are CodegenFallback in Spark —
-    * interpreted per row — so explode→aggregate is the scale path either
-    * way.
-    */
-  def permutedHash(token: Column, coeff: (Long, Long)): Column =
-    pmod(pmod(token, lit(MinhashPrime)) * coeff._1 + coeff._2, lit(MinhashPrime))
-
-  /** Per-ROW minhash signature kernel over a document's 64-bit shingle
-    * hashes — the streaming-side signature path: a stream computes each
-    * arriving document's signature in one narrow map (no explode, no
-    * aggregation state), where the batch path aggregates exploded tokens
-    * (expressions.MinHashAgg). Identical arithmetic and coefficients
-    * ([[permCoeffs]]/[[MinhashPrime]]), so stream and batch signatures are
-    * bit-equal for the same document (spec-pinned) and band buckets line
-    * up across the two pipelines. Min is idempotent, so multiset vs set
-    * of shingles cannot change the result.
-    */
-  def minhashSigKernel(numPerm: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val coeffs = permCoeffs(numPerm).toArray
-    val p = MinhashPrime
-    udf { (hs: Array[Long]) =>
-      val sig = Array.fill(numPerm)(Long.MaxValue)
-      var j = 0
-      while (j < hs.length) {
-        val base = java.lang.Math.floorMod(hs(j), p)
-        var i = 0
-        while (i < numPerm) {
-          val (a, b) = coeffs(i)
-          val h = java.lang.Math.floorMod(a * base + b, p)
-          if (h < sig(i)) sig(i) = h
-          i += 1
-        }
-        j += 1
-      }
-      sig
-    }
-  }
-
-  /** Per-ROW signature + band keys in ONE kernel — the streaming variant
-    * of [[minhashSigKernel]] + [[lshBands]]: signature arithmetic is
-    * bit-identical to the batch aggregate, band keys are a splitmix fold
+  /** Per-ROW minhash signature + band keys in ONE kernel over a
+    * document's 64-bit shingle hashes — the streaming-side path: a stream
+    * computes each arriving document's band keys in one narrow map (no
+    * explode, no aggregation state), where the batch path aggregates
+    * exploded tokens (expressions.MinHashAgg) and bands with
+    * [[lshBands]]. Signature arithmetic and coefficients
+    * ([[permCoeffs]]/[[MinhashPrime]]) are the batch aggregate's, so the
+    * signatures are bit-identical; band keys are a splitmix fold
     * of (band index, band's r signature values). The band HASH differs
     * from the batch `lshBands` xxhash64 — irrelevant to semantics, since
     * a band key collision means "the r signature values agree" under
@@ -234,31 +195,6 @@ object TextFunctions {
     array(bands: _*)
   }
 
-  /** Packed SimHash bit-count term in Column form: bits 4g..4g+3 of the
-    * token hash, each as a 16-bit count field of one long (caps at 65,535
-    * tokens per document). The production signature path is the custom
-    * `graft_simhash` TypedImperativeAggregate (expressions.SimHashAgg —
-    * whole signature in one aggregate); this Column construction
-    * documents the counting rule and pins the aggregate's correctness in
-    * tests.
-    */
-  def simhashPackedVotes(tokenHash: Column, group: Int): Column =
-    (0 until 4).map { k =>
-      shiftright(tokenHash, group * 4 + k).bitwiseAND(1) * lit(1L << (16 * k))
-    }.reduce(_ + _)
-
-  /** Assemble the 64-bit signature from 16 packed count sums + the token
-    * count: bit b is set iff more than half the token hashes set bit b
-    * (2·count > n ⟺ the ±1 vote sum is positive). Disjoint bit
-    * contributions combine with +, which equals OR here (including the
-    * sign bit: two's-complement add wraps).
-    */
-  def simhashFromPacked(packed: Seq[Column], nTokens: Column): Column =
-    (0 until 64).map { b =>
-      val cnt = shiftrightunsigned(packed(b / 4), 16 * (b % 4)).bitwiseAND(0xFFFFL)
-      when(cnt * 2 > nTokens, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** Hamming distance between two 64-bit simhashes. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
@@ -305,17 +241,16 @@ object TextFunctions {
     }
 
   /** One-pass token SimHash kernel — the compiled form of
-    * `explode(tokens(text)) → tokenHash → graft_simhash` for the two
+    * `explode(tokens(text)) → tokenHash → SimHash aggregate` for the two
     * shipped token hashes, used by the dedup_simhash entries (the
-    * declarative pipeline stays in Dedup.simhashSignatures as the spec
-    * reference). Tokenization replicates `tokens()` exactly (Spark trim
-    * = ASCII spaces only; `split("\\s+", -1)` keeps leading AND
-    * trailing empty tokens — Spark's split default limit is -1, unlike
-    * Java's String.split); docs whose token array is empty produce no
-    * aggregate row in the pipeline, so the kernel returns null and
-    * callers filter it. Hashes: xxhash64 = Spark's XXH64 over the
+    * declarative pipeline is the spec reference). Tokenization
+    * replicates `tokens()` exactly (Spark trim = ASCII spaces only;
+    * `split("\\s+", -1)` keeps leading AND trailing empty tokens —
+    * Spark's split default limit is -1, unlike Java's String.split);
+    * docs whose token array is empty produce no aggregate row in the
+    * pipeline, so the kernel returns null and callers filter it. Hashes: xxhash64 = Spark's XXH64 over the
     * token's UTF-8 bytes, seed 42; portable = the md5-prefix60 rule.
-    * Vote rule is SimHashAgg's (2·count > n). Pinned bit-equal to the
+    * Vote rule is SimHash's (2·count > n). Pinned bit-equal to the
     * pipeline by OperatorSpec on the fixture + whitespace/empty edges.
     */
   def tokenSimhash(c: Column, portable: Boolean): Column =

@@ -24,18 +24,8 @@ object Results {
       params: Map[String, String],
       measurements: Seq[Measurement])
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  private def jstr(s: String): String = "\"" + esc(s) + "\""
+  /** A JSON string literal (Bench.jstr escapes its body). */
+  private def jstr(s: String): String = "\"" + graft.Bench.jstr(s) + "\""
 
   private def jobj(fields: Seq[(String, String)]): String =
     fields.map { case (k, v) => s"${jstr(k)}: $v" }.mkString("{", ", ", "}")

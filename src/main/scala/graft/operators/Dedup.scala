@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.expressions.DotProduct
+import graft.expressions.MinHashAgg
+import graft.expressions.DotProduct.dot
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 
@@ -19,19 +20,18 @@ import graft.functions.VectorFunctions._
   *  - MinHash+LSH replaces the shingle join with a band-bucket join:
   *    candidates are pairs agreeing on ≥1 of b bands of r minhashes —
   *    expected cost is linear in data + output, then exact-Jaccard
-  *    verification. Signatures come from the custom `graft_minhash`
+  *    verification. Signatures come from the custom MinHash
   *    TypedImperativeAggregate (expressions.MinHashAgg): the whole
   *    NumPerm-permutation signature in one aggregate with map-side
   *    partial aggregation.
   *  - SimHash buckets on 16-bit chunks of a 64-bit signature (pigeonhole:
-  *    hamming ≤ 3 pairs must agree on ≥1 of 4 chunks); the signature is 16
-  *    packed-count aggregates over exploded token hashes, with a
-  *    hot-bucket cap.
+  *    hamming ≤ 3 pairs must agree on ≥1 of 4 chunks), with a hot-bucket
+  *    cap; the signature is one per-document projection
+  *    (TextFunctions.tokenSimhash), no aggregate.
   *  - Embedding near-dup is sketch-prefilter → grid equi-join → exact
   *    verify (see embeddingCosine — no nested-loop join in the plan).
   *  - clusters() turns pair matches into dedup groups: driver union-find
-  *    under a size guard, distributed star contraction (or min-label
-  *    propagation) past it.
+  *    under a size guard, distributed star contraction past it.
   */
 object Dedup {
 
@@ -373,58 +373,15 @@ object Dedup {
     }
   }
 
-  /** df-capped variant (unmemoized — the cap is a tuning parameter, not
-    * part of the canonical pair set). See ngramJaccardPlan for semantics.
+  /** Lazy plan + the per-query intermediates it persists (for lifecycle
+    * management and plan inspection in specs): PPJoin candidates over
+    * the family-shared prefix index, verified against the family-shared
+    * full-corpus shingle arrays. Both are family-cached, so the
+    * per-query list is empty.
     */
-  def ngramJaccardCapped(s: SparkSession, dir: String, dfCap: Long): DataFrame = {
-    val (result, shared) = ngramJaccardPlan(s, dir, dfCap)
-    CacheLifecycle.materialize(result, shared: _*)
-  }
-
-  /** Lazy plan + the shared intermediates it reads twice (for lifecycle
-    * management and plan inspection in specs).
-    *
-    * `dfCap` is the 100 TB index-side lever: shingles appearing in more
-    * than `dfCap` documents are dropped from the PREFIX INDEX (a shingle
-    * shared by millions of docs generates m²/2 candidate pairs and
-    * carries no discriminative signal) while verification still runs on
-    * the full shingle sets, so precision stays exact. With a finite cap
-    * the prefix/length filters operate on per-doc INDEXED-shingle counts
-    * (conservatively longer prefixes), and recall loss is confined to
-    * pairs whose shared shingles are all capped. Long.MaxValue (the
-    * default, used by the oracle-checked query) disables the cap — the
-    * result is then exactly PPJoin.
-    */
-  /** `candidateProportionalVerify` picks the verify-array strategy:
-    * false (default) builds sorted shingle arrays for EVERY document —
-    * an independent subtree that overlaps with candidate generation, the
-    * faster shape while the corpus-wide aggregate is cheap; true builds
-    * arrays only for docs appearing in a candidate pair (the incremental
-    * path's shape) — at 100 TB with a low duplicate rate this skips a
-    * full corpus-wide aggregate pass at the cost of serializing behind
-    * the candidate join, which is the right trade exactly when that pass
-    * stops being cheap. Both produce identical results (spec-pinned).
-    */
-  private[operators] def ngramJaccardPlan(s: SparkSession, dir: String,
-                               dfCap: Long = Long.MaxValue,
-                               candidateProportionalVerify: Boolean = false)
+  private[operators] def ngramJaccardPlan(s: SparkSession, dir: String)
   : (DataFrame, Seq[DataFrame]) = {
-    val sh = shinglePairs(s, dir)
-    // Per-doc prefix selection (rarest-first rank ≤ |d| − ⌈τ·|d|⌉ + 1) as
-    // ONE aggregate: collect the doc's (df, sh) pairs, sort the (small,
-    // doc-length-bounded) array, slice the prefix. Replaces the previous
-    // row_number window + sizes join — one exchange instead of a full
-    // partition sort plus an extra join, and n comes free as size(ranked).
-    // The uncapped index is the family-shared one; a finite dfCap filters
-    // the df table per-query (capped prefixes are conservatively longer).
-    val capped = dfCap != Long.MaxValue
-    val prefixKeyed =
-      if (!capped) corpusPrefix(s, dir)
-      else {
-        val docFreq = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= dfCap)
-        prefixIndex(sh, docFreq).select("doc_id", "sh", "n", "pos")
-      }
+    val prefixKeyed = corpusPrefix(s, dir)
     // PPJoin position filter: a prefix match at positions (pa, pb) bounds
     // the overlap by 1 + min(|a|−pa, |b|−pb); J ≥ τ requires overlap ≥
     // ⌈τ/(1+τ)·(|a|+|b|)⌉. Applied per matched prefix row INSIDE the join
@@ -442,20 +399,7 @@ object Dedup {
             ceil((col("a.n") + col("b.n")) * alpha))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    // per-query persist list: only intermediates NOT in the family cache
-    // (the family set is released by releasePairs, not per-query)
-    if (candidateProportionalVerify) {
-      val candIds = candidates.select(col("id_a").as("doc_id"))
-        .union(candidates.select(col("id_b").as("doc_id")))
-      val arrays = shingleArrays(sh.join(candIds, Seq("doc_id"), "left_semi"))
-      val perQuery = (if (capped) Seq(prefixKeyed) else Nil) ++
-        Seq(candidates, arrays)
-      (verifyJaccard(arrays, candidates), perQuery)
-    } else {
-      val arrays = corpusArrays(s, dir)
-      (verifyJaccard(arrays, candidates),
-        if (capped) Seq(prefixKeyed) else Nil)
-    }
+    (verifyJaccard(corpusArrays(s, dir), candidates), Nil)
   }
 
   /** Per-doc rarest-first prefix index (rank ≤ |d| − ⌈τ·|d|⌉ + 1 under
@@ -476,7 +420,7 @@ object Dedup {
       .select(col("doc_id"), col("t.sh").as("sh"), col("n"),
         (col("pos0") + 1).as("pos"))
 
-  /** MinHash signatures per document via the custom `graft_minhash`
+  /** MinHash signatures per document via the custom MinHash
     * TypedImperativeAggregate (one aggregate computing all NumPerm
     * permutation minima over a primitive buffer; partial-aggregation
     * friendly — see expressions.MinHashAgg for why this beats NumPerm
@@ -484,16 +428,11 @@ object Dedup {
     * tokens have no shingles and drop out (they cannot near-duplicate
     * anything at this granularity).
     */
-  def minhashSignatures(s: SparkSession, dir: String): DataFrame =
-    minhashSignaturesFrom(s, shinglePairs(s, dir))
-
-  private def minhashSignaturesFrom(s: SparkSession, sh: DataFrame): DataFrame = {
-    graft.expressions.MinHashAgg.register(s, NumPerm)
+  private def minhashSignaturesFrom(sh: DataFrame): DataFrame =
     sh.groupBy("doc_id")
-      .agg(call_function("graft_minhash", col("sh")).as("sig"))
+      .agg(MinHashAgg.minhash(col("sh"), NumPerm).as("sig"))
       .select(col("doc_id"), col("sig"),
         lshBands(col("sig"), NumPerm, NumBands).as("bands"))
-  }
 
   /** Exact-Jaccard verification of EXTERNALLY generated candidate pairs
     * (id_a, id_b) against this corpus — the batch verify stage the
@@ -515,7 +454,7 @@ object Dedup {
   def minhashLsh(s: SparkSession, dir: String): DataFrame = {
     val sh = shinglePairs(s, dir)
     val arrays = corpusArrays(s, dir)
-    val bands = minhashSignaturesFrom(s, sh)
+    val bands = minhashSignaturesFrom(sh)
       .select(col("doc_id"),
         posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
     val candidates = bands.as("a")
@@ -526,55 +465,12 @@ object Dedup {
     CacheLifecycle.materialize(verifyJaccard(arrays, candidates), bands)
   }
 
-  /** SimHash near-dup pairs: signature from exploded token hashes via the
-    * custom `graft_simhash` TypedImperativeAggregate (whole signature in
-    * one aggregate — expressions.SimHashAgg), candidates from 4×16-bit
-    * chunk buckets (pigeonhole: hamming ≤ 3 pairs must agree on ≥ 1 of 4
-    * chunks), verified by exact hamming distance ≤ 3.
-    *
-    * Token hashing is pluggable because production and verification pull
-    * in different directions: the DEFAULT is `xxhash64` — one non-crypto
-    * pass per token, the right constant factor when the hash runs on
-    * every token of a 100 TB corpus — while [[simhashPairsPortable]]
-    * swaps in the md5-prefix hash any SQL oracle can replay
-    * (TextFunctions.portableTokenHash; sig bits 60-63 structurally zero
-    * there, which the chunk bucketing and hamming verify are agnostic
-    * to). The two variants share every line of this pipeline except the
-    * hash expression (pinned by DedupSpec).
-    *
-    * Hot-bucket guard: a chunk value shared by m documents contributes
-    * m²/2 candidate pairs, so buckets larger than `maxBucket` are dropped
-    * (broadcast anti-join against the tiny hot-bucket list). At fixture
-    * scale no bucket comes near the cap; at 100 TB this bounds worst-case
-    * join fan-out — recall loss is confined to pairs whose other three
-    * chunks all differ, and real deployments add signature tables instead
-    * of raising the cap.
-    */
-  def simhashPairs(s: SparkSession, dir: String, maxBucket: Int = 100000,
-                   tokenHash: Column => Column = xxhash64(_)): DataFrame =
-    simhashBucketVerify(
-      simhashSignatures(Tables.documents(s, dir), tokenHash), maxBucket)
-
-  /** Declarative signature stage of [[simhashPairs]] — the reference
-    * pipeline for an arbitrary `tokenHash`, pinned bit-equal to the
-    * compiled kernel below by OperatorSpec. The bench entries run
-    * [[simhashSignaturesKernel]].
-    */
-  private[graft] def simhashSignatures(docs: DataFrame,
-                                       tokenHash: Column => Column): DataFrame = {
-    graft.expressions.SimHashAgg.register(docs.sparkSession)
-    docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-      .withColumn("h", tokenHash(col("tok")))
-      .groupBy("doc_id")
-      .agg(call_function("graft_simhash", col("h")).as("sig"))
-  }
-
-  /** One-pass compiled form of [[simhashSignatures]] for the two shipped
-    * token hashes: sig = f(text) as a pure projection — no per-token row
-    * explosion, no aggregate, no doc-keyed exchange of 520 B partial
-    * buffers (see TextFunctions.tokenSimhash for the exact-replication
-    * contract). r11, guide §4.2.
+  /** One-pass SimHash signature stage for the two shipped token hashes:
+    * sig = f(text) as a pure projection — no per-token row explosion, no
+    * aggregate, no doc-keyed exchange of 520 B partial buffers (see
+    * TextFunctions.tokenSimhash for the exact-replication contract; the
+    * declarative aggregate pipeline it replaced is the spec reference,
+    * pinned bit-equal on both hashes). r11, guide §4.2.
     */
   private[graft] def simhashSignaturesKernel(docs: DataFrame,
                                              portable: Boolean): DataFrame =
@@ -588,8 +484,29 @@ object Dedup {
       .select(col("doc_id"),
         graft.functions.TextFunctions.tokenSimhash(col("text"), portable).as("sig"))
 
-  /** Kernel-signature twin of [[simhashPairs]] for the shipped hashes —
-    * what the dedup_simhash / dedup_simhash_portable entries run.
+  /** SimHash near-dup pairs — what the dedup_simhash /
+    * dedup_simhash_portable entries run: a 64-bit signature per document
+    * ([[simhashSignaturesKernel]]), candidates from 4×16-bit chunk
+    * buckets (pigeonhole: hamming ≤ 3 pairs must agree on ≥ 1 of 4
+    * chunks), verified by exact hamming distance ≤ 3.
+    *
+    * The token hash is a choice because production and verification
+    * pull in different directions: `portable = false` is `xxhash64` —
+    * one non-crypto pass per token, the right constant factor when the
+    * hash runs on every token of a 100 TB corpus — while
+    * [[simhashPairsPortable]] takes the md5-prefix hash any SQL oracle
+    * can replay (TextFunctions.portableTokenHash; sig bits 60-63
+    * structurally zero there, which the chunk bucketing and hamming
+    * verify are agnostic to). The two variants share every line of this
+    * pipeline except the hash.
+    *
+    * Hot-bucket guard: a chunk value shared by m documents contributes
+    * m²/2 candidate pairs, so buckets larger than `maxBucket` are dropped
+    * (broadcast anti-join against the tiny hot-bucket list). At fixture
+    * scale no bucket comes near the cap; at 100 TB this bounds worst-case
+    * join fan-out — recall loss is confined to pairs whose other three
+    * chunks all differ, and real deployments add signature tables instead
+    * of raising the cap.
     */
   def simhashPairsKernel(s: SparkSession, dir: String,
                          maxBucket: Int = 100000,
@@ -634,7 +551,7 @@ object Dedup {
     (pairs, chunks)
   }
 
-  /** Oracle-portable [[simhashPairs]]: identical pipeline with the
+  /** Oracle-portable [[simhashPairsKernel]]: identical pipeline with the
     * md5-prefix token hash a SQL oracle replays bit-for-bit. This is the
     * correctness-gate entry; the xxhash64 default is the production
     * configuration (crypto hashing per token is a ~2× constant-factor tax
@@ -702,19 +619,14 @@ object Dedup {
 
   /** Duplicate clusters — connected components over the near-dup pair
     * graph (the step that turns pairwise matches into dedup groups with a
-    * canonical survivor). Min-label propagation: every vertex starts as
-    * its own label, each round adopts the minimum label among itself and
-    * its neighbors, converging in ≤ diameter rounds; each round is one
-    * join + one aggregate, and the convergence check is a count action.
-    * Near-dup clusters are short chains (diameter ≤ a few), so rounds are
-    * few; a 100 TB component run with adversarial diameters would switch
-    * to large-star/small-star contraction (O(log n) rounds, same join
-    * primitive).
+    * canonical survivor), through [[componentsOf]]: driver union-find
+    * while the pair set fits the `driverMaxPairs` guard, distributed
+    * large-star/small-star contraction (O(log n) rounds whatever the
+    * component diameter) past it. Output is (cluster_id, n_members).
     */
   def clusters(s: SparkSession, dir: String, maxRounds: Int = 20,
-               driverMaxPairs: Long = 10000000L,
-               distributedAlgo: String = "star"): DataFrame =
-    clusterMembers(s, dir, maxRounds, driverMaxPairs, distributedAlgo)
+               driverMaxPairs: Long = 10000000L): DataFrame =
+    clusterMembers(s, dir, maxRounds, driverMaxPairs)
       .groupBy("cluster_id").agg(count(lit(1)).as("n_members"))
 
   /** Per-document cluster assignment (doc_id → cluster_id = component
@@ -722,11 +634,10 @@ object Dedup {
     * [[purge]] consumes. Documents in no near-dup pair are absent.
     */
   def clusterMembers(s: SparkSession, dir: String, maxRounds: Int = 20,
-                     driverMaxPairs: Long = 10000000L,
-                     distributedAlgo: String = "star"): DataFrame =
+                     driverMaxPairs: Long = 10000000L): DataFrame =
     // ngramJaccard returns the memoized, already-materialized pair set
     componentsOf(s, ngramJaccard(s, dir).select(col("id_a"), col("id_b")),
-      maxRounds, driverMaxPairs, distributedAlgo)
+      maxRounds, driverMaxPairs)
 
   /** Connected components over ANY (id_a, id_b) pair frame — the
     * pair-graph → dedup-group step, shared by the text near-dup family
@@ -736,7 +647,6 @@ object Dedup {
   private[operators] def componentsOf(s: SparkSession, pairs: DataFrame,
                                       maxRounds: Int = 20,
                                       driverMaxPairs: Long = 10000000L,
-                                      distributedAlgo: String = "star",
                                       driverFinishCap: Long = 10000000L): DataFrame = {
     // driverMaxPairs == 0 forces the distributed path unconditionally —
     // skip the guard count (a full pass over the pair set) entirely
@@ -745,15 +655,12 @@ object Dedup {
     // construction (only near-dups appear), so up to `driverMaxPairs` the
     // component computation is driver-scale work — union-find in
     // milliseconds, zero iterative jobs. Past the guard (pathological
-    // duplication at 100 TB), fall through to a distributed algorithm:
-    // large-star/small-star contraction by default (O(log n) rounds
-    // regardless of component diameter), or min-label propagation
-    // (≤ diameter rounds — fine for the short-chain components near-dup
-    // graphs actually produce). Same result on every path, spec-pinned.
+    // duplication at 100 TB), fall through to large-star/small-star
+    // contraction (O(log n) rounds regardless of component diameter).
+    // Same result on both paths, spec-pinned.
     if (nPairs <= driverMaxPairs)
-      return driverUnionFind(s, pairs.collect().map(r => (r.getLong(0), r.getLong(1))))
-    if (distributedAlgo == "star") ccStarContraction(pairs, maxRounds, driverFinishCap)
-    else ccPropagation(pairs, maxRounds)
+      driverUnionFind(s, pairs.collect().map(r => (r.getLong(0), r.getLong(1))))
+    else ccStarContraction(pairs, maxRounds, driverFinishCap)
   }
 
   /** Driver-side union-find over a collected edge list → (doc_id,
@@ -824,62 +731,12 @@ object Dedup {
     CacheLifecycle.materialize(out)
   }
 
-  /** Distributed CC via min-label propagation: every vertex starts as its
-    * own label, each round adopts the minimum label among itself and its
-    * neighbors; converges in ≤ diameter rounds. The per-round
-    * joins/aggregates run at session parallelism and AQE coalesces the
-    * (tiny) post-shuffle partitions — no session-global conf mutation,
-    * which would race with concurrent queries on a shared session.
-    */
-  private[operators] def ccPropagation(pairs: DataFrame, maxRounds: Int): DataFrame = {
-    // NO coalesce here: this path only runs past the driver guard, where
-    // the edge set is large by definition — capping its parallelism would
-    // be the scale bug; AQE already coalesces small shuffles
-    val edges = pairs.select(col("id_a").as("a"), col("id_b").as("b"))
-      .union(pairs.select(col("id_b").as("a"), col("id_a").as("b")))
-      .persist()
-    // Every round CHECKPOINTS (not just persists): an iterative DataFrame
-    // algorithm otherwise nests each round's logical plan inside the
-    // next — caching shortcuts execution but the analyzer/optimizer still
-    // walk the whole accumulated tree, so driver planning time grows
-    // exponentially with rounds (the ConnectedComponentsSpec chain case
-    // wedged the driver before this). localCheckpoint truncates lineage
-    // to the materialized RDD each round.
-    var labels = pairs
-      .select(explode(array(col("id_a"), col("id_b"))).as("v")).distinct()
-      .withColumn("lbl", col("v")).transform(CacheLifecycle.roundCheckpoint)
-    var round = 0
-    var changed = 1L
-    while (changed > 0 && round < maxRounds) {
-      val msgs = edges.join(labels, col("b") === col("v"))
-        .select(col("a").as("v"), col("lbl"))
-      val next = labels.select("v", "lbl").union(msgs)
-        .groupBy("v").agg(min("lbl").as("lbl"))
-        // LAZY: the convergence count below scans next once and
-        // materializes it; labels is released only after that action
-        // (roundCheckpointLazy contract, r11)
-        .transform(CacheLifecycle.roundCheckpointLazy)
-      changed = next.as("n").join(labels.as("o"), "v")
-        .filter(col("n.lbl") =!= col("o.lbl")).count()
-      // the change-count above was the old frame's last consumer —
-      // release its blocks instead of leaving them to the ContextCleaner
-      CacheLifecycle.release(labels)
-      labels = next
-      round += 1
-    }
-    val out = labels.select(col("v").as("doc_id"), col("lbl").as("cluster_id"))
-      .localCheckpoint(eager = true) // then release the iteration state
-    CacheLifecycle.release(labels)
-    edges.unpersist(blocking = false)
-    out
-  }
-
   /** Distributed CC via alternating large-star/small-star contraction
     * (Kiveris et al., "Connected components in MapReduce and beyond",
     * SoCC 2014) — the adversarial-diameter scale path: O(log n) rounds
-    * regardless of component shape, where propagation needs diameter
-    * rounds (a 10⁶-long chain of near-dups would take 10⁶ propagation
-    * rounds but ~20 contraction rounds).
+    * regardless of component shape, where min-label propagation needs
+    * diameter rounds (a 10⁶-long chain of near-dups would take 10⁶
+    * propagation rounds but ~20 contraction rounds).
     *
     *  - large-star(u): link every LARGER neighbor of u to
     *    m(u) = min(Γ(u) ∪ {u});
@@ -892,8 +749,9 @@ object Dedup {
     */
   private[operators] def ccStarContraction(pairs: DataFrame, maxRounds: Int,
                                            driverFinishCap: Long = 10000000L): DataFrame = {
-    // checkpoint (not persist) per round — see ccPropagation: nested
-    // round-over-round logical plans blow up driver planning time even
+    // checkpoint (not persist) per round: an iterative DataFrame
+    // algorithm otherwise nests each round's logical plan inside the
+    // next, and driver planning time grows exponentially with rounds even
     // when execution reads the cache; truncating lineage keeps every
     // round's plan shallow. Parallelism follows the data; AQE coalesces
     // when small.
@@ -1057,7 +915,6 @@ object Dedup {
   private[operators] def embeddingCosinePlan(
       s: SparkSession, dir: String, threshold: Double = 0.45,
       numPlanes: Int = 256, grid: Int = 8): (DataFrame, DataFrame) = {
-    DotProduct.register(s)
     val dim = Dim
     // normed vectors shared with the ANN family (one scan+norm per corpus)
     val e = Similarity.corpusVectors(s, dir)
@@ -1085,7 +942,7 @@ object Dedup {
       .join(e.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
       .join(e.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
       .withColumn("cosine", round(
-        call_function("graft_dot", col("va"), col("vb")) / (col("na") * col("nb")), 6))
+        dot(col("va"), col("vb")) / (col("na") * col("nb")), 6))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
     (verified, e)
@@ -1130,7 +987,7 @@ object Dedup {
       .join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .withColumn("cosine", round(
-        call_function("graft_dot", col("a.v"), col("b.v")) /
+        dot(col("a.v"), col("b.v")) /
           (col("a.nrm") * col("b.nrm")), 6))
       .filter(col("cosine") >= threshold)
       .select(col("b.vec_id").as("vec_id"), col("b.cell").as("cell"),

@@ -114,7 +114,6 @@ object Governance {
     */
   def rtbfCascade(s: SparkSession, dir: String, mod: Long = 97L,
                   sampleK: Int = 5): DataFrame = {
-    graft.expressions.BottomKAgg.register(s)
     val ev = Tables.events(s, dir)
     val requested = col("user_id") % mod === 0
     val rows = ev.filter(requested)
@@ -140,8 +139,8 @@ object Governance {
       .select(date_trunc("hour", col("ts")).as("h"), col("user_id"))
       .withColumn("hv", hv)
       .groupBy("h")
-      .agg(call_function("graft_bottomk", col("hv"), col("user_id"),
-        lit(sampleK)).as("mins"))
+      .agg(graft.expressions.BottomKAgg.bottomk(col("hv"), col("user_id"), sampleK)
+        .as("mins"))
       .select(explode(col("mins").getField("id")).as("user_id"))
       .filter(requested)
       .agg(count(lit(1)).as("affected"))

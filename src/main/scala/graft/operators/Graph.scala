@@ -438,9 +438,9 @@ object Graph {
     * Rows-only by design: a transitive-closure SQL oracle materializes
     * O(V·labels) recursion state, intractable on a giant-component
     * graph (the dedup closures replay fine because near-dup clusters
-    * are tiny). GraphGovSpec pins the result three ways instead —
-    * star contraction == min-label propagation == driver union-find on
-    * the identical edge set.
+    * are tiny). GraphGovSpec pins the result instead — star
+    * contraction (hybrid and pure) == driver union-find on the identical
+    * edge set, and star-edge input == pair input.
     */
   def components(s: SparkSession, dir: String): DataFrame = {
     // Connectivity-equivalent STAR edges, not the clique pairs: an order's
@@ -500,7 +500,6 @@ object Graph {
     */
   def labelPropagation(s: SparkSession, dir: String, iters: Int = 2,
                        broadcastCap: Long = BroadcastNodeCap): DataFrame = {
-    graft.expressions.ModeAgg.register(s)
     val pairs = coPairs(s, dir)
     val edges = pairs.union(pairs.select(col("dst").as("src"), col("src").as("dst")))
     val deg = coDegrees(s, dir)
@@ -519,7 +518,7 @@ object Graph {
         .select(col("dst"), col("lbl"))
         .repartition(col("dst"))
         .groupBy(col("dst"))
-        .agg(call_function("graft_mode", col("lbl")).as("lbl"))
+        .agg(graft.expressions.ModeAgg.mode(col("lbl")).as("lbl"))
         .select(col("dst").as("node"), col("lbl"))
         .transform(CacheLifecycle.roundCheckpointLazy)
       pending = labels :: pending // superseded once `next` materializes

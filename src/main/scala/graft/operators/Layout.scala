@@ -33,7 +33,8 @@ object Layout {
 
   /** Oracle-checkable kernel: the z-value of every lineitem row over the
     * low 8 bits of (l_partkey, l_suppkey). Narrow codegen projection —
-    * the layout decision column exactly as [[zorderWrite]] computes it.
+    * the layout decision column a z-ordered write range-partitions and
+    * sorts on.
     */
   def zorderLineitem(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir).select(
@@ -41,41 +42,10 @@ object Layout {
       zvalue(pmod(col("l_partkey"), lit(256)).cast("int"),
         pmod(col("l_suppkey"), lit(256)).cast("int")).as("zval"))
 
-  /** Write `df` clustered by the z-value of (xCol % 2^bits, yCol % 2^bits):
-    * range-partition on the z-key into `numFiles` output files, sort within
-    * each partition, drop the helper column. Range partitioning keeps
-    * z-adjacent rows in the same file (equal-frequency boundaries via
-    * sampling), which is what makes per-file min/max rectangles small.
-    */
-  def zorderWrite(df: DataFrame, xCol: String, yCol: String, path: String,
-                  numFiles: Int, bits: Int = 8): Unit =
-    df.withColumn("__z", zvalue(
-        pmod(col(xCol), lit(1 << bits)).cast("int"),
-        pmod(col(yCol), lit(1 << bits)).cast("int")))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-
-  /** Skipping diagnostic: per-file min/max rectangle area over (xCol, yCol)
-    * for a parquet directory — the direct proxy for how many files a
-    * two-sided predicate can prune (smaller mean area = more pruning).
-    */
-  def fileBoundingBoxes(s: SparkSession, path: String,
-                        xCol: String, yCol: String): DataFrame =
-    s.read.parquet(path)
-      .groupBy(col("_metadata.file_path").as("file"))
-      .agg(min(xCol).as("x_min"), max(xCol).as("x_max"),
-        min(yCol).as("y_min"), max(yCol).as("y_max"),
-        count(lit(1)).as("rows"))
-      .select(col("file"), col("rows"),
-        ((col("x_max") - col("x_min") + 1) *
-          (col("y_max") - col("y_min") + 1)).as("bbox_area"))
-
   /** Data-skipping effectiveness, fully declaratively: assign every
     * lineitem row to the z-ordered pseudo-file it would land in (file =
     * z-value range of width 2¹⁶/64 — the equi-width declarative proxy
-    * for `zorderWrite`'s range partitioning), collect each file's
+    * for a z-ordered write's range partitioning), collect each file's
     * per-column min/max footer stats, and evaluate which files a
     * two-sided rectangle predicate (x,y ∈ [16,31]²) can prune without
     * opening: skip ⟺ the stats rectangle misses the query rectangle.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -148,33 +148,20 @@ object Multimodal {
     * the gram hash is modality-agnostic, which is the point: ONE
     * candidate/verify engine serves text, image, and audio near-dup.
     *
-    * `gramHash` is pluggable exactly like the simhash token hash:
-    * xxhash64 is the production default; [[phashPairsPortable]] swaps in
-    * the md5-prefix hash a SQL oracle replays (the fixture's payloads
-    * are ASCII text bytes, so the oracle's character 4-grams ARE the
-    * byte 4-grams).
+    * The gram hash is a choice exactly like the simhash token hash:
+    * `portableHash = false` is xxhash64, the production default;
+    * [[phashPairsPortable]] takes the md5-prefix hash a SQL oracle
+    * replays (the fixture's payloads are ASCII text bytes, so the
+    * oracle's character 4-grams ARE the byte 4-grams).
     *
     * Gram volume is n_bytes per payload (one hash per sliding window) —
-    * the same per-byte cost a decoder would pay; the explode is
-    * partition-parallel with no shuffle before the signature aggregate.
+    * the same per-byte cost a decoder would pay; the signature kernel is
+    * a per-row projection with no shuffle.
     */
   def phashPairs(s: SparkSession, dir: String, maxBucket: Int = 100000,
                  portableHash: Boolean = false): DataFrame =
-    // signature stage through the one-pass kernel (r11) — the pipeline
-    // form stays the spec reference, see phashSignaturesKernel
     phashPairsFromSigs(
       phashSignaturesKernel(asBinaryPayload(s, dir), portableHash), maxBucket)
-
-  /** Payload-level [[phashPairs]] — same rep-space verify + expansion as
-    * the portable twin (see [[phashPairsPortable]]): the quadratic
-    * candidate stage runs on DISTINCT signatures, copies come back by
-    * join. Exposed so specs can pin hash-variant equivalence on a
-    * synthetic corpus (the xxhash64 path has no SQL oracle).
-    */
-  private[operators] def phashPairsOf(payload: DataFrame,
-                                      gramHash: Column => Column,
-                                      maxBucket: Int = 100000): DataFrame =
-    phashPairsFromSigs(phashSignatures(payload, gramHash), maxBucket)
 
   /** Pair tail over a prepared (doc_id, sig) table. The signature table
     * is the per-byte work of the whole pipeline and is consumed by TWO
@@ -189,8 +176,8 @@ object Multimodal {
     * joins). r11: mm_dedup_phash_fast 24 jobs / ~4.4 s → measured
     * drop recorded in OPTIMIZATION_r11.md.
     */
-  private def phashPairsFromSigs(sigTable: DataFrame,
-                                 maxBucket: Int): DataFrame = {
+  private[operators] def phashPairsFromSigs(sigTable: DataFrame,
+                                           maxBucket: Int): DataFrame = {
     val sigs = sigTable.persist()
     val reps = sigs.groupBy("sig").agg(min("doc_id").as("rep_id"))
     val repPairs = Dedup.simhashBucketVerify(
@@ -222,44 +209,23 @@ object Multimodal {
   }
 
   /** Signature stage of [[phashPairs]] — (doc_id, sig) from a
-    * (doc_id, payload binary) frame: the declarative PIPELINE form
-    * (explode one row per byte offset → gram hash expression → the
-    * graft_simhash aggregate), kept as the executable reference for an
-    * arbitrary `gramHash` and pinned bit-equal to the kernel below by
-    * OperatorSpec. The bench entries run [[phashSignaturesKernel]].
-    */
-  private[graft] def phashSignatures(
-      payload: DataFrame,
-      gramHash: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
-  : DataFrame = {
-    graft.expressions.SimHashAgg.register(payload.sparkSession)
-    payload
-      .select(col("doc_id"), col("payload"),
-        length(col("payload")).cast("int").as("n"))
-      .filter(col("n") >= 4)
-      .select(col("doc_id"), col("payload"),
-        explode(sequence(lit(1), col("n") - 3)).as("off"))
-      .select(col("doc_id"),
-        gramHash(col("payload").substr(col("off"), lit(4))).as("h"))
-      .groupBy("doc_id")
-      .agg(call_function("graft_simhash", col("h")).as("sig"))
-  }
-
-  /** Compiled one-pass form of [[phashSignatures]] for the two shipped
-    * gram hashes (xxhash64 / md5-prefix60): sig = f(payload) as a pure
-    * per-row projection — no per-byte row explosion (the pipeline form
-    * materializes a sequence() array and one generator row PER PAYLOAD
-    * BYTE), no substr copy per gram, no aggregate, and NO doc-keyed
-    * exchange at all (the aggregate's partial buffers still shuffled
-    * doc-count × 520 B). The guide-§4.2 shape the rest of this file
+    * (doc_id, payload binary) frame, for the two shipped gram hashes
+    * (xxhash64 / md5-prefix60): sig = f(payload) as a pure per-row
+    * projection — no per-byte row explosion (the declarative pipeline it
+    * replaced, explode one row per byte offset → gram hash → SimHash
+    * aggregate, materializes a sequence() array and one generator row
+    * PER PAYLOAD BYTE), no substr copy per gram, no aggregate, and NO
+    * doc-keyed exchange at all (the aggregate's partial buffers still
+    * shuffled doc-count × 520 B). The guide-§4.2 shape the rest of this file
     * already uses for the decode/energy stubs: Spark distributes, the
     * kernel does the per-byte work batchwise. Hash replication is exact:
     * xxhash64 hashes the gram's 4 bytes in place with Spark's own XXH64
     * (seed 42, the xxhash64 expression's definition); the portable hash
     * assembles the md5 digest's first 60 bits exactly like
-    * TextFunctions.portableTokenHash. Vote rule is SimHashAgg's
-    * (2·count > n). OperatorSpec pins kernel == pipeline for BOTH
-    * hashes on the fixture corpus plus length-edge payloads.
+    * TextFunctions.portableTokenHash. Vote rule is SimHash's
+    * (2·count > n). OperatorSpec pins kernel == the declarative
+    * reference pipeline for BOTH hashes on the fixture corpus plus
+    * length-edge payloads.
     */
   private[graft] def phashSignaturesKernel(payload: DataFrame,
                                                portable: Boolean): DataFrame =
@@ -391,18 +357,18 @@ object Multimodal {
     * [[phashSigsPortable]] table shared with `mm_dedup_phash`.
     */
   def phashClusters(s: SparkSession, dir: String): DataFrame =
-    phashClustersOf(s, asBinaryPayload(s, dir),
-      Some(phashSigsPortable(s, dir)),
+    phashClustersOf(s, phashSigsPortable(s, dir),
       repPairs = Some(phashRepPairsPortable(s, dir)))
 
-  private[operators] def phashClustersOf(s: SparkSession, payload: DataFrame,
-                                         sigs: Option[DataFrame] = None,
+  /** [[phashClusters]] over a prepared (doc_id, sig) table; `repPairs`,
+    * when given, is the verified pair set over the signatures' min-id
+    * representatives.
+    */
+  private[operators] def phashClustersOf(s: SparkSession, sigs: DataFrame,
                                          maxBucket: Int = 100000,
                                          repPairs: Option[DataFrame] = None): DataFrame = {
-    val allSigs = sigs.getOrElse(
-      phashSignatures(payload, graft.functions.TextFunctions.portableTokenHash))
-    val reps = allSigs.groupBy("sig").agg(min("doc_id").as("rep_id"))
-    val copyEdges = allSigs.join(reps, Seq("sig"))
+    val reps = sigs.groupBy("sig").agg(min("doc_id").as("rep_id"))
+    val copyEdges = sigs.join(reps, Seq("sig"))
       .filter(col("doc_id") =!= col("rep_id"))
       .select(col("doc_id").as("id_a"), col("rep_id").as("id_b"))
     val pairs = repPairs.getOrElse(Dedup.simhashBucketVerify(

@@ -517,25 +517,6 @@ object Relational {
       .agg(count(lit(1)).as("n_customers"),
         round(sum("c_acctbal"), 2).as("sum_acctbal"))
 
-  /** Manual skew salting for a shuffled equi-join — the fallback when one
-    * fact-side key dominates and the small side is too large to broadcast
-    * (AQE's skew-join split handles sort-merge skew at runtime; salting is
-    * the plan-level lever that also works for hash joins and pre-AQE
-    * engines). The fact side gets a deterministic salt in [0, n) from a
-    * row-content hash (no RNG state — reshardable and rerunnable); the
-    * build side is exploded ×n so every (key, salt) bucket finds its
-    * match; the join key becomes (key, salt), spreading one hot key over
-    * n reducers. Result set is EXACTLY the plain join's (spec-pinned).
-    */
-  def saltedJoin(fact: DataFrame, build: DataFrame, key: String,
-                 numSalts: Int, saltSource: Column): DataFrame = {
-    val salted = fact.withColumn("__salt",
-      pmod(xxhash64(saltSource), lit(numSalts)).cast("int"))
-    val exploded = build.withColumn("__salt",
-      explode(sequence(lit(0), lit(numSalts - 1))))
-    salted.join(exploded, Seq(key, "__salt")).drop("__salt")
-  }
-
   /** Semi/anti join family: orders having at least one high-quantity
     * lineitem (LEFT SEMI — no row amplification, the probe side streams
     * against a build-side key set), excluding orders of customers in debt
@@ -1284,10 +1265,9 @@ object Relational {
     * `q20_approx_agg` covering the built-in HLL++ variant.
     */
   def sketchHllUsers(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.HllAgg.register(s)
     Tables.events(s, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(call_function("graft_hll", col("user_id")).as("n_users_est"),
+      .agg(graft.expressions.HllAgg.hll(col("user_id")).as("n_users_est"),
         count(lit(1)).as("n_events"))
   }
 
@@ -1451,12 +1431,11 @@ object Relational {
     * neighbor labels in `graph_label_prop` — the same expression).
     */
   def q58GroupMode(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.ModeAgg.register(s)
     Tables.customer(s, dir)
       .select(col("c_mktsegment"), col("c_nationkey"),
         floor(col("c_acctbal") / 1000.0).cast("long").as("band"))
       .groupBy("c_mktsegment", "c_nationkey")
-      .agg(call_function("graft_mode", col("band")).as("modal_band"),
+      .agg(graft.expressions.ModeAgg.mode(col("band")).as("modal_band"),
         count(lit(1)).as("n_customers"))
   }
 
@@ -1471,10 +1450,9 @@ object Relational {
     * nightly build + the whole query family.
     */
   def q57BitmapCohorts(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.BitmapAgg.register(s)
     val bms = Tables.events(s, dir)
       .groupBy("event_type")
-      .agg(call_function("graft_bitmap", col("user_id")).as("bm"))
+      .agg(graft.expressions.BitmapAgg.bitmap(col("user_id")).as("bm"))
     val interCount = udf { (a: Array[Byte], b: Array[Byte]) =>
       graft.expressions.BitmapAgg.intersectCount(a, b) }
     val card = udf { (a: Array[Byte]) =>

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.expressions.DotProduct
+import graft.expressions.TopKAgg
+import graft.expressions.DotProduct.dot
 import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over the `embeddings` fixture
@@ -23,21 +24,18 @@ import graft.functions.VectorFunctions._
   */
 object Similarity {
 
-  /** Bounded per-query top-k via the custom `graft_topk` aggregate
+  /** Bounded per-query top-k via the custom top-k aggregate
     * (expressions.TopKAgg): map-side partial aggregation contributes at
     * most k candidates per query per partition to the shuffle — no sort
     * of the scored stream, unlike the row_number window form this
     * replaced (which shuffles and sorts every scored row).
     */
-  private def topKPerQuery(s: SparkSession, scored: DataFrame, k: Int): DataFrame = {
-    graft.expressions.TopKAgg.register(s)
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
     scored.groupBy("query_id")
-      .agg(call_function("graft_topk",
-        col("cosine"), col("neighbor_id"), lit(k)).as("top"))
+      .agg(TopKAgg.topk(col("cosine"), col("neighbor_id"), k).as("top"))
       .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("query_id"), col("t.id").as("neighbor_id"),
         col("t.score").as("cosine"), (col("pos") + 1).cast("int").as("rank"))
-  }
 
   /** Normed corpus vectors (vec_id, v, nrm) — the subtree every ANN
     * operator (and the embedding near-dup) starts from, family-shared via
@@ -47,7 +45,6 @@ object Similarity {
     * `ann_brute_topk` baseline entry.
     */
   private[operators] def corpusVectors(s: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(s)
     // index-ingest hygiene: a null embedding (failed upstream encode) is
     // not a vector — exclude it here, the boundary every vector operator
     // shares, instead of null-guarding every kernel and driver collect.
@@ -56,7 +53,7 @@ object Similarity {
       Tables.embeddings(s, dir)
         .filter(col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(call_function("graft_dot", col("v"), col("v")))))
+        .withColumn("nrm", sqrt(dot(col("v"), col("v")))))
   }
 
   /** Exact top-k cosine neighbors for each query vector (vec_id < numQueries),
@@ -79,8 +76,8 @@ object Similarity {
       .select(
         col("query_id"),
         col("vec_id").as("neighbor_id"),
-        round(call_function("graft_dot", col("v"), col("qv")) / (col("nrm") * col("qn")), 6).as("cosine"))
-    topKPerQuery(s, scored, k)
+        round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 6).as("cosine"))
+    topKPerQuery(scored, k)
   }
 
   /** Sign-pattern bucket id from `numPlanes` hyperplane projections
@@ -106,8 +103,8 @@ object Similarity {
       .select(
         col("query_id"),
         col("vec_id").as("neighbor_id"),
-        round(call_function("graft_dot", col("v"), col("qv")) / (col("nrm") * col("qn")), 6).as("cosine"))
-    CacheLifecycle.materialize(topKPerQuery(s, scored, k))
+        round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 6).as("cosine"))
+    CacheLifecycle.materialize(topKPerQuery(scored, k))
   }
 
   /** Multi-probe LSH ANN (Lv et al., "Multi-probe LSH", VLDB 2007): the
@@ -138,8 +135,8 @@ object Similarity {
       .select(
         col("query_id"),
         col("vec_id").as("neighbor_id"),
-        round(call_function("graft_dot", col("v"), col("qv")) / (col("nrm") * col("qn")), 6).as("cosine"))
-    CacheLifecycle.materialize(topKPerQuery(s, scored, k))
+        round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 6).as("cosine"))
+    CacheLifecycle.materialize(topKPerQuery(scored, k))
   }
 
   /** All-points kNN graph: every corpus vector's top-k cosine neighbors
@@ -181,8 +178,8 @@ object Similarity {
       .select(
         col("vec_id").as("query_id"),
         col("neighbor_id"),
-        round(call_function("graft_dot", col("v"), col("nv")) / (col("nrm") * col("nn")), 6).as("cosine"))
-    topKPerQuery(s, scored, k)
+        round(dot(col("v"), col("nv")) / (col("nrm") * col("nn")), 6).as("cosine"))
+    topKPerQuery(scored, k)
   }
 
   /** Incremental kNN — the production-ingest twin of [[knnGraph]] (the
@@ -213,8 +210,8 @@ object Similarity {
       .select(
         col("vec_id").as("query_id"),
         col("neighbor_id"),
-        round(call_function("graft_dot", col("v"), col("nv")) / (col("nrm") * col("nn")), 6).as("cosine"))
-    topKPerQuery(s, scored, k)
+        round(dot(col("v"), col("nv")) / (col("nrm") * col("nn")), 6).as("cosine"))
+    topKPerQuery(scored, k)
   }
 
   /** IVF-style ANN: a coarse quantizer assigns every corpus vector to a
@@ -266,8 +263,8 @@ object Similarity {
     val scored = assigned.join(broadcast(probeDf.join(q, "query_id")), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(call_function("graft_dot", col("v"), col("qv")) / (col("nrm") * col("qn")), 6).as("cosine"))
-    CacheLifecycle.materialize(topKPerQuery(s, scored, k))
+        round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 6).as("cosine"))
+    CacheLifecycle.materialize(topKPerQuery(scored, k))
   }
 
   /** IVF-PQ ANN (Jégou et al., "Product quantization for nearest neighbor
@@ -363,8 +360,8 @@ object Similarity {
       .filter(col("rn") <= rerank)
       .select(col("query_id"),
         col("vec_id").as("neighbor_id"),
-        round(call_function("graft_dot", col("v"), col("qv")) / (col("nrm") * col("qn")), 6).as("cosine"))
-    topKPerQuery(s, cand, k)
+        round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 6).as("cosine"))
+    topKPerQuery(cand, k)
   }
 
   /** Hybrid retrieval via reciprocal-rank fusion (Cormack/Clarke/Büttcher
@@ -579,10 +576,9 @@ object Similarity {
   }
 
   def normalize(s: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(s)
     Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").as("v"))
-      .withColumn("nrm", sqrt(call_function("graft_dot", col("v"), col("v"))))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
       .select(col("vec_id"), col("nrm"),
         posexplode(col("v")).as(Seq("dim_idx", "x")))
       .select(col("vec_id"), round(col("nrm"), 6).as("norm"), col("dim_idx"),
@@ -642,7 +638,7 @@ object Similarity {
       .withColumn("doc_id", expr(s"vec_id div $vecsPerDoc"))
       .crossJoin(broadcast(q))
       .select(col("query_id"), col("qpos"), col("doc_id"),
-        round(call_function("graft_dot", col("v"), col("qv")) /
+        round(dot(col("v"), col("qv")) /
           (col("nrm") * col("qn")), 6).as("cos"))
     val maxes = scored.groupBy("query_id", "doc_id")
       .agg(max(when(col("qpos") === 0, col("cos"))).as("c0"),
@@ -651,7 +647,7 @@ object Similarity {
     val summed = maxes.select(col("query_id"), col("doc_id").as("neighbor_id"),
       round((0 until vecsPerDoc).map(i => col(s"c$i")).reduce(_ + _), 6).as("cosine"))
     CacheLifecycle.materialize(
-      topKPerQuery(s, summed, k).withColumnRenamed("cosine", "maxsim"))
+      topKPerQuery(summed, k).withColumnRenamed("cosine", "maxsim"))
   }
 
   /** Centroid summary per label — the "coarse quantizer" statistics an IVF
@@ -816,19 +812,18 @@ object Similarity {
     */
   def annFiltered(s: SparkSession, dir: String, numQueries: Int = 10,
                   k: Int = 5, label: Int = 3): DataFrame = {
-    DotProduct.register(s)
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").as("v"), col("label"))
-      .withColumn("nrm", sqrt(call_function("graft_dot", col("v"), col("v"))))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val q = e.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn"))
     val scored = e.filter(col("label") === label)
       .join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(call_function("graft_dot", col("v"), col("qv")) /
+        round(dot(col("v"), col("qv")) /
           (col("nrm") * col("qn")), 6).as("cosine"))
-    topKPerQuery(s, scored, k)
+    topKPerQuery(scored, k)
   }
 
   /** Index-persistence serve path — the deployment split every ANN
@@ -858,9 +853,9 @@ object Similarity {
       val scored = idx.join(broadcast(q), Seq("bucket"))
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(call_function("graft_dot", col("v"), col("qv")) /
+          round(dot(col("v"), col("qv")) /
             (col("nrm") * col("qn")), 6).as("cosine"))
-      val res = topKPerQuery(s, scored, k)
+      val res = topKPerQuery(scored, k)
       val out = res.collect()
       s.createDataFrame(java.util.Arrays.asList(out: _*), res.schema)
     } finally {
@@ -1041,9 +1036,9 @@ object Similarity {
       .select(col("v").as("qv"), col("nrm").as("qn"))
     val scored = e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
       .select(lit(0L).as("query_id"), col("vec_id").as("neighbor_id"),
-        round(call_function("graft_dot", col("v"), col("qv")) /
+        round(dot(col("v"), col("qv")) /
           (col("nrm") * col("qn")), 6).as("cosine"))
-    val cand = topKPerQuery(s, scored, kArm)
+    val cand = topKPerQuery(scored, kArm)
       .select(col("neighbor_id").as("doc_id"), col("cosine").as("rel"))
     val candRows = cand.collect().map(r => (r.getLong(0), r.getDouble(1)))
     val ids = candRows.map(_._1)
@@ -1052,7 +1047,7 @@ object Similarity {
       .join(cs.select(col("vec_id").as("idb"), col("v").as("vb"), col("nrm").as("nb")),
         col("ida") =!= col("idb"))
       .select(col("ida"), col("idb"),
-        round(call_function("graft_dot", col("va"), col("vb")) /
+        round(dot(col("va"), col("vb")) /
           (col("na") * col("nb")), 6).as("sim"))
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     // greedy selection on the rounded doubles (HALF_UP = Spark/DuckDB round)
@@ -1098,15 +1093,15 @@ object Similarity {
     val denom = (numQueries * k).toDouble
     dims.map { d =>
       val t = e.select(col("vec_id"), slice(col("v"), 1, d).as("vt"))
-        .withColumn("nt", sqrt(call_function("graft_dot", col("vt"), col("vt"))))
+        .withColumn("nt", sqrt(dot(col("vt"), col("vt"))))
       val q = t.filter(col("vec_id") < numQueries)
         .select(col("vec_id").as("query_id"), col("vt").as("qv"),
           col("nt").as("qn"))
       val scored = t.join(broadcast(q), col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(call_function("graft_dot", col("vt"), col("qv")) /
+          round(dot(col("vt"), col("qv")) /
             (col("nt") * col("qn")), 6).as("cosine"))
-      topKPerQuery(s, scored, k)
+      topKPerQuery(scored, k)
         .join(truth, Seq("query_id", "neighbor_id"), "left_semi")
         .agg(count(lit(1)).as("n_hits"))
         .select(lit(d).as("trunc_dim"), col("n_hits"),

@@ -40,13 +40,11 @@ object Sketches {
     * the estimates against exact distinct counts at that tolerance.
     */
   def thetaOverlap(s: SparkSession, dir: String, k: Int = 256): DataFrame = {
-    graft.expressions.BottomKAgg.register(s)
     val hv = TextFunctions.portableTokenHash(col("user_id").cast("string"))
     val sk = Tables.events(s, dir)
       .select(col("event_type"), hv.as("hv"))
       .groupBy("event_type")
-      .agg(call_function("graft_bottomk", col("hv"), col("hv"), lit(k))
-        .as("mins"))
+      .agg(graft.expressions.BottomKAgg.bottomk(col("hv"), col("hv"), k).as("mins"))
       .select(col("event_type"),
         col("mins").getField("key").as("hashes"),
         size(col("mins")).as("sz"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextFunctions._
+import graft.expressions.DotProduct.dot
 
 /** Text-analysis operators for training-data curation over `documents`:
   * token counting, quality scoring, language identification (marker-word
@@ -575,12 +576,6 @@ object TextOps {
     * corpus, with a deterministic rank (count desc, term asc). The plan is
     * the one that scales: explode → two-phase hash aggregation on the term
     * key → TakeOrdered k (no full sort of the dictionary).
-    *
-    * The approximate counterpart is the `graft_cms` Count-Min sketch
-    * aggregate (expressions.CountMinAgg — one 32 KiB sketch per partition
-    * merged associatively, never an underestimate), spec-bounded against
-    * these exact counts; at 100 TB the sketch replaces the term shuffle
-    * when an ε-approximate answer suffices.
     */
   def heavyHitters(s: SparkSession, dir: String, k: Int = 20): DataFrame =
     heavyHittersOf(Tables.documents(s, dir), k)
@@ -627,7 +622,6 @@ object TextOps {
     * the operators it composes.
     */
   def trainingManifest(s: SparkSession, dir: String, evalMod: Int = 10): DataFrame = {
-    graft.expressions.DotProduct.register(s)
     val t = tokens(col("text"))
     val quality = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), col("lang"),
@@ -639,7 +633,7 @@ object TextOps {
       .filter(col("contaminated")).select("doc_id")
     val purged = Dedup.purge(s, dir).filter(col("purge")).select("doc_id")
     val emb = Tables.embeddings(s, dir).select(col("vec_id").as("doc_id"),
-      sqrt(call_function("graft_dot", col("embedding"), col("embedding"))).as("nrm"))
+      sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
     quality
       .join(contaminated, Seq("doc_id"), "left_anti")
       .join(purged, Seq("doc_id"), "left_anti")

@@ -147,8 +147,9 @@ object TopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 
-  /** Idempotently enable the rewrite on a live session (the programmatic
-    * mirror of `spark.sql.extensions=graft.plans.GraftExtensions`).
+  /** Idempotently enable the rewrite on a live session. It is opt-in:
+    * stock WindowGroupLimit measured ahead of it at sf0.1, sf1 and sf10
+    * (SCALE.md r11), so only `q68_window_topk_native` enables it.
     * extraOptimizations run AFTER the main optimizer batches, so the
     * rule sees pruned/pushed-down plans — including any WindowGroupLimit
     * the built-in top-k inference already inserted.

@@ -2,6 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.expressions.{BottomKAgg, HllAgg, TopKAgg}
+import graft.expressions.DotProduct.dot
 
 /** Structured Streaming surface. The reference is batch-only (SURVEY.md §0),
   * so this is engine-completeness beyond the reference: windowed streaming
@@ -398,7 +400,7 @@ object StreamOps {
     * (even) is the STATIC side, bucketed once by the same 8-plane LSH
     * sign pattern. The stream-static equi-join on the bucket key is
     * STATELESS (no watermark, no join state — the static side is a
-    * lookup), and the only state is the per-query `graft_topk` buffer:
+    * lookup), and the only state is the per-query `TopKAgg` buffer:
     * bounded at k entries per streamed vector, exactly the result being
     * built. Draining the finite fixture therefore ends at precisely the
     * batch incremental result, so the same DuckDB oracle applies.
@@ -414,8 +416,6 @@ object StreamOps {
                       numPlanes: Int = 8): DataFrame = {
     import graft.functions.VectorFunctions
     val ss = streamingSession(s)
-    graft.expressions.DotProduct.register(ss)
-    graft.expressions.TopKAgg.register(ss)
     val dim = VectorFunctions.Dim
     val bucketOf = VectorFunctions.bucketKernel(
       VectorFunctions.hyperplanesFlat(numPlanes, dim), dim)
@@ -428,19 +428,19 @@ object StreamOps {
       .filter(col("vec_id") % 2 === 0 && col("embedding").isNotNull)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"))
       .withColumn("bucket", bucketOf(col("nv")))
-      .withColumn("nn", sqrt(call_function("graft_dot", col("nv"), col("nv"))))
+      .withColumn("nn", sqrt(dot(col("nv"), col("nv"))))
     val stream = ss.readStream.schema(schema)
       .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
       .filter(col("vec_id") % 2 === 1 && col("embedding").isNotNull)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
       .withColumn("bucket", bucketOf(col("qv")))
-      .withColumn("qn", sqrt(call_function("graft_dot", col("qv"), col("qv"))))
+      .withColumn("qn", sqrt(dot(col("qv"), col("qv"))))
       .join(corpus, Seq("bucket"))
       .select(col("query_id"),
-        round(call_function("graft_dot", col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("cosine"),
+        round(dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("cosine"),
         col("neighbor_id"))
       .groupBy("query_id")
-      .agg(call_function("graft_topk", col("cosine"), col("neighbor_id"), lit(k)).as("top"))
+      .agg(TopKAgg.topk(col("cosine"), col("neighbor_id"), k).as("top"))
     val q = stream.writeStream
       .outputMode("complete")
       .format("memory")
@@ -452,37 +452,6 @@ object StreamOps {
       .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("query_id"), col("t.id").as("neighbor_id"),
         col("t.score").as("cosine"), (col("pos") + 1).cast("int").as("rank"))
-  }
-
-  /** Streaming Count-Min sketch — the custom `graft_cms` aggregate run as
-    * a streaming global aggregation: term frequencies accumulate across
-    * micro-batches in a constant 32 KiB of state (the sketch IS the
-    * aggregation buffer; elementwise-+ merge makes it a valid streaming
-    * state monoid). Complete mode re-emits the current sketch each batch;
-    * draining a finite source therefore ends at EXACTLY the batch-built
-    * sketch (spec-pinned) — the streaming ingest path for heavy-hitter
-    * monitoring without a term shuffle.
-    */
-  def streamingSketch(s: SparkSession, dir: String): Array[Long] = {
-    val ss = streamingSession(s)
-    graft.expressions.CountMinAgg.register(ss)
-    val path = s"$dir/documents.parquet"
-    val schema = graft.Tables.schemaOf(ss, path)
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val stream = ss.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      .select(explode(graft.functions.TextFunctions.tokens(lower(col("text"))))
-        .as("term"))
-      .select(xxhash64(col("term")).as("h"))
-      .agg(call_function("graft_cms", col("h")).as("sketch"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    ss.table(name).collect()(0).getSeq[Long](0).toArray
   }
 
   /** One LSH band occurrence of a streaming document (ts = arrival time,
@@ -497,12 +466,12 @@ object StreamOps {
   /** Streaming MinHash-LSH near-dup detection with BOUNDED per-bucket
     * state — the streaming twin of the batch `Dedup.minhashLsh` pipeline:
     *
-    *  1. each arriving document maps to its 32-permutation signature in
-    *     ONE narrow projection (TextFunctions.minhashSigKernel over the
-    *     xxhash64'd shingles — bit-equal to the batch MinHashAgg
-    *     signature, so band buckets line up across pipelines);
-    *  2. band keys explode to (band_idx, band_hash) rows — the SAME
-    *     Column expression as the batch path (lshBands);
+    *  1. each arriving document maps to its band keys in ONE narrow
+    *     projection (TextFunctions.bandKeysKernel over the xxhash64'd
+    *     shingles — its 32-permutation signature is bit-equal to the
+    *     batch MinHashAgg signature, so two documents share a band
+    *     bucket here exactly when they share one in the batch path);
+    *  2. band keys explode to (band_idx, band_hash) rows;
     *  3. `flatMapGroupsWithState` keyed by band bucket emits (new, old)
     *     candidate pairs against the bucket's remembered doc ids. State
     *     per bucket is a FIFO of ≤ `maxBucket` ids plus an EVENT-TIME TTL
@@ -1151,7 +1120,6 @@ object StreamOps {
   def streamHllUsers(s: SparkSession, dir: String,
                      windowLen: String = "1 hour"): DataFrame = {
     val ss = streamingSession(s)
-    graft.expressions.HllAgg.register(ss)
     val path = s"$dir/events.parquet"
     val schema = graft.Tables.schemaOf(ss, path)
     val name = s"graft_stream_${counter.incrementAndGet()}"
@@ -1160,7 +1128,7 @@ object StreamOps {
       .transform(graft.Tables.normalizeTs)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), windowLen))
-      .agg(call_function("graft_hll", col("user_id")).as("n_users_est"))
+      .agg(HllAgg.hll(col("user_id")).as("n_users_est"))
     val q = stream.writeStream
       .outputMode("complete")
       .format("memory")
@@ -1229,7 +1197,6 @@ object StreamOps {
   def streamSampleBottomK(s: SparkSession, dir: String, k: Int = 5,
                           windowLen: String = "1 hour"): DataFrame = {
     val ss = streamingSession(s)
-    graft.expressions.BottomKAgg.register(ss)
     val path = s"$dir/events.parquet"
     val schema = graft.Tables.schemaOf(ss, path)
     val name = s"graft_stream_${counter.incrementAndGet()}"
@@ -1242,8 +1209,7 @@ object StreamOps {
           col("user_id").cast("string")).as("h"),
         col("user_id"))
       .groupBy(window(col("ts"), windowLen))
-      .agg(call_function("graft_bottomk", col("h"), col("user_id"), lit(k))
-        .as("sample"))
+      .agg(BottomKAgg.bottomk(col("h"), col("user_id"), k).as("sample"))
     val q = stream.writeStream
       .outputMode("complete")
       .format("memory")

@@ -10,30 +10,25 @@ import org.apache.spark.sql.SparkSession
   * serialize/deserialize on shuffle, broadcast transport, and the
   * driver-map regime's broadcast variables.
   *
-  * The slice covers each custom-expression family (simhash, minhash,
-  * top-k, HLL, bitmap, dot-product kernels), the driver-rank graph
-  * regime, a streaming query, and a storage round-trip. Prints one
-  * PASS/FAIL line per query plus a summary; exit code 1 on any failure.
+  * The slice covers the custom expressions (minhash, top-k, HLL, bitmap,
+  * mode, bottom-k, dot product), the simhash and phash kernels, the
+  * driver-rank graph regime, streaming queries, and storage round-trips.
+  * Prints one PASS/FAIL line per query plus a summary; exit code 1 on any
+  * failure.
   *
   * Run with `SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13
   * sbt "runMain graft.tools.ClusterSmoke"` — the standalone Worker
   * launches executor JVMs through SPARK_HOME's launcher, and
   * SPARK_SCALA_VERSION skips its source-tree build-directory probe
-  * (release layouts don't have one). Verified 25/25 green this round
-  * (the slice now also covers the stateful-streaming tail —
-  * flatMapGroupsWithState session timeouts, watermark-late audits and
-  * CDC last-writer-wins state cross JVM boundaries through the
-  * HDFS-backed state store — on top of the theta sketch's cross-JVM
-  * partial merges, k-core's iterative broadcasts, dq_profile's
-  * per-column union branches, the blocked linkage self-join, and the
-  * BPE trainer's iterative window algebra with driver-literal rules).
+  * (release layouts don't have one). Last green run: 32/32 (the 28
+  * entries plus the 4 hotkey runs) on the sf0.01 fixture.
   */
 object ClusterSmoke {
 
   private[graft] val Slice = Seq(
     "q01_group_count",      // baseline agg
     "q05_multi_agg_skew",   // custom skew aggregate
-    "dedup_simhash",        // SimHashAgg across executors
+    "dedup_simhash",        // token simhash kernel across executors
     "dedup_minhash_lsh",    // MinHashAgg
     "ann_brute_topk",       // DotProduct kernel + TopKAgg
     "sketch_hll_users",     // HllAgg serialize/deserialize

@@ -4,7 +4,7 @@ package graft.tools
   * the r11 optimization round's plan-evidence artifact
   * (`plans/r11/<query>_{before,after}.txt`). The session is built by the
   * same GraftSession builder as Bench, so the dumped plan is the plan the
-  * bench executes (same partition regime, same extensions). The queries
+  * bench executes (same partition regime, same engine conf). The queries
   * are Bench's: every entry, or the SPARK_GRAFT_QUERIES selection.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix>

@@ -22,7 +22,7 @@ object Smoke {
     "dedup_simhash", "ann_brute_topk", "ann_ivf_pq", "emb_knn_graph",
     "text_token_counts", "doc_quality_calibrate", "text_lang_id",
     "text_decontaminate", "mm_dedup_phash", "mm_dedup_phash_fast",
-    "mm_phash_clusters", "sketch_hll_users", "stream_sessionize",
+    "mm_phash_clusters", "sketch_hll_users", "stream_hll_users", "stream_sessionize",
     "lake_time_travel", "lake_vacuum_orphans", "graph_components",
     "tok_bpe_encode", "ml_split_group")
 

@@ -34,6 +34,12 @@ class BenchSpec extends AnyFunSuite {
     assert(failed === Seq("b", "c"))
   }
 
+  test("the default detail path is relative, so a run writes into its own checkout") {
+    val p = Bench.defaultOutPath("20260101T000000", "c4_sw1")
+    assert(!p.isAbsolute)
+    assert(p === java.nio.file.Paths.get("bench_runs", "bench_20260101T000000_c4_sw1.json"))
+  }
+
   test("the record lists failed queries and totals only the queries that ran") {
     val fields = Bench.resultFields(Seq("a" -> 1.5, "d" -> 0.25), Seq("b"))
     assert(fields ===

@@ -79,7 +79,6 @@ class GraftSessionSpec extends AnyFunSuite {
 
   test("the engine conf is pinned entry by entry") {
     assert(GraftSession.engineConf == Map(
-      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false",

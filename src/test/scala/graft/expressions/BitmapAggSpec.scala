@@ -8,11 +8,10 @@ import graft.operators.SparkTestSession.{sf, spark}
 class BitmapAggSpec extends AnyFunSuite {
 
   test("bitmap serialization is canonical and partitioning-invariant") {
-    BitmapAgg.register(spark)
     val ev = graft.Tables.events(spark, sf)
     def bitmaps(df: org.apache.spark.sql.DataFrame): Map[String, Seq[Byte]] =
       df.groupBy("event_type")
-        .agg(call_function("graft_bitmap", col("user_id")).as("bm"))
+        .agg(BitmapAgg.bitmap(col("user_id")).as("bm"))
         .collect()
         .map(r => r.getString(0) -> r.getAs[Array[Byte]]("bm").toSeq).toMap
     val a = bitmaps(ev)

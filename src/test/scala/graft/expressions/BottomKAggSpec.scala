@@ -8,7 +8,6 @@ import graft.operators.SparkTestSession.spark
 class BottomKAggSpec extends AnyFunSuite {
 
   test("bottom-k sample is distinct, ordered, and partitioning-invariant") {
-    BottomKAgg.register(spark)
     import spark.implicits._
     // duplicate observations of the same id must sample once
     val rows = Seq((1L, 50L, 500L), (1L, 50L, 500L), (1L, 10L, 100L),
@@ -17,7 +16,7 @@ class BottomKAggSpec extends AnyFunSuite {
     val df = rows.toDF("g", "h", "id")
     def sample(d: org.apache.spark.sql.DataFrame): Map[Long, Seq[(Long, Long)]] =
       d.groupBy("g")
-        .agg(call_function("graft_bottomk", col("h"), col("id"), lit(3)).as("s"))
+        .agg(BottomKAgg.bottomk(col("h"), col("id"), 3).as("s"))
         .collect()
         .map(r => r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1)
           .map(e => (e.getLong(0), e.getLong(1))).toSeq).toMap

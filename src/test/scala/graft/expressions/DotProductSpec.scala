@@ -3,72 +3,29 @@ package graft.expressions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.expressions.DotProduct.dot
 import graft.operators.SparkTestSession.{sf, spark}
 
 class DotProductSpec extends AnyFunSuite {
 
   test("graft_dot matches the primitive kernel on fixture embeddings") {
-    DotProduct.register(spark)
     import graft.functions.VectorFunctions.dotKernelDet
     val e = graft.Tables.embeddings(spark, sf).limit(50)
       .select(col("vec_id"), col("embedding"))
     val pairs = e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
     val diff = pairs.select(
-      call_function("graft_dot", col("a.embedding"), col("b.embedding")).as("native"),
+      dot(col("a.embedding"), col("b.embedding")).as("native"),
       dotKernelDet(col("a.embedding"), col("b.embedding")).as("kernel"))
       .filter(col("native") =!= col("kernel"))
       .count()
     assert(diff === 0)
   }
 
-  test("graft_dot works from SQL text and self-dot equals squared norm") {
-    DotProduct.register(spark)
-    graft.Tables.embeddings(spark, sf).limit(5).createOrReplaceTempView("emb_t")
-    val rows = spark.sql(
-      "SELECT vec_id, graft_dot(embedding, embedding) AS sq FROM emb_t").collect()
-    assert(rows.length === 5)
-    rows.foreach(r => assert(r.getDouble(1) > 0))
-  }
-
-  test("GraftExtensions injects graft_dot into a session function registry") {
-    // spark.sql.extensions is a static conf on the SparkContext, so a
-    // config-driven end-to-end check would need its own context; instead
-    // apply the extensions object to a FRESH registry clone (no
-    // temp-function leakage from DotProduct.register elsewhere) and
-    // resolve + evaluate the injected function through it.
-    import org.apache.spark.sql.SparkSessionExtensions
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-    val ext = new SparkSessionExtensions
-    new graft.plans.GraftExtensions().apply(ext)
-    val registry = FunctionRegistry.builtin.clone()
-    assert(!registry.functionExists(FunctionIdentifier("graft_dot")))
-    // registerFunctions is private[sql] in Scala but public in bytecode
-    val m = classOf[SparkSessionExtensions].getMethods
-      .find(_.getName == "registerFunctions").get
-    m.invoke(ext, registry)
-    assert(registry.functionExists(FunctionIdentifier("graft_dot")))
-    val expr = registry.lookupFunction(FunctionIdentifier("graft_dot"), Seq(
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Array(1.0f, 2.0f), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)),
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Array(3.0f, 4.0f), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))))
-    assert(expr.eval(null) === 11.0)
-    // the whole native-function surface rides the same injection path
-    Seq("graft_minhash", "graft_simhash", "graft_topk", "graft_cms",
-        "graft_hll", "graft_bitmap", "graft_mode", "graft_bottomk").foreach { f =>
-      assert(registry.functionExists(FunctionIdentifier(f)), s"$f not injected")
-    }
-  }
-
   test("graft_dot rejects wrong input types") {
-    DotProduct.register(spark)
     import spark.implicits._
     val df = Seq((1, "x")).toDF("id", "s")
     val err = intercept[Exception] {
-      df.select(call_function("graft_dot", col("s"), col("s"))).collect()
+      df.select(dot(col("s"), col("s"))).collect()
     }
     assert(err.getMessage.toLowerCase.contains("graft_dot") ||
       err.getMessage.toLowerCase.contains("type"))

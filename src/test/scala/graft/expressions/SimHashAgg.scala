@@ -2,7 +2,8 @@ package graft.expressions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftSqlShims}
+import org.apache.spark.sql.functions.{lit, shiftright, shiftrightunsigned, when}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -10,17 +11,17 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{DataType, LongType}
 
-/** Custom Catalyst aggregate: the 64-bit SimHash (Charikar 2002) of a
-  * group of token hashes in ONE aggregate. The buffer is 65 longs — one
-  * set-bit count per signature bit plus the token count; `merge` is
-  * elementwise add, so map-side partial aggregation applies. Signature
-  * bit b is set iff more than half the token hashes set bit b
-  * (2·count > n ⟺ the ±1 vote sum is positive — the same rule the
-  * packed-count Column construction in TextFunctions pins in tests).
-  *
-  * Replaces 16 packed-count `sum()` aggregates + a 64-branch assembly
-  * expression: generated aggregate code no longer scales with signature
-  * width, the per-row update is one compiled loop.
+/** Reference aggregate for the simhash kernels: the 64-bit SimHash
+  * (Charikar 2002) of a group of token hashes in ONE aggregate. The
+  * buffer is 65 longs — one set-bit count per signature bit plus the
+  * token count; `merge` is elementwise add, so map-side partial
+  * aggregation applies. Signature bit b is set iff more than half the
+  * token hashes set bit b (2·count > n ⟺ the ±1 vote sum is positive).
+  * The declarative signature pipelines in
+  * `graft.operators.SignatureReference` aggregate with it; the engine's
+  * one-pass kernels (`TextFunctions.tokenSimhash`,
+  * `Multimodal.phashSignaturesKernel`) are pinned bit-equal against
+  * them.
   */
 case class SimHashAgg(
     child: Expression,
@@ -87,7 +88,29 @@ case class SimHashAgg(
 }
 
 object SimHashAgg {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHashAgg(exprs.head), "built-in")
+  /** The SimHash of a group's bigint token hashes. */
+  def simhash(h: Column): Column = GraftSqlShims.column(
+    SimHashAgg(GraftSqlShims.expression(h)).toAggregateExpression())
+
+  /** Packed SimHash bit-count term in Column form: bits 4g..4g+3 of the
+    * token hash, each as a 16-bit count field of one long (caps at 65,535
+    * tokens per document). With [[fromPacked]] it documents the counting
+    * rule and pins the aggregate's correctness.
+    */
+  def packedVotes(tokenHash: Column, group: Int): Column =
+    (0 until 4).map { k =>
+      shiftright(tokenHash, group * 4 + k).bitwiseAND(1) * lit(1L << (16 * k))
+    }.reduce(_ + _)
+
+  /** Assemble the 64-bit signature from 16 packed count sums + the token
+    * count: bit b is set iff more than half the token hashes set bit b
+    * (2·count > n ⟺ the ±1 vote sum is positive). Disjoint bit
+    * contributions combine with +, which equals OR here (including the
+    * sign bit: two's-complement add wraps).
+    */
+  def fromPacked(packed: Seq[Column], nTokens: Column): Column =
+    (0 until 64).map { b =>
+      val cnt = shiftrightunsigned(packed(b / 4), 16 * (b % 4)).bitwiseAND(0xFFFFL)
+      when(cnt * 2 > nTokens, lit(1L << b)).otherwise(lit(0L))
+    }.reduce(_ + _)
 }

@@ -9,9 +9,8 @@ import graft.operators.SparkTestSession.spark
 class TopKAggSpec extends AnyFunSuite {
 
   private def viaAgg(df: org.apache.spark.sql.DataFrame, k: Int) = {
-    TopKAgg.register(spark)
     df.groupBy("g")
-      .agg(call_function("graft_topk", col("s"), col("i"), lit(k)).as("top"))
+      .agg(TopKAgg.topk(col("s"), col("i"), k).as("top"))
       .select(col("g"), posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("g"), col("t.id").as("i"), col("t.score").as("s"),
         (col("pos") + 1).cast("int").as("rank"))

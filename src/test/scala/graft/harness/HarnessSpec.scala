@@ -30,7 +30,7 @@ class HarnessSpec extends AnyFunSuite {
       benchmark = "b", backend = "spark", iterationNo = 1, runId = 42L,
       dateIso = "2026-01-01T00:00:00Z",
       hostInfo = Map("node" -> "n\"quote"),
-      params = Map("tag" -> "line1\nline2"),
+      params = Map("tag" -> "line1\nline2", "ctl" -> "a\tb\u0001"),
       measurements = Seq(Results.Measurement("total", 1.25),
         Results.Measurement("total.load", 0.5)))
     val dir = java.nio.file.Files.createTempDirectory("graft-results")
@@ -44,6 +44,14 @@ class HarnessSpec extends AnyFunSuite {
     assert(lines.get(0).contains("line1\\nline2"))
     assert(lines.get(0).contains("\"duration_s\": 1.25"))
     assert(lines.get(1).contains("\"iteration_no\": 2"))
+    // the whole record, byte for byte: sorted keys, escaped quote, newline,
+    // tab and control character
+    assert(lines.get(0) ===
+      """{"benchmark": "b", "backend": "spark", "iteration_no": 1, "run_id": 42, """ +
+      """"date": "2026-01-01T00:00:00Z", "host_info": {"node": "n\"quote"}, """ +
+      "\"params\": {\"ctl\": \"a\\tb\\u0001\", \"tag\": \"line1\\nline2\"}, " +
+      """"measurements": [{"name": "total", "duration_s": 1.25}, """ +
+      """{"name": "total.load", "duration_s": 0.5}]}""")
   }
 
   test("CLI parse covers all flags") {

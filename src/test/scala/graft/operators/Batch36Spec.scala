@@ -29,11 +29,10 @@ class Batch36Spec extends AnyFunSuite {
   }
 
   test("HLL estimate is partitioning-invariant (merge correctness)") {
-    graft.expressions.HllAgg.register(spark)
     val one = Tables.events(spark, sf).coalesce(1)
-      .agg(call_function("graft_hll", col("user_id"))).collect()(0).getLong(0)
+      .agg(graft.expressions.HllAgg.hll(col("user_id"))).collect()(0).getLong(0)
     val many = Tables.events(spark, sf).repartition(13)
-      .agg(call_function("graft_hll", col("user_id"))).collect()(0).getLong(0)
+      .agg(graft.expressions.HllAgg.hll(col("user_id"))).collect()(0).getLong(0)
     assert(one == many)
     val exact = Tables.events(spark, sf)
       .select("user_id").distinct().count()

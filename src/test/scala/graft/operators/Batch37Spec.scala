@@ -30,12 +30,11 @@ class Batch37Spec extends AnyFunSuite {
   }
 
   test("streaming HLL equals the batch sketch per hour window") {
-    graft.expressions.HllAgg.register(spark)
     val streamed = graft.streaming.StreamOps.streamHllUsers(spark, sf)
       .collect().map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
     val batch = Tables.events(spark, sf)
       .groupBy(date_trunc("hour", col("ts")).as("win_start"))
-      .agg(call_function("graft_hll", col("user_id")).as("est"))
+      .agg(graft.expressions.HllAgg.hll(col("user_id")).as("est"))
       .collect().map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
     assert(streamed.nonEmpty)
     assert(streamed == batch)

@@ -37,12 +37,11 @@ class ConnectedComponentsSpec extends AnyFunSuite {
         Dedup.ccStarContraction(pairs, maxRounds = 30, driverFinishCap = 0L)
       case "star-hybrid" =>
         Dedup.ccStarContraction(pairs, maxRounds = 30)
-      case _ => Dedup.ccPropagation(pairs, maxRounds = 100)
     }
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
-  /** Random graph: a chain segment (worst case for propagation) plus
+  /** Random graph: a chain segment (worst case for label propagation) plus
     * random cross edges that merge components, plus duplicated edges
     * (parallel edges must be harmless). Seeded → reproducible failures.
     */
@@ -64,15 +63,6 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     (1 to 6).foreach { i =>
       val edges = randomEdges(rnd)
       assert(sparkLabels("star", edges) === referenceComponents(edges),
-        s"case $i edges=$edges")
-    }
-  }
-
-  test("min-label propagation matches union-find on random adversarial graphs") {
-    val rnd = new scala.util.Random(127L)
-    (1 to 4).foreach { i =>
-      val edges = randomEdges(rnd)
-      assert(sparkLabels("propagation", edges) === referenceComponents(edges),
         s"case $i edges=$edges")
     }
   }

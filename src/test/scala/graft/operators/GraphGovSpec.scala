@@ -126,7 +126,7 @@ class GraphGovSpec extends AnyFunSuite {
     assert(stats.map(_.getLong(1)).sum == Tables.lineitem(spark, sf).count())
   }
 
-  test("graph components: star == propagation == driver union-find") {
+  test("graph components: hybrid star == pure star == driver union-find") {
     import graft.Tables
     // rebuild the co-purchase edges independently of the family cache
     val li = Tables.lineitem(spark, sf)
@@ -143,12 +143,9 @@ class GraphGovSpec extends AnyFunSuite {
     // set fits the collect guard — both must label identically
     val starPure = canon(Dedup.componentsOf(spark, pairs, driverMaxPairs = 0,
       driverFinishCap = 0))
-    val prop = canon(Dedup.componentsOf(spark, pairs, driverMaxPairs = 0,
-      distributedAlgo = "prop"))
     val driver = canon(Dedup.componentsOf(spark, pairs))
     assert(star.nonEmpty)
     assert(star == starPure)
-    assert(star == prop)
     assert(star == driver)
   }
 

@@ -69,28 +69,13 @@ class OperatorSpec extends AnyFunSuite {
     assert(exact.nonEmpty)
   }
 
-  test("cluster paths agree: driver union-find vs propagation vs star contraction") {
+  test("cluster paths agree: driver union-find vs star contraction") {
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaUnionFind = asMap(Dedup.clusters(spark, sf))
-    val viaPropagation = asMap(Dedup.clusters(spark, sf, driverMaxPairs = 0L,
-      distributedAlgo = "propagation"))
     val viaStar = asMap(Dedup.clusters(spark, sf, driverMaxPairs = 0L))
-    assert(viaUnionFind === viaPropagation)
     assert(viaUnionFind === viaStar)
     assert(viaUnionFind.nonEmpty)
-  }
-
-  test("df-capped ngram index: no-op above max df, subset below, precision exact") {
-    def pairSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairSet(Dedup.ngramJaccard(spark, sf))
-    // a cap above every shingle's document frequency changes nothing
-    assert(pairSet(Dedup.ngramJaccardCapped(spark, sf, Long.MaxValue >> 1)) === exact)
-    // an aggressive cap can only LOSE pairs (verification keeps precision
-    // exact), never invent them
-    val capped = pairSet(Dedup.ngramJaccardCapped(spark, sf, 2L))
-    assert(capped.subsetOf(exact), s"capped produced non-exact pairs: ${capped -- exact}")
   }
 
   test("shingles: short and empty documents yield empty sets") {
@@ -102,7 +87,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("simhash of identical token multisets is identical; pairs are verified by hamming") {
-    val pairs = Dedup.simhashPairs(spark, sf).collect()
+    val pairs = SignatureReference.simhashPairs(spark, sf).collect()
     pairs.foreach(r => assert(r.getAs[Int]("hamming") <= 3))
   }
 
@@ -111,7 +96,7 @@ class OperatorSpec extends AnyFunSuite {
     // injecting portableTokenHash into the production entry point must
     // reproduce it row-for-row (pins that the two oracle/bench entries
     // can never drift apart structurally)
-    val injected = Dedup.simhashPairs(spark, sf,
+    val injected = SignatureReference.simhashPairs(spark, sf,
         tokenHash = TextFunctions.portableTokenHash)
       .collect().map(_.toSeq).toSet
     val portable = Dedup.simhashPairsPortable(spark, sf)
@@ -120,7 +105,7 @@ class OperatorSpec extends AnyFunSuite {
     // both variants detect the fixture's planted near-dups (different
     // hashes may disagree on borderline pairs, but each must return a
     // non-empty verified set, and every pair verifies hamming ≤ 3)
-    val prodRows = Dedup.simhashPairs(spark, sf).collect()
+    val prodRows = SignatureReference.simhashPairs(spark, sf).collect()
     assert(prodRows.nonEmpty && portable.nonEmpty)
     prodRows.foreach(r => assert(r.getAs[Int]("hamming") <= 3))
   }
@@ -643,7 +628,7 @@ class OperatorSpec extends AnyFunSuite {
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
     for (h <- Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column](
         xxhash64(_), graft.functions.TextFunctions.portableTokenHash)) {
-      val sigs = Multimodal.phashSignatures(payload, h)
+      val sigs = SignatureReference.phashSignatures(payload, h)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(sigs(1L) === sigs(2L), "identical payloads must collide")
       def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
@@ -680,7 +665,7 @@ class OperatorSpec extends AnyFunSuite {
     for ((h, portable) <- Seq[(org.apache.spark.sql.Column => org.apache.spark.sql.Column, Boolean)](
         (xxhash64(_), false),
         (graft.functions.TextFunctions.portableTokenHash, true))) {
-      val pipe = Multimodal.phashSignatures(payload, h)
+      val pipe = SignatureReference.phashSignatures(payload, h)
       val kern = Multimodal.phashSignaturesKernel(payload, portable)
       assert(pipe.exceptAll(kern).isEmpty && kern.exceptAll(pipe).isEmpty,
         s"kernel/pipeline signature divergence (portable=$portable)")
@@ -705,7 +690,7 @@ class OperatorSpec extends AnyFunSuite {
     for ((h, portable) <- Seq[(org.apache.spark.sql.Column => org.apache.spark.sql.Column, Boolean)](
         (xxhash64(_), false),
         (TextFunctions.portableTokenHash(_), true))) {
-      val pipe = Dedup.simhashSignatures(docs, h)
+      val pipe = SignatureReference.simhashSignatures(docs, h)
       val kern = Dedup.simhashSignaturesKernel(docs, portable)
       assert(pipe.exceptAll(kern).isEmpty && kern.exceptAll(pipe).isEmpty,
         s"kernel/pipeline token-simhash divergence (portable=$portable)")
@@ -731,7 +716,7 @@ class OperatorSpec extends AnyFunSuite {
     val payload = corpus.toDF("doc_id", "text")
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
     def pairSet(gh: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-      Multimodal.phashPairsOf(payload, gh)
+      SignatureReference.phashPairsOf(payload, gh)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val fast = pairSet(xxhash64(_))
     val portable = pairSet(graft.functions.TextFunctions.portableTokenHash)
@@ -763,10 +748,11 @@ class OperatorSpec extends AnyFunSuite {
     val h = graft.functions.TextFunctions.portableTokenHash(_)
     val naive = Dedup.componentsOf(spark,
         Dedup.simhashBucketVerify(
-            Multimodal.phashSignatures(replicated, h), 100000)
+            SignatureReference.phashSignatures(replicated, h), 100000)
           .select(col("id_a"), col("id_b")))
       .groupBy("cluster_id").agg(count(lit(1)).as("n_members"))
-    val collapsed = Multimodal.phashClustersOf(spark, replicated)
+    val collapsed = Multimodal.phashClustersOf(spark,
+      SignatureReference.phashSignatures(replicated, h))
     assert(naive.exceptAll(collapsed).isEmpty &&
       collapsed.exceptAll(naive).isEmpty,
       "pre-collapsed clusters diverged from the naive pairing")
@@ -846,7 +832,7 @@ class OperatorSpec extends AnyFunSuite {
     val before = spark.sparkContext.getPersistentRDDs.size
     val ops: Seq[() => org.apache.spark.sql.DataFrame] = Seq(
       () => Dedup.minhashLsh(spark, sf),
-      () => Dedup.simhashPairs(spark, sf),
+      () => SignatureReference.simhashPairs(spark, sf),
       () => Dedup.simhashPairsPortable(spark, sf),
       () => Dedup.fuzzyNames(spark, sf),
       () => Dedup.embeddingCosine(spark, sf),
@@ -1131,16 +1117,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(cutSelf.getString(3) === " middle filler text ")
   }
 
-  test("pair pipeline verify strategies (corpus-wide vs candidate-proportional) agree") {
-    // the 100 TB shape (arrays only for candidate docs) must be
-    // result-identical to the overlap-friendly local default
-    val full = Dedup.ngramJaccardPlan(spark, sf)._1.collect().map(_.toSeq).toSet
-    val prop = Dedup.ngramJaccardPlan(spark, sf,
-      candidateProportionalVerify = true)._1.collect().map(_.toSeq).toSet
-    assert(full === prop)
-    assert(full.nonEmpty, "fixture lost its near-dup pairs")
-  }
-
   test("containment df-cap bounds candidate volume under duplication skew") {
     import spark.implicits._
     // skew corpus: 40 docs share ONLY a boilerplate phrase (each with a
@@ -1266,29 +1242,6 @@ class OperatorSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getBoolean(3)).toMap
     assert(sb.keySet === Set(1L, 2L, 3L, 4L))
     assert(sb(1L)) // first real doc fits a 100-token budget
-  }
-
-  test("salted join returns exactly the plain join result and spreads the hot key") {
-    import org.apache.spark.sql.functions.{col, xxhash64}
-    val events = graft.Tables.events(spark, sf)
-      .select(col("event_id"), col("event_type"), col("value"))
-    val dim = events.select("event_type").distinct()
-      .withColumn("type_tag", xxhash64(col("event_type")))
-    val plain = events.join(dim, Seq("event_type"))
-      .select("event_id", "type_tag").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val salted = Relational.saltedJoin(events, dim, "event_type",
-      numSalts = 8, saltSource = col("event_id"))
-      .select("event_id", "type_tag").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(salted === plain)
-    // the salt really spreads one key's rows over the full salt range
-    val spread = events.withColumn("__salt",
-      org.apache.spark.sql.functions.pmod(xxhash64(col("event_id")),
-        org.apache.spark.sql.functions.lit(8)).cast("int"))
-      .filter(col("event_type") === "click")
-      .select("__salt").distinct().count()
-    assert(spread === 8L)
   }
 
   test("incremental dedup equals the parity-crossing slice of the full pair set") {

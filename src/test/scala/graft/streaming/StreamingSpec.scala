@@ -33,20 +33,22 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming minhash near-dup equals the batch LSH pipeline") {
     import org.apache.spark.sql.functions._
-    // signatures: the per-row stream kernel must be bit-equal to the
-    // batch MinHashAgg signature for every fixture document
-    import graft.functions.TextFunctions.{minhashSigKernel, shingles}
+    // signatures: the per-row reference kernel (the arithmetic the
+    // stream's bandKeysKernel folds into band keys) must be bit-equal to
+    // the batch MinHashAgg signature for every fixture document
+    import graft.functions.MinHashReference
+    import graft.functions.TextFunctions.shingles
     import graft.operators.Dedup.{NumPerm, ShingleK}
-    graft.expressions.MinHashAgg.register(spark, NumPerm)
     val docs = graft.Tables.documents(spark, sf)
     val kernelSigs = docs.select(col("doc_id"),
-        minhashSigKernel(NumPerm)(
+        MinHashReference.sigKernel(NumPerm)(
           transform(shingles(col("text"), ShingleK), sh => xxhash64(sh))).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val aggSigs = docs.select(col("doc_id"),
         explode(shingles(col("text"), ShingleK)).as("sh_str"))
       .select(col("doc_id"), xxhash64(col("sh_str")).as("sh"))
-      .groupBy("doc_id").agg(call_function("graft_minhash", col("sh")).as("sig"))
+      .groupBy("doc_id")
+      .agg(graft.expressions.MinHashAgg.minhash(col("sh"), NumPerm).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     aggSigs.foreach { case (id, sig) =>
       assert(kernelSigs(id) === sig, s"stream/batch signature drift for doc $id")
