@@ -1,10 +1,13 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.Tables
 
@@ -17,7 +20,9 @@ import graft.Tables
   *     a half-written version, and historical versions stay readable
   *     (time travel) because commits only ADD files and manifests;
   *   - a READ resolves one manifest and loads exactly its files — O(1)
-  *     metadata, no directory listing race, version pinning for free.
+  *     metadata, no directory listing race, version pinning for free. The
+  *     manifest also records the table's schema, as Delta's `metaData`
+  *     action does, so a read opens no footer to infer it.
   *
   * At 100 TB the same structure holds (manifests list thousands of files;
   * the manifest itself becomes a parquet file — a detail, not a design
@@ -29,6 +34,12 @@ object Lake {
 
   private def manifestPath(table: Path, version: Int): Path =
     table.resolve(s"_manifest_v$version.json")
+
+  private val json = new ObjectMapper()
+
+  /** The published manifest of `version`: `{"schema": …, "files": […]}`. */
+  private def manifest(table: Path, version: Int): JsonNode =
+    json.readTree(manifestPath(table, version).toFile)
 
   /** Output-file target for fixture-sized commits (guide §6: size output
     * files sensibly — the default layout inherited one file per session
@@ -44,8 +55,9 @@ object Lake {
   private[graft] val FixtureWriteFiles = 4
 
   /** Commit `df` as `version`: data lands under files/v<version>/, then
-    * the manifest publishes (previous live files ∓ replaced keys is the
-    * CALLER's contract — this layer only publishes file lists).
+    * the manifest publishes `df`'s schema and the live files (previous
+    * live files ∓ replaced keys is the CALLER's contract — this layer only
+    * publishes file lists).
     *
     * `fileTarget > 0` coalesces the write to that many files (no
     * shuffle); 0 leaves the caller's layout alone — snapshotExpire pins
@@ -68,10 +80,12 @@ object Lake {
           names += table.relativize(p).toString
       }
     } finally listing.close()
-    val all = (carryForward ++ names.sorted).distinct
-    val json = all.mkString("[\"", "\",\"", "\"]")
+    val m = json.createObjectNode()
+    m.set[JsonNode]("schema", json.readTree(df.schema.json))
+    val live = m.putArray("files")
+    (carryForward ++ names.sorted).distinct.foreach(live.add)
     val tmp = Files.createTempFile(table, s"_manifest_v$version", ".tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, json.writeValueAsBytes(m))
     // atomic publish: the manifest appears complete or not at all
     Files.move(tmp, manifestPath(table, version),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -80,12 +94,10 @@ object Lake {
   /** Live files of `version` (what a newer commit must carry forward for
     * the keys it does not replace).
     */
-  def liveFiles(table: Path, version: Int): Seq[String] = {
-    val json = new String(Files.readAllBytes(manifestPath(table, version)),
-      StandardCharsets.UTF_8)
-    json.stripPrefix("[").stripSuffix("]").split(",")
-      .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
-  }
+  def liveFiles(table: Path, version: Int): Seq[String] = files(manifest(table, version))
+
+  private def files(manifest: JsonNode): Seq[String] =
+    manifest.get("files").elements().asScala.map(_.asText).toSeq
 
   /** Every published version: the manifest files present on disk. A
     * manifest is published atomically (tmp + move in [[commit]]), so its
@@ -106,10 +118,13 @@ object Lake {
     } finally stream.close()
   }
 
-  /** Read the table AS OF `version`: exactly the manifest's files. */
+  /** Read the table AS OF `version`: exactly the manifest's files, under
+    * the manifest's schema, so the read runs no job.
+    */
   def readVersion(s: SparkSession, table: Path, version: Int): DataFrame = {
-    val files = liveFiles(table, version).map(f => table.resolve(f).toString)
-    s.read.parquet(files: _*)
+    val m = manifest(table, version)
+    val schema = DataType.fromJson(m.get("schema").toString).asInstanceOf[StructType]
+    s.read.schema(schema).parquet(files(m).map(f => table.resolve(f).toString): _*)
   }
 
   /** Time-travel demo over the fixtures, end-to-end through disk:
@@ -142,14 +157,14 @@ object Lake {
         .join(replaced.select("doc_id"), Seq("doc_id"), "left_anti")
         .unionByName(replaced)
       commit(v2, table, 2, fileTarget = FixtureWriteFiles)
-      val out = Seq(1, 2).map { v =>
-        val d = readVersion(s, table, v)
-        val r = d.agg(count(lit(1)).as("n_docs"),
+      // both versions in one action: a union tagged by version
+      val out = Seq(1, 2).map(v => readVersion(s, table, v).withColumn("version", lit(v)))
+        .reduce(_ unionByName _)
+        .groupBy("version")
+        .agg(count(lit(1)).as("n_docs"),
           count(when(col("text") === upper(col("text")) &&
             col("text") =!= lower(col("text")), 1)).as("n_rewritten"))
-          .collect()(0)
-        (v, r.getLong(0), r.getLong(1))
-      }
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
       import s.implicits._
       out.toDF("version", "n_docs", "n_rewritten")
     } finally {

@@ -873,13 +873,14 @@ object StreamOps {
 
   /** Source-parameterized core of [[streamCdcApply]] — specs stage
     * multi-file directories through it to pin cross-batch state folds
-    * and tombstone revival.
+    * and tombstone revival. The schema of `watchDir/glob` comes from the
+    * memoized `Tables.schemaOf`, so a fixture table's footer is read once
+    * per JVM, not once per query.
     */
   private[streaming] def cdcApplyPath(ss: SparkSession, watchDir: String,
                                       glob: String,
                                       maxFilesPerTrigger: Int): DataFrame = {
-    val schema = ss.read.option("pathGlobFilter", glob)
-      .parquet(watchDir).schema
+    val schema = graft.Tables.schemaOf(ss, s"$watchDir/$glob")
     val name = s"graft_stream_${counter.incrementAndGet()}"
     import ss.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}

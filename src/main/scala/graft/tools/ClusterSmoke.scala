@@ -20,8 +20,12 @@ import org.apache.spark.sql.SparkSession
   * sbt "runMain graft.tools.ClusterSmoke"` — the standalone Worker
   * launches executor JVMs through SPARK_HOME's launcher, and
   * SPARK_SCALA_VERSION skips its source-tree build-directory probe
-  * (release layouts don't have one). Last green run: 32/32 (the 28
-  * entries plus the 4 hotkey runs) on the sf0.01 fixture.
+  * (release layouts don't have one). The session carries
+  * `GraftSession.engineConf` (the `graft.fs` filesystem, the codegen
+  * cache, artifact isolation off, 512k broadcast blocks), so the smoke
+  * runs the engine Bench, Verify and the harness run. Last green run:
+  * 32/32 (the 28 entries plus the 4 hotkey runs) on the sf0.01 fixture,
+  * under the engine conf.
   */
 object ClusterSmoke {
 
@@ -83,9 +87,8 @@ object ClusterSmoke {
     val spark = SparkSession.builder()
       .master("local-cluster[2,4,2048]")
       .appName("graft-cluster-smoke")
+      .config(graft.GraftSession.engineConf)
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.executor.memory", "2g")
       // executor JVMs need the same JDK17 module opens the driver gets
       // from build.sbt, plus this application's classes on their paths

@@ -9,9 +9,11 @@ import org.apache.spark.sql.Dataset
 /** `RandomForestClassifier` trained by [[GraftRandomForest]], whose
   * tree-level jobs use every task slot; without a weight column the model
   * equals the stock fit's.
-  * `train` repeats `RandomForestClassifier.train` (Spark 4.1.2) with only
-  * that call changed. Lives in Spark's package to reach the `private[ml]`
-  * model constructor and instance extraction.
+  * `train` repeats `RandomForestClassifier.train` (Spark 4.1.2) with that
+  * call changed and no training summary: building one broadcasts the
+  * model to transform the whole training set, and nothing reads it, so
+  * `hasSummary` is false. Lives in Spark's package to reach the
+  * `private[ml]` model constructor and instance extraction.
   */
 class GraftRandomForestClassifier(override val uid: String)
     extends RandomForestClassifier(uid) {
@@ -48,9 +50,6 @@ class GraftRandomForestClassifier(override val uid: String)
     val numFeatures = trees.head.numFeatures
     instr.logNumClasses(numClasses)
     instr.logNumFeatures(numFeatures)
-    val model = copyValues(
-      new RandomForestClassificationModel(uid, trees, numFeatures, numClasses))
-    model.createSummary(dataset)
-    model
+    copyValues(new RandomForestClassificationModel(uid, trees, numFeatures, numClasses))
   }
 }

@@ -16,7 +16,10 @@ import org.apache.spark.storage.StorageLevel
   * partitioned — metadata, split candidates, binning and the seeded
   * Poisson bagging all see what the stock run sees — and only then spreads
   * the bagged points over `defaultParallelism` partitions before
-  * `RandomForest.runBagged`. Each point carries its per-tree sample counts
+  * `RandomForest.runBagged`. The instances are persisted for the run: the
+  * metadata scan, the split sample and the binning each read them, and
+  * the stock run recomputes them from its input every time. Each point
+  * carries its per-tree sample counts
   * through the shuffle. With unit instance weights (no weight column, as
   * in plasticc) the class statistics are sums of integer-valued doubles,
   * exact in any merge order, so the trees equal the stock run's
@@ -36,6 +39,7 @@ private[spark] object GraftRandomForest {
       seed: Long,
       instr: Option[Instrumentation]): Array[DecisionTreeModel] = {
     val retaggedInput = input.retag(classOf[Instance])
+      .persist(StorageLevel.MEMORY_AND_DISK).setName("training instances")
     val metadata = DecisionTreeMetadata.buildMetadata(
       retaggedInput, strategy, numTrees, featureSubsetStrategy)
     val splits = RandomForest.findSplits(retaggedInput, metadata, seed)
@@ -52,6 +56,7 @@ private[spark] object GraftRandomForest {
       numTrees, featureSubsetStrategy, seed, instr,
       earlyStopModelSizeThresholdInBytes = TreeConfig.trainingEarlyStopModelSizeThresholdInBytes)
     baggedInput.unpersist()
+    retaggedInput.unpersist()
     bcSplits.destroy()
     trees
   }
