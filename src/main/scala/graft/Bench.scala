@@ -103,13 +103,8 @@ object Bench {
     if (selected.exists(_.family == Family.Streaming)) {
       val ss = spark.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
-      val rSchema = ss.read.parquet(s"$sfDir/region.parquet").schema
-      val q = ss.readStream.schema(rSchema)
-        .option("pathGlobFilter", "region.parquet").parquet(sfDir)
-        .dropDuplicates("r_regionkey")
-        .writeStream.outputMode("append").format("memory")
-        .queryName("graft_warmup_stream").start()
-      q.processAllAvailable(); q.stop()
+      graft.streaming.StreamOps.drain(
+        Tables.stream(ss, sfDir, "region").dropDuplicates("r_regionkey"), "append")
     }
     // SPARK_GRAFT_BENCH_SWEEPS=N (default 1): repeat the WHOLE suite N
     // times and keep each query's median. Sweeping whole suites (with the

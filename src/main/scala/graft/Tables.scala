@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Loaders for the driver-generated TPC-H-ish parquet fixtures
   * (TESTDATA.md / FIXTURES.md §B). One parquet file per table under a
@@ -81,6 +86,35 @@ object Tables {
   def schemaOf(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
     val conf = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
     schemaCache.computeIfAbsent((path, conf), _ => spark.read.parquet(path).schema)
+  }
+
+  /** File-stream source over the fixture table `name` under `dir`: the
+    * sf dir is the watched directory (file streams want one) and
+    * `pathGlobFilter` selects the table's one file. File streams do not
+    * infer a schema, so it comes from the memoized [[schemaOf]].
+    */
+  def stream(ss: SparkSession, dir: String, name: String): DataFrame =
+    ss.readStream.schema(schemaOf(ss, s"$dir/$name.parquet"))
+      .option("pathGlobFilter", s"$name.parquet").parquet(dir)
+
+  /** Write `df` as ONE parquet file at `path` — the fixture contract (one
+    * flat `<t>.parquet` per table, which [[stream]] globs and the
+    * streaming stagers byte-copy). Spark writes a directory of part
+    * files, so the frame goes through a hidden sibling staging dir whose
+    * single part file moves into place; the staging dir is deleted. A
+    * 0-row frame still leaves one schema-carrying file.
+    */
+  def writeFile(df: DataFrame, path: Path): Unit = {
+    val stage = path.resolveSibling(s".stage_${path.getFileName}")
+    try {
+      df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage.toString)
+      val listing = Files.list(stage) // must close: fd leak otherwise
+      val part =
+        try listing.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet"))
+        finally listing.close()
+      Files.move(part.getOrElse(sys.error(s"no part file under $stage")), path,
+        StandardCopyOption.REPLACE_EXISTING)
+    } finally FileUtils.deleteDirectory(stage.toFile)
   }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")

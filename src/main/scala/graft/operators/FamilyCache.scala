@@ -41,7 +41,6 @@ private[operators] object FamilyCache {
     cache.computeIfAbsent(sessionKey(s) + "|" + dir + "|" + key,
       _ => build.persist())
 
-  /** Unpersist and drop every cached intermediate. */
   /** Driver-side family state that is not a single DataFrame (e.g. the
     * BPE trainer's (rules, corpus-before, corpus-after) triple, whose
     * frames are localCheckpointed). Same lifecycle as [[get]]: first
@@ -56,6 +55,7 @@ private[operators] object FamilyCache {
     sideState.computeIfAbsent(sessionKey(s) + "|" + dir + "|" + key,
       _ => build).asInstanceOf[T]
 
+  /** Unpersist and drop every cached intermediate. */
   def release(): Unit = {
     cache.values().forEach(_.unpersist(false))
     cache.clear()

@@ -127,6 +127,24 @@ object Lake {
     s.read.schema(schema).parquet(files(m).map(f => table.resolve(f).toString): _*)
   }
 
+  /** Run `body` over the documents corpus staged once and a fresh temp
+    * table dir. ONE scan+exchange of the corpus (`localCheckpoint`) serves
+    * every derivation — the uncheckpointed form re-scanned and
+    * re-repartitioned documents once per reference (r12 jobtrace). Both
+    * are released after `body`, so `body` must drain what it returns.
+    */
+  private def withCorpus[T](s: SparkSession, dir: String, cols: String*)
+                           (body: (DataFrame, Path) => T): T = {
+    val docs = Tables.documents(s, dir).select(cols.head, cols.tail: _*)
+      .localCheckpoint(true)
+    val table = Files.createTempDirectory("graft_lake_")
+    try body(docs, table)
+    finally {
+      CacheLifecycle.release(docs)
+      org.apache.commons.io.FileUtils.deleteDirectory(table.toFile)
+    }
+  }
+
   /** Time-travel demo over the fixtures, end-to-end through disk:
     * v1 = even-id documents; v2 = SCD-1 upsert of the id%3 slice with
     * rewritten (uppercased) text. File-granularity copy-on-write: only
@@ -138,15 +156,8 @@ object Lake {
     * commit still returns the ORIGINAL content — the output pins
     * exactly that.
     */
-  def timeTravel(s: SparkSession, dir: String): DataFrame = {
-    // ONE scan+exchange of the corpus serves every derivation below —
-    // the uncheckpointed form re-scanned and re-repartitioned documents
-    // once per reference (r12 jobtrace); released in the finally after
-    // the collect has drained everything
-    val docs = Tables.documents(s, dir).select("doc_id", "text")
-      .localCheckpoint(true)
-    val table = Files.createTempDirectory("graft_lake_")
-    try {
+  def timeTravel(s: SparkSession, dir: String): DataFrame =
+    withCorpus(s, dir, "doc_id", "text") { (docs, table) =>
       val v1 = docs.filter(col("doc_id") % 2 === 0)
       commit(v1, table, 1, fileTarget = FixtureWriteFiles)
       val replaced = docs.filter(col("doc_id") % 3 === 0)
@@ -167,12 +178,7 @@ object Lake {
         .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
       import s.implicits._
       out.toDF("version", "n_docs", "n_rewritten")
-    } finally {
-      // data read eagerly above (collect) — safe to clean the temp table
-      CacheLifecycle.release(docs)
-      org.apache.commons.io.FileUtils.deleteDirectory(table.toFile)
     }
-  }
 
   /** Schema evolution through the files — the other lakehouse staple: an
     * OLD file generation lacks a column later generations carry; a
@@ -181,13 +187,8 @@ object Lake {
     * `lang`), one `mergeSchema` read unions them; output = per-lang
     * counts where gen1 rows land in the NULL-lang bucket.
     */
-  def schemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    // one scan+exchange serves both generation writes (r12; see
-    // timeTravel) — released in the finally
-    val docs = Tables.documents(s, dir)
-      .select("doc_id", "n_chars", "lang").localCheckpoint(true)
-    val table = Files.createTempDirectory("graft_lake_evo_")
-    try {
+  def schemaEvolution(s: SparkSession, dir: String): DataFrame =
+    withCorpus(s, dir, "doc_id", "n_chars", "lang") { (docs, table) =>
       docs.filter(col("doc_id") % 2 === 0).select("doc_id", "n_chars")
         .coalesce(FixtureWriteFiles).write.mode(SaveMode.Overwrite)
         .parquet(table.resolve("gen=1").toString)
@@ -202,11 +203,7 @@ object Lake {
       import s.implicits._
       out.map(r => (Option(r.getString(0)).orNull, r.getLong(1), r.getLong(2)))
         .toSeq.toDF("lang", "n_docs", "sum_chars")
-    } finally {
-      CacheLifecycle.release(docs)
-      org.apache.commons.io.FileUtils.deleteDirectory(table.toFile)
     }
-  }
 
   /** Change data feed — the CDC read every downstream incremental
     * consumer of a lakehouse table needs (Delta CDF / Iceberg
@@ -225,13 +222,8 @@ object Lake {
     * carry-forward means untouched files can't contain changes —
     * metadata pruning before any data read).
     */
-  def changeFeed(s: SparkSession, dir: String): DataFrame = {
-    // one scan+exchange of the corpus for all three derivations (r12;
-    // see timeTravel) — released in the finally
-    val docs = Tables.documents(s, dir).select("doc_id", "text")
-      .localCheckpoint(true)
-    val table = Files.createTempDirectory("graft_lake_cdc_")
-    try {
+  def changeFeed(s: SparkSession, dir: String): DataFrame =
+    withCorpus(s, dir, "doc_id", "text") { (docs, table) =>
       val v1 = docs.filter(col("doc_id") % 2 === 0)
       commit(v1, table, 1, fileTarget = FixtureWriteFiles)
       val replaced = docs.filter(col("doc_id") % 3 === 0)
@@ -261,11 +253,7 @@ object Lake {
         .select(col("doc_id"), col("c.change_type"), col("c.text"))
       // materialize before the temp table is deleted
       CacheLifecycle.materialize(feed)
-    } finally {
-      CacheLifecycle.release(docs)
-      org.apache.commons.io.FileUtils.deleteDirectory(table.toFile)
     }
-  }
 
   /** End-to-end scan through the custom DataSourceV2 connector
     * (`sources/SegmentSource`, format `graft-segments`): the corpus is
@@ -315,13 +303,8 @@ object Lake {
     * grows — a distributed file listing feeding the same set-difference,
     * with the manifest union still metadata-sized.
     */
-  def vacuumOrphans(s: SparkSession, dir: String): DataFrame = {
-    // one scan+exchange for the commit and the aborted retry (r12; see
-    // timeTravel) — released in the finally
-    val docs = Tables.documents(s, dir).select("doc_id", "text")
-      .localCheckpoint(true)
-    val table = Files.createTempDirectory("graft_lake_vac_")
-    try {
+  def vacuumOrphans(s: SparkSession, dir: String): DataFrame =
+    withCorpus(s, dir, "doc_id", "text") { (docs, table) =>
       commit(docs, table, 1, fileTarget = FixtureWriteFiles)
       // aborted commit: data files land under files/v2, no manifest
       docs.filter(col("doc_id") % 5 === 0)
@@ -363,11 +346,7 @@ object Lake {
       import s.implicits._
       Seq((liveAfter, orphanRows, orphanChars))
         .toDF("n_live_rows", "n_orphan_rows", "orphan_chars")
-    } finally {
-      CacheLifecycle.release(docs)
-      org.apache.commons.io.FileUtils.deleteDirectory(table.toFile)
     }
-  }
 
   /** Compaction planner — the small-file maintenance pass every
     * streaming-ingested lakehouse table needs: given the file inventory
@@ -426,15 +405,10 @@ object Lake {
     * the post-delete row count against the logical table content.
     */
   def snapshotExpire(s: SparkSession, dir: String,
-                     keepLast: Int = 1): DataFrame = {
-    // one corpus scan+exchange for the three commits (r12; see
-    // timeTravel). The commits keep their explicit repartition(4)
-    // literals and NO fileTarget — the file accounting below is pinned
-    // to them.
-    val docs = Tables.documents(s, dir).select("doc_id", "text")
-      .localCheckpoint(true)
-    val table = Files.createTempDirectory("graft_lake_exp_")
-    try {
+                     keepLast: Int = 1): DataFrame =
+    // the commits keep their explicit repartition(4) literals and NO
+    // fileTarget — the file accounting below is pinned to them
+    withCorpus(s, dir, "doc_id", "text") { (docs, table) =>
       commit(docs.filter(col("doc_id") % 2 === 0).repartition(4), table, 1)
       commit(docs.filter(col("doc_id") % 2 === 1).repartition(4), table, 2,
         carryForward = liveFiles(table, 1))
@@ -464,9 +438,5 @@ object Lake {
       import s.implicits._
       rows.toDF("version", "retained", "n_files", "n_safe_deleted",
         "n_rows_after")
-    } finally {
-      CacheLifecycle.release(docs)
-      org.apache.commons.io.FileUtils.deleteDirectory(table.toFile)
     }
-  }
 }

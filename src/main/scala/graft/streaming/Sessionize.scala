@@ -119,47 +119,42 @@ object Sessionize {
     import ss.implicits._
     // shared staged fixture (read-only; lives until Tables.invalidate)
     val watch = StreamOps.stagedHeartbeatDir(ss, dir, nHeartbeats = 2)
-    locally {
-      val schema = ss.read.parquet(watch.toString).schema
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(watch.toString)
-        .transform(graft.Tables.normalizeTs) // staged bytes are the raw fixture
-        .withWatermark("ts", "10 minutes")
-        // the typed state row carries a primitive Double; a null value
-        // (failed upstream parse) folds as a zero contribution. The
-        // batch form and the oracle both COALESCE their null-skipping
-        // sums to 0, so all three agree even on an all-null session
-        .select(col("user_id"), col("ts"),
-          coalesce(col("value"), lit(0.0)).as("value"))
-        .as[Ev]
-        .groupByKey(_.user_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.EventTimeTimeout)(SessionLogic.fn _)
-      // FILE sink, not the memory sink: the memory sink routes every
-      // emitted session through the driver as task results, which is a
-      // spark.driver.maxResultSize ceiling that grows with the corpus
-      // (at sf10 the session set crossed the 1g default and forced a
-      // global 8g bump). A parquet sink writes executor-side — the
-      // production shape — so session output never touches the driver
-      // and the default result-size guard stays intact for everyone else.
-      val out = StreamOps.newScratchDir("graft_sessions_out_")
-      val chk = StreamOps.newScratchDir("graft_sessions_chk_")
-      val q = stream.toDF().writeStream
-        .outputMode("append").format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", chk.toString)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      // explicit schema: an EMPTY stream (degenerate fixtures — the
-      // EdgeSweep empty mode) writes no part files, and schema inference
-      // on an empty directory throws where the old memory sink returned
-      // an empty table; the sink's own schema keeps the contract
-      ss.read.schema(stream.toDF().schema).parquet(out.toString)
-        .filter(col("user_id") >= 0)
-        .withColumn("sum_v", round(col("sum_v"), 2))
-    }
+    val stream = StreamOps.stagedStream(ss, watch.toString)
+      .transform(graft.Tables.normalizeTs) // staged bytes are the raw fixture
+      .withWatermark("ts", "10 minutes")
+      // the typed state row carries a primitive Double; a null value
+      // (failed upstream parse) folds as a zero contribution. The
+      // batch form and the oracle both COALESCE their null-skipping
+      // sums to 0, so all three agree even on an all-null session
+      .select(col("user_id"), col("ts"),
+        coalesce(col("value"), lit(0.0)).as("value"))
+      .as[Ev]
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.EventTimeTimeout)(SessionLogic.fn _)
+    // hand-written drain: a FILE sink, not StreamOps.drain's memory
+    // sink, for the driver's result size. The memory sink routes every
+    // emitted session through the driver as task results, which is a
+    // spark.driver.maxResultSize ceiling that grows with the corpus
+    // (at sf10 the session set crossed the 1g default and forced a
+    // global 8g bump). A parquet sink writes executor-side — the
+    // production shape — so session output never touches the driver
+    // and the default result-size guard stays intact for everyone else.
+    val out = StreamOps.newScratchDir("graft_sessions_out_")
+    val chk = StreamOps.newScratchDir("graft_sessions_chk_")
+    val q = stream.toDF().writeStream
+      .outputMode("append").format("parquet")
+      .option("path", out.toString)
+      .option("checkpointLocation", chk.toString)
+      .start()
+    try q.processAllAvailable()
+    finally q.stop()
+    // explicit schema: an EMPTY stream (degenerate fixtures — the
+    // EdgeSweep empty mode) writes no part files, and schema inference
+    // on an empty directory throws where the old memory sink returned
+    // an empty table; the sink's own schema keeps the contract
+    ss.read.schema(stream.toDF().schema).parquet(out.toString)
+      .filter(col("user_id") >= 0)
+      .withColumn("sum_v", round(col("sum_v"), 2))
   }
 }

@@ -1,35 +1,69 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.file.{Files, Path}
+import java.nio.file.attribute.FileTime
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 import graft.expressions.{BottomKAgg, HllAgg, TopKAgg}
 import graft.expressions.DotProduct.dot
 
 /** Structured Streaming surface. The reference is batch-only (SURVEY.md §0),
   * so this is engine-completeness beyond the reference: windowed streaming
   * aggregation with event-time semantics, driven synchronously from the
-  * batch fixtures for test/verify (memory sink + processAllAvailable).
+  * batch fixtures for test/verify. Each entry states only its plan and
+  * output mode: [[graft.Tables.stream]] is the source over one fixture
+  * table ([[stagedStream]] over a staged multi-batch directory), and
+  * [[drain]] runs the query into a memory sink and returns the sink
+  * table. Three drains are written by hand, each with its reason beside
+  * it: [[Sessionize.streaming]]'s file sink, [[streamLakeUpsert]]'s
+  * `foreachBatch` and [[streamSegmentSource]]'s drain–commit–drain.
   */
 object StreamOps {
 
   private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** The single parquet part file under a just-written staging dir.
-    * Files.list returns a stream that must be CLOSED — the open-ended
-    * iterator form leaked one directory fd per staged micro-batch file.
+  /** Run `stream` to completion into a memory sink in `outputMode` and
+    * return the sink table. The query gets a fresh name, drains every
+    * available input, and stops even when the drain throws; its
+    * `recentProgress` stays readable in [[lastDrainProgress]].
     */
-  private def partFileOf(tmp: java.nio.file.Path): java.nio.file.Path = {
-    val listing = java.nio.file.Files.list(tmp)
-    try {
-      val it = listing.iterator()
-      var found: java.nio.file.Path = null
-      while (it.hasNext) {
-        val p = it.next()
-        if (p.getFileName.toString.endsWith(".parquet")) found = p
-      }
-      require(found != null, s"no part file under $tmp")
-      found
-    } finally listing.close()
+  private[graft] def drain(stream: Dataset[_], outputMode: String): DataFrame = {
+    val name = s"graft_stream_${counter.incrementAndGet()}"
+    val q = stream.writeStream.outputMode(outputMode).format("memory")
+      .queryName(name).start()
+    try q.processAllAvailable()
+    finally {
+      lastDrainProgress = q.recentProgress
+      q.stop()
+    }
+    stream.sparkSession.table(name)
+  }
+
+  /** `recentProgress` of the most recent [[drain]]. */
+  @volatile private var lastDrainProgress: Array[StreamingQueryProgress] = Array.empty
+
+  /** File-stream source over a staged directory (or glob) of batch files:
+    * one micro-batch per file, oldest mtime first (`maxFilesPerTrigger=1`,
+    * `latestFirst=false`), so the staged order is the batch order that
+    * watermark and late-data semantics depend on. The staged files are no
+    * fixture table, so their schema is read from them.
+    */
+  private[streaming] def stagedStream(ss: SparkSession, watch: String): DataFrame =
+    ss.readStream.schema(ss.read.parquet(watch).schema)
+      .option("maxFilesPerTrigger", "1")
+      .option("latestFirst", "false")
+      .parquet(watch)
+
+  /** Stage micro-batch `n` of `watch`: `write` puts one parquet file at
+    * its path, whose mtime is then pinned so [[stagedStream]] reads it
+    * n-th.
+    */
+  private def stageBatch(watch: Path, n: Int)(write: Path => Unit): Unit = {
+    val dst = watch.resolve(f"batch$n%04d.parquet")
+    write(dst)
+    Files.setLastModifiedTime(dst, FileTime.fromMillis(1000000L + n * 10000L))
   }
 
   /** Per-corpus max event time (see stageEventsWithHeartbeats) — cleared
@@ -48,7 +82,7 @@ object StreamOps {
     * [[graft.Tables.invalidate]] alongside [[maxEventTs]].
     */
   private[graft] val stagedHeartbeats =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), java.nio.file.Path]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Int), Path]()
 
   // Backstop for processes that run streaming queries and exit without
   // calling Tables.invalidate(): without this the memoized graft_hb* temp
@@ -71,10 +105,10 @@ object StreamOps {
     * driver, and its disk cost is output-sized, not corpus-sized.
     */
   private val scratchDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+    new java.util.concurrent.ConcurrentLinkedQueue[Path]()
 
-  private[streaming] def newScratchDir(prefix: String): java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
+  private[streaming] def newScratchDir(prefix: String): Path = {
+    val p = Files.createTempDirectory(prefix)
     scratchDirs.add(p)
     p
   }
@@ -91,9 +125,7 @@ object StreamOps {
   private[graft] def clearStagedHeartbeats(): Unit = {
     val it = stagedHeartbeats.values().iterator()
     while (it.hasNext) {
-      val watch = it.next()
-      // the registry stores the watch dir; its parent is the stage root
-      try org.apache.commons.io.FileUtils.deleteDirectory(watch.getParent.toFile)
+      try org.apache.commons.io.FileUtils.deleteDirectory(it.next().toFile)
       catch { case _: java.io.IOException => () } // best-effort temp cleanup
     }
     stagedHeartbeats.clear()
@@ -109,14 +141,12 @@ object StreamOps {
     * the previously staged bytes (same contract as [[maxEventTs]]).
     */
   private[streaming] def stagedHeartbeatDir(ss: SparkSession, dir: String,
-                                            nHeartbeats: Int): java.nio.file.Path = {
+                                            nHeartbeats: Int): Path = {
     val key = (java.nio.file.Paths.get(dir, "events.parquet")
       .toRealPath().toString, nHeartbeats)
     stagedHeartbeats.computeIfAbsent(key, _ => {
-      val stage = java.nio.file.Files.createTempDirectory(s"graft_hb${nHeartbeats}_")
-      val watch = stage.resolve("watch")
-      java.nio.file.Files.createDirectory(watch)
-      stageEventsWithHeartbeats(ss, dir, stage, watch, nHeartbeats)
+      val watch = Files.createTempDirectory(s"graft_hb${nHeartbeats}_")
+      stageEventsWithHeartbeats(ss, dir, watch, nHeartbeats)
       watch
     })
   }
@@ -168,24 +198,12 @@ object StreamOps {
   def tumblingWindowAgg(s: SparkSession, dir: String,
                         windowLen: String = "1 hour"): DataFrame = {
     val ss = streamingSession(s)
-    val path = s"$dir/events.parquet"
-    val schema = graft.Tables.schemaOf(ss, path)
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    // file-stream source wants a directory: stream the sf dir, glob one table
-    val stream = ss.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val stream = graft.Tables.stream(ss, dir, "events")
       .transform(graft.Tables.normalizeTs)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), windowLen), col("event_type"))
       .agg(count(lit(1)).as("cnt"), round(sum("value"), 2).as("sum_v"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    ss.table(name).select(
+    drain(stream, "complete").select(
       col("window.start").as("win_start"),
       col("event_type"), col("cnt"), col("sum_v"))
   }
@@ -210,24 +228,13 @@ object StreamOps {
                             threshold: Long = 2,
                             windowLen: String = "1 hour"): DataFrame = {
     val ss = streamingSession(s)
-    val path = s"$dir/events.parquet"
-    val schema = graft.Tables.schemaOf(ss, path)
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val stream = ss.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val stream = graft.Tables.stream(ss, dir, "events")
       .transform(graft.Tables.normalizeTs)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), windowLen), col("user_id"))
       .agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= threshold)
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    ss.table(name).select(
+    drain(stream, "complete").select(
       col("window.start").as("win_start"), col("user_id"), col("cnt"))
   }
 
@@ -241,11 +248,7 @@ object StreamOps {
     */
   def streamStreamJoin(s: SparkSession, dir: String): DataFrame = {
     val ss = streamingSession(s)
-    val path = s"$dir/events.parquet"
-    val schema = graft.Tables.schemaOf(ss, path)
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    def events = ss.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    def events = graft.Tables.stream(ss, dir, "events")
       .transform(graft.Tables.normalizeTs)
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id"), col("event_id").as("click_id"),
@@ -262,27 +265,9 @@ object StreamOps {
         col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
       .select(col("click_id"), col("purchase_id"), col("user_id"),
         col("value"))
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    ss.table(name)
+    drain(joined, "append")
   }
 
-  /** Streaming exact dedup — the streaming member of the dedup family:
-    * documents stream in, `dropDuplicates` on the normalized fingerprint
-    * keeps the first arrival of each distinct content, append mode emits
-    * exactly the distinct set. State is one fingerprint per distinct
-    * document; a real ingest pipeline bounds it with
-    * `dropDuplicatesWithinWatermark` over arrival time (the fixture table
-    * has no event-time column, so the unbounded variant is exercised).
-    * Output is the fingerprint set itself — arrival order is
-    * partition-nondeterministic, so only order-insensitive columns are
-    * emitted (the batch oracle is SELECT DISTINCT of the same expression).
-    */
   /** Streaming dedup with BOUNDED state — the form a real ingest pipeline
     * runs: `dropDuplicatesWithinWatermark` evicts a key's state once the
     * watermark passes its event time plus the delay, so state is ∝
@@ -296,24 +281,13 @@ object StreamOps {
     */
   def streamingDedupBounded(s: SparkSession, dir: String): DataFrame = {
     val ss = streamingSession(s)
-    val path = s"$dir/events.parquet"
-    val schema = graft.Tables.schemaOf(ss, path)
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val stream = ss.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val stream = graft.Tables.stream(ss, dir, "events")
       .transform(graft.Tables.normalizeTs)
       .withWatermark("ts", "1 hour")
       .withColumn("hour_start", date_trunc("hour", col("ts")))
       .dropDuplicatesWithinWatermark("user_id", "event_type", "hour_start")
       .select("user_id", "event_type", "hour_start")
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    ss.table(name)
+    drain(stream, "append")
   }
 
   /** Stream-static join — the remaining canonical streaming join shape:
@@ -330,27 +304,16 @@ object StreamOps {
                        k: Int = 3, evalMod: Int = 10): DataFrame = {
     import graft.functions.TextFunctions.shingles
     val ss = streamingSession(s)
-    val path = s"$dir/documents.parquet"
-    val schema = graft.Tables.schemaOf(ss, path)
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val evalShingles = ss.read.parquet(path)
+    val evalShingles = ss.read.parquet(s"$dir/documents.parquet")
       .filter(col("doc_id") % evalMod === 0)
       .select(explode(shingles(col("text"), k)).as("sh"))
       .distinct()
-    val stream = ss.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = graft.Tables.stream(ss, dir, "documents")
       .filter(col("doc_id") % evalMod =!= 0)
       .select(col("doc_id"), explode(shingles(col("text"), k)).as("sh"))
       .join(broadcast(evalShingles), Seq("sh"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    ss.table(name)
+    drain(stream, "complete")
   }
 
   /** Streaming anomaly detection against a fitted static baseline — the
@@ -367,13 +330,9 @@ object StreamOps {
   def streamAnomaly(s: SparkSession, dir: String,
                     threshold: Double = 3.0): DataFrame = {
     val ss = streamingSession(s)
-    val path = s"$dir/events.parquet"
-    val schema = graft.Tables.schemaOf(ss, path)
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val stats = ss.read.parquet(path).groupBy("event_type")
+    val stats = ss.read.parquet(s"$dir/events.parquet").groupBy("event_type")
       .agg(avg("value").as("mu"), stddev_samp("value").as("sigma"))
-    val stream = ss.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val stream = graft.Tables.stream(ss, dir, "events")
       .select("event_id", "event_type", "value")
       .join(broadcast(stats), Seq("event_type"))
       // zero-variance types (every value identical) have no anomalies by
@@ -383,14 +342,7 @@ object StreamOps {
       .withColumn("z", (col("value") - col("mu")) / col("sigma"))
       .filter(abs(col("z")) > lit(threshold))
       .select(col("event_id"), col("event_type"), round(col("z"), 4).as("z"))
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    ss.table(name)
+    drain(stream, "append")
   }
 
   /** Streaming ANN ingest — the streaming twin of `emb_knn_incremental`
@@ -419,18 +371,14 @@ object StreamOps {
     val dim = VectorFunctions.Dim
     val bucketOf = VectorFunctions.bucketKernel(
       VectorFunctions.hyperplanesFlat(numPlanes, dim), dim)
-    val path = s"$dir/embeddings.parquet"
-    val schema = graft.Tables.schemaOf(ss, path)
-    val name = s"graft_stream_${counter.incrementAndGet()}"
     // null embeddings are excluded on BOTH sides — corpusVectors' index
     // ingest-hygiene rule, applied to the streaming source too
-    val corpus = ss.read.parquet(path)
+    val corpus = ss.read.parquet(s"$dir/embeddings.parquet")
       .filter(col("vec_id") % 2 === 0 && col("embedding").isNotNull)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"))
       .withColumn("bucket", bucketOf(col("nv")))
       .withColumn("nn", sqrt(dot(col("nv"), col("nv"))))
-    val stream = ss.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+    val stream = graft.Tables.stream(ss, dir, "embeddings")
       .filter(col("vec_id") % 2 === 1 && col("embedding").isNotNull)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
       .withColumn("bucket", bucketOf(col("qv")))
@@ -441,14 +389,7 @@ object StreamOps {
         col("neighbor_id"))
       .groupBy("query_id")
       .agg(TopKAgg.topk(col("cosine"), col("neighbor_id"), k).as("top"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    ss.table(name)
+    drain(stream, "complete")
       .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("query_id"), col("t.id").as("neighbor_id"),
         col("t.score").as("cosine"), (col("pos") + 1).cast("int").as("rank"))
@@ -511,13 +452,9 @@ object StreamOps {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState}
     val ss = streamingSession(s)
     import ss.implicits._
-    val path = s"$dir/documents.parquet"
-    val schema = graft.Tables.schemaOf(ss, path)
-    val name = s"graft_stream_${counter.incrementAndGet()}"
     val ttlMs = 3600L * 1000
     val dropAcc = ss.sparkContext.longAccumulator("graft.streamMinhash.capacityDrops")
-    val bands = ss.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val bands = graft.Tables.stream(ss, dir, "documents")
       .select(col("doc_id"),
         posexplode(bandKeysKernel(NumPerm, NumBands)(
           transform(shingles(col("text"), ShingleK), sh => xxhash64(sh))))
@@ -551,13 +488,7 @@ object StreamOps {
             out.result().iterator
           }
       }
-    val q = candidates.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    val drained = drain(candidates, "append")
     lastCapacityDrops = dropAcc.value
     if (lastCapacityDrops > 0)
       Console.err.println(
@@ -567,7 +498,7 @@ object StreamOps {
           "to the capacity cap")
     // batch hand-off: distinct candidates (a pair repeats once per shared
     // band) verified exactly against the corpus shingle arrays
-    graft.operators.Dedup.verifyCandidates(ss, dir, ss.table(name).distinct())
+    graft.operators.Dedup.verifyCandidates(ss, dir, drained.distinct())
   }
 
   /** Streaming curation — the ingest-time twin of `pipeline_curate`'s
@@ -588,12 +519,8 @@ object StreamOps {
     */
   def streamCurate(s: SparkSession, dir: String): DataFrame = {
     val ss = streamingSession(s)
-    val path = s"$dir/documents.parquet"
-    val schema = graft.Tables.schemaOf(ss, path)
-    val name = s"graft_stream_${counter.incrementAndGet()}"
     val t = graft.functions.TextFunctions.tokens(col("text"))
-    val stream = ss.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = graft.Tables.stream(ss, dir, "documents")
       .select(col("lang"),
         graft.functions.TextFunctions.fingerprint(col("text")).as("fp"),
         size(t).as("n_tokens"),
@@ -601,46 +528,28 @@ object StreamOps {
       .filter(col("n_tokens") >= 20 && col("distinct_ratio") >= 0.3)
       .select("fp", "lang", "n_tokens")
       .dropDuplicates("fp", "lang", "n_tokens")
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    ss.table(name)
+    drain(stream, "append")
   }
 
+  /** Streaming exact dedup — the streaming member of the dedup family:
+    * documents stream in, `dropDuplicates` on the normalized fingerprint
+    * keeps the first arrival of each distinct content, append mode emits
+    * exactly the distinct set. State is one fingerprint per distinct
+    * document; a real ingest pipeline bounds it with
+    * `dropDuplicatesWithinWatermark` over arrival time (the fixture table
+    * has no event-time column, so the unbounded variant is exercised).
+    * Output is the fingerprint set itself — arrival order is
+    * partition-nondeterministic, so only order-insensitive columns are
+    * emitted (the batch oracle is SELECT DISTINCT of the same expression).
+    */
   def streamingDedup(s: SparkSession, dir: String): DataFrame = {
     val ss = streamingSession(s)
-    val path = s"$dir/documents.parquet"
-    val schema = graft.Tables.schemaOf(ss, path)
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val stream = ss.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = graft.Tables.stream(ss, dir, "documents")
       .select(graft.functions.TextFunctions.fingerprint(col("text")).as("fp"))
       .dropDuplicates("fp")
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    ss.table(name)
+    drain(stream, "append")
   }
 
-  /** Streaming changelog compaction — the streaming twin of
-    * `q33_merge_upsert` (a CDC materialized view: upserts arrive on a
-    * stream, the view always holds the latest version per key). The same
-    * one-aggregate plan as the batch operator — `max_by` keyed by
-    * (user_id, event_type) with the (ts, event_id) total order — run as a
-    * streaming aggregation in complete mode. State is ONE buffered row
-    * per live key (bounded by key cardinality, the materialized view
-    * itself), never the changelog; partial aggregation still compacts
-    * each micro-batch map-side. Draining the finite fixture ends at
-    * exactly the batch result, so the SAME DuckDB oracle gates it.
-    */
   /** Watermark late-data semantics, end-to-end and DETERMINISTIC — the
     * part of event-time processing that only shows under multi-batch
     * arrival: the fixture is staged into three files consumed in a
@@ -667,9 +576,7 @@ object StreamOps {
     val ss = streamingSession(s)
     val ev = ss.read.parquet(s"$dir/events.parquet")
       .transform(graft.Tables.normalizeTs)
-    val stage = java.nio.file.Files.createTempDirectory("graft_late_")
-    val watch = stage.resolve("watch")
-    java.nio.file.Files.createDirectory(watch)
+    val watch = Files.createTempDirectory("graft_late_")
     try {
       // empty corpus: anchor the heartbeat at the epoch (same contract as
       // stageEventsWithHeartbeats) — the audit then drains to zero rows
@@ -677,15 +584,8 @@ object StreamOps {
       val heartbeatTs = (if (hbRow.isNullAt(0)) java.time.Instant.EPOCH
                          else hbRow.getTimestamp(0).toInstant)
         .plus(java.time.Duration.ofDays(20))
-      def stageFile(df: DataFrame, n: Int): Unit = {
-        val tmp = stage.resolve(s"tmp$n")
-        df.coalesce(1).write.parquet(tmp.toString)
-        val src = partFileOf(tmp)
-        val dst = watch.resolve(f"batch$n%04d.parquet")
-        java.nio.file.Files.move(src, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000L + n * 10000L))
-      }
+      def stageFile(df: DataFrame, n: Int): Unit =
+        stageBatch(watch, n)(graft.Tables.writeFile(df, _))
       // ORDER MATTERS, and one batch more subtly than the docs suggest:
       // Spark's LATE-EVENT filter for batch N uses the watermark computed
       // from data through batch N−2 (one batch behind the EVICTION
@@ -700,37 +600,24 @@ object StreamOps {
         .withColumn("event_type", lit("heartbeat"))
         .withColumn("value", lit(0.0)), 2)
       stageFile(ev.filter(col("event_id") % 2 =!= 0), 3)
-      val name = s"graft_stream_${counter.incrementAndGet()}"
-      val schema = ss.read.parquet(watch.toString).schema
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(watch.toString)
+      val stream = stagedStream(ss, watch.toString)
         .withWatermark("ts", delay)
         .groupBy(window(col("ts"), windowLen), col("event_type"))
         .agg(count(lit(1)).as("cnt"), round(sum("value"), 2).as("sum_v"))
-      val q = stream.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally {
-        lastDroppedByWatermark = q.recentProgress
-          .map(p => Option(p.stateOperators).map(_.map(
-            _.numRowsDroppedByWatermark).sum).getOrElse(0L)).sum
-        lastProgressSummary = q.recentProgress.map(p =>
-          s"[rows=${p.numInputRows} wm=${p.eventTime.get("watermark")}]")
-          .mkString(" ")
-        q.stop()
-      }
-      val result = ss.table(name).select(
+      val drained = drain(stream, "append")
+      lastDroppedByWatermark = lastDrainProgress
+        .map(p => Option(p.stateOperators).map(_.map(
+          _.numRowsDroppedByWatermark).sum).getOrElse(0L)).sum
+      lastProgressSummary = lastDrainProgress.map(p =>
+        s"[rows=${p.numInputRows} wm=${p.eventTime.get("watermark")}]")
+        .mkString(" ")
+      val result = drained.select(
         col("window.start").as("win_start"), col("event_type"),
         col("cnt"), col("sum_v"))
       val out = result.collect()
       ss.createDataFrame(java.util.Arrays.asList(out: _*), result.schema)
     } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
+      org.apache.commons.io.FileUtils.deleteDirectory(watch.toFile)
     }
   }
 
@@ -763,9 +650,7 @@ object StreamOps {
   def streamLakeUpsert(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Lake
     val ss = streamingSession(s)
-    val path = s"$dir/events.parquet"
-    val schema = graft.Tables.schemaOf(ss, path)
-    val table = java.nio.file.Files.createTempDirectory("graft_stream_lake_")
+    val table = Files.createTempDirectory("graft_stream_lake_")
     val version = new java.util.concurrent.atomic.AtomicInteger(0)
     def compact(changelog: DataFrame): DataFrame = changelog
       .groupBy("user_id", "event_type")
@@ -778,12 +663,13 @@ object StreamOps {
         col("last.last_event_id").as("last_event_id"),
         col("last.last_value").as("last_value"), col("n_versions"))
     try {
-      val stream = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val stream = graft.Tables.stream(ss, dir, "events")
         .transform(graft.Tables.normalizeTs)
         .select(col("user_id"), col("event_type"), col("ts").as("last_ts"),
           col("event_id").as("last_event_id"), col("value").as("last_value"),
           lit(1L).as("n_versions"))
+      // hand-written drain: foreachBatch, because each micro-batch commits
+      // a Lake version rather than appending to a sink table
       val q = stream.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val v = version.incrementAndGet()
@@ -871,25 +757,25 @@ object StreamOps {
     cdcApplyPath(streamingSession(s), dir, "events.parquet",
       maxFilesPerTrigger = 0)
 
-  /** Source-parameterized core of [[streamCdcApply]] — specs stage
-    * multi-file directories through it to pin cross-batch state folds
-    * and tombstone revival. The schema of `watchDir/glob` comes from the
-    * memoized `Tables.schemaOf`, so a fixture table's footer is read once
-    * per JVM, not once per query.
+  /** Source-parameterized core of [[streamCdcApply]]. With
+    * `maxFilesPerTrigger = 0` the source is the fixture table file `glob`
+    * under `watchDir` ([[graft.Tables.stream]]); with 1 it is every file
+    * `glob` matches there, one micro-batch each ([[stagedStream]]) —
+    * specs stage multi-file directories through it to pin cross-batch
+    * state folds and tombstone revival.
     */
   private[streaming] def cdcApplyPath(ss: SparkSession, watchDir: String,
                                       glob: String,
                                       maxFilesPerTrigger: Int): DataFrame = {
-    val schema = graft.Tables.schemaOf(ss, s"$watchDir/$glob")
-    val name = s"graft_stream_${counter.incrementAndGet()}"
+    require(maxFilesPerTrigger == 0 || maxFilesPerTrigger == 1,
+      s"maxFilesPerTrigger must be 0 or 1, got $maxFilesPerTrigger")
     import ss.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val reader = ss.readStream.schema(schema)
-      .option("pathGlobFilter", glob)
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-        .option("latestFirst", "false")
-    val q = reader.parquet(watchDir)
+    import org.apache.spark.sql.streaming.GroupStateTimeout
+    val source =
+      if (maxFilesPerTrigger == 0)
+        graft.Tables.stream(ss, watchDir, glob.stripSuffix(".parquet"))
+      else stagedStream(ss, s"$watchDir/$glob")
+    val updates = source
       .transform(graft.Tables.normalizeTs)
       // typed state carries a primitive Double; an op with a null value
       // (missing payload) folds as a zero-value upsert rather than
@@ -900,16 +786,7 @@ object StreamOps {
       .as[CdcOp]
       .groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(CdcLogic.fn _)
-      .toDF()
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val drained = ss.table(name)
-    drained
+    drain(updates, "update")
       .groupBy("user_id")
       .agg(max_by(
         struct(col("last_ts"), col("last_event_id"), col("last_value"),
@@ -922,13 +799,20 @@ object StreamOps {
       .localCheckpoint(true)
   }
 
+  /** Streaming changelog compaction — the streaming twin of
+    * `q33_merge_upsert` (a CDC materialized view: upserts arrive on a
+    * stream, the view always holds the latest version per key). The same
+    * one-aggregate plan as the batch operator — `max_by` keyed by
+    * (user_id, event_type) with the (ts, event_id) total order — run as a
+    * streaming aggregation in complete mode. State is ONE buffered row
+    * per live key (bounded by key cardinality, the materialized view
+    * itself), never the changelog; partial aggregation still compacts
+    * each micro-batch map-side. Draining the finite fixture ends at
+    * exactly the batch result, so the SAME DuckDB oracle gates it.
+    */
   def streamMergeUpsert(s: SparkSession, dir: String): DataFrame = {
     val ss = streamingSession(s)
-    val path = s"$dir/events.parquet"
-    val schema = graft.Tables.schemaOf(ss, path)
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val stream = ss.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val stream = graft.Tables.stream(ss, dir, "events")
       .transform(graft.Tables.normalizeTs)
       .groupBy("user_id", "event_type")
       .agg(
@@ -940,14 +824,7 @@ object StreamOps {
         col("last.event_id").as("last_event_id"),
         col("last.value").as("last_value"),
         col("n_versions"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    ss.table(name)
+    drain(stream, "complete")
   }
 
   /** Stage the events fixture plus two far-future heartbeat rows
@@ -959,9 +836,8 @@ object StreamOps {
     * (the eviction watermark for batch N comes from data through N−1).
     */
   private[streaming] def stageEventsWithHeartbeats(ss: SparkSession, dir: String,
-                                        stage: java.nio.file.Path,
-                                        watch: java.nio.file.Path,
-                                        nHeartbeats: Int = 2): Unit = {
+                                                   watch: Path,
+                                                   nHeartbeats: Int = 2): Unit = {
     // mirrors Tables.events so a TIMESTAMP(NANOS) fixture is readable by
     // this raw scan and by the streaming source that follows
     if (ss.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
@@ -996,26 +872,9 @@ object StreamOps {
     // as one batch — part files as separate micro-batches would advance
     // the watermark between unordered parts and silently DROP late rows —
     // so that layout keeps the single-file rewrite.
-    val first = watch.resolve("batch0001.parquet")
-    if (java.nio.file.Files.isRegularFile(srcFile)) {
-      java.nio.file.Files.copy(srcFile, first)
-      java.nio.file.Files.setLastModifiedTime(first,
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + 10000L))
-    } else {
-      val tmp = stage.resolve("tmp1")
-      raw.coalesce(1).write.parquet(tmp.toString)
-      java.nio.file.Files.move(partFileOf(tmp), first)
-      java.nio.file.Files.setLastModifiedTime(first,
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + 10000L))
-    }
-    def stageFile(df: DataFrame, n: Int): Unit = {
-      val tmp = stage.resolve(s"tmp$n")
-      df.coalesce(1).write.parquet(tmp.toString)
-      val dst = watch.resolve(f"batch$n%04d.parquet")
-      java.nio.file.Files.move(partFileOf(tmp), dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + n * 10000L))
-    }
+    stageBatch(watch, 1)(first =>
+      if (Files.isRegularFile(srcFile)) Files.copy(srcFile, first)
+      else graft.Tables.writeFile(raw, first))
     // the heartbeat `ts` literal matches the RAW file's ts physical type
     // so every staged file shares one parquet schema with the copied file
     def hbTs(plusDays: Long): org.apache.spark.sql.Column = {
@@ -1038,7 +897,8 @@ object StreamOps {
     // each successive heartbeat is one batch whose watermark advance the
     // NEXT batch acts on; chains of S stateful operators need S+1 of them
     // for the final eviction to propagate through every operator
-    (1 to nHeartbeats).foreach(i => stageFile(heartbeat(i + 1, 10L * i), i + 1))
+    (1 to nHeartbeats).foreach(i =>
+      stageBatch(watch, i + 1)(graft.Tables.writeFile(heartbeat(i + 1, 10L * i), _)))
   }
 
   /** CHAINED stateful operators — windowed DISTINCT-user counts as
@@ -1065,43 +925,30 @@ object StreamOps {
     val ss = streamingSession(s)
     // shared staged fixture (read-only; lives until Tables.invalidate)
     val watch = stagedHeartbeatDir(ss, dir, nHeartbeats = 3)
-    locally {
-      val name = s"graft_stream_${counter.incrementAndGet()}"
-      val schema = ss.read.parquet(watch.toString).schema
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(watch.toString)
-        // NO user filter inside the stream: Catalyst pushes a
-        // deterministic filter below the EventTimeWatermark node (into
-        // the scan), which silently drops the heartbeats before they can
-        // advance the watermark — the final window then never flushes.
-        // Heartbeats flow through the whole pipeline instead, and their
-        // phantom far-future windows are cut from the drained result by
-        // event time below. (normalizeTs is a projection, not a filter —
-        // safe below the watermark.)
-        .transform(graft.Tables.normalizeTs)
-        .withWatermark("ts", delay)
-        .select(window(col("ts"), windowLen).as("w"), col("user_id"))
-        .dropDuplicates("w", "user_id")
-        .groupBy(col("w"))
-        .agg(count(lit(1)).as("n_users"))
-      val q = stream.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val maxReal = ss.read.parquet(s"$dir/events.parquet")
-        .transform(graft.Tables.normalizeTs)
-        .agg(max("ts")).collect()(0).getTimestamp(0)
-      // the memory sink is independent of the staged files — return the
-      // window-cardinality view lazily, no driver round-trip
-      ss.table(name)
-        .filter(col("w.start") <= lit(maxReal))
-        .select(col("w.start").as("win_start"), col("n_users"))
-    }
+    val stream = stagedStream(ss, watch.toString)
+      // NO user filter inside the stream: Catalyst pushes a
+      // deterministic filter below the EventTimeWatermark node (into
+      // the scan), which silently drops the heartbeats before they can
+      // advance the watermark — the final window then never flushes.
+      // Heartbeats flow through the whole pipeline instead, and their
+      // phantom far-future windows are cut from the drained result by
+      // event time below. (normalizeTs is a projection, not a filter —
+      // safe below the watermark.)
+      .transform(graft.Tables.normalizeTs)
+      .withWatermark("ts", delay)
+      .select(window(col("ts"), windowLen).as("w"), col("user_id"))
+      .dropDuplicates("w", "user_id")
+      .groupBy(col("w"))
+      .agg(count(lit(1)).as("n_users"))
+    val drained = drain(stream, "append")
+    val maxReal = ss.read.parquet(s"$dir/events.parquet")
+      .transform(graft.Tables.normalizeTs)
+      .agg(max("ts")).collect()(0).getTimestamp(0)
+    // the memory sink is independent of the staged files — return the
+    // window-cardinality view lazily, no driver round-trip
+    drained
+      .filter(col("w.start") <= lit(maxReal))
+      .select(col("w.start").as("win_start"), col("n_users"))
   }
 
   /** Windowed distinct-user ESTIMATES on the stream via the custom HLL
@@ -1121,23 +968,12 @@ object StreamOps {
   def streamHllUsers(s: SparkSession, dir: String,
                      windowLen: String = "1 hour"): DataFrame = {
     val ss = streamingSession(s)
-    val path = s"$dir/events.parquet"
-    val schema = graft.Tables.schemaOf(ss, path)
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val stream = ss.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val stream = graft.Tables.stream(ss, dir, "events")
       .transform(graft.Tables.normalizeTs)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), windowLen))
       .agg(HllAgg.hll(col("user_id")).as("n_users_est"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    ss.table(name).select(
+    drain(stream, "complete").select(
       col("window.start").as("win_start"), col("n_users_est"))
   }
 
@@ -1155,7 +991,7 @@ object StreamOps {
   def streamSegmentSource(s: SparkSession, dir: String): DataFrame = {
     val ss = streamingSession(s)
     val docs = graft.Tables.documents(ss, dir).select("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_segstream_")
+    val tmp = Files.createTempDirectory("graft_segstream_")
     try {
       def commitGen(slice: org.apache.spark.sql.DataFrame): Unit =
         slice.select(col("doc_id").cast("long").as("doc_id"), col("text"))
@@ -1164,6 +1000,8 @@ object StreamOps {
           .write.format("graft-segments").mode("append")
           .save(tmp.toString)
       commitGen(docs.filter(col("doc_id") % 2 === 0))
+      // hand-written drain: the second generation commits between two
+      // drains of the one live query
       val name = s"graft_stream_${counter.incrementAndGet()}"
       val q = ss.readStream.format("graft-segments").load(tmp.toString)
         .groupBy(pmod(col("doc_id"), lit(10)).as("bucket"))
@@ -1198,11 +1036,7 @@ object StreamOps {
   def streamSampleBottomK(s: SparkSession, dir: String, k: Int = 5,
                           windowLen: String = "1 hour"): DataFrame = {
     val ss = streamingSession(s)
-    val path = s"$dir/events.parquet"
-    val schema = graft.Tables.schemaOf(ss, path)
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val stream = ss.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val stream = graft.Tables.stream(ss, dir, "events")
       .transform(graft.Tables.normalizeTs)
       .withWatermark("ts", "10 minutes")
       .select(col("ts"),
@@ -1211,14 +1045,7 @@ object StreamOps {
         col("user_id"))
       .groupBy(window(col("ts"), windowLen))
       .agg(BottomKAgg.bottomk(col("h"), col("user_id"), k).as("sample"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    ss.table(name)
+    drain(stream, "complete")
       .select(col("window.start").as("win_start"),
         posexplode(col("sample")).as(Seq("pos", "e")))
       .select(col("win_start"), (col("pos") + 1).cast("int").as("rank"),
@@ -1241,12 +1068,8 @@ object StreamOps {
                          windowLen: String = "1 hour",
                          maxValue: Double = 1000.0): DataFrame = {
     val ss = streamingSession(s)
-    val path = s"$dir/events.parquet"
-    val schema = graft.Tables.schemaOf(ss, path)
-    val name = s"graft_stream_${counter.incrementAndGet()}"
     val viol = (c: Column) => sum(when(c, 1L).otherwise(0L))
-    val stream = ss.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val stream = graft.Tables.stream(ss, dir, "events")
       .transform(graft.Tables.normalizeTs)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), windowLen))
@@ -1258,14 +1081,7 @@ object StreamOps {
         viol(!col("event_type").isin(
           "click", "view", "signup", "purchase", "error")).as("type_domain"),
         viol(col("user_id").isNull || col("user_id") < 0L).as("bad_user"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    ss.table(name).select(
+    drain(stream, "complete").select(
       col("window.start").as("win_start"), col("n_rows"),
       col("null_value"), col("value_range"), col("type_domain"),
       col("bad_user"),

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Degenerate-input robustness sweep: runs EVERY SparkEntry query against
   * a fixture whose tables are empty (0 rows) or tiny (3 rows), and reports
@@ -12,8 +12,8 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   *
   * The sweep fixture preserves the exact fixture contract (ONE flat
   * parquet file per table named <t>.parquet — the streaming stagers
-  * byte-copy that file) by writing each truncated table through a temp
-  * directory and renaming the single part file into place. `events.ts`
+  * byte-copy that file) by writing each truncated table with
+  * `Tables.writeFile`. `events.ts`
   * round-trips through the nanos-as-long legacy read as a plain INT64
   * column, which Tables.normalizeTs already converts on every consumer
   * path.
@@ -180,25 +180,7 @@ object EdgeSweep {
           }
         case _ => base
       }
-      val tmp = dst.resolve(s"_stage_$t")
-      df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      // Files.list returns a stream that must be closed (fd leak otherwise)
-      val listing = java.nio.file.Files.list(tmp)
-      val moved =
-        try {
-          val part = listing.iterator()
-          var done = false
-          while (part.hasNext && !done) {
-            val p = part.next()
-            if (p.getFileName.toString.endsWith(".parquet")) {
-              java.nio.file.Files.move(p, dst.resolve(s"$t.parquet"))
-              done = true
-            }
-          }
-          done
-        } finally listing.close()
-      require(moved, s"no part file produced for $t")
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+      graft.Tables.writeFile(df, dst.resolve(s"$t.parquet"))
     } finally priorNanos match {
       case Some(v) => s.conf.set(nanosKey, v)
       case None => s.conf.unset(nanosKey)

@@ -56,22 +56,9 @@ object ScaleUp {
                        factor: Int): Unit = {
 
     def load(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
-    /** The fixture contract is ONE flat file per table named <t>.parquet
-      * (the streaming sources select tables via pathGlobFilter on the
-      * file name) — write through a temp dir and move the single part
-      * file into place.
-      */
     def save(t: String, df: DataFrame): Unit = {
-      val tmp = s"$dst/.tmp_$t"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file written for $t"))
       val target = java.nio.file.Paths.get(s"$dst/$t.parquet")
-      java.nio.file.Files.deleteIfExists(target)
-      java.nio.file.Files.move(part.toPath, target)
-      new java.io.File(tmp).listFiles().foreach(_.delete())
-      new java.io.File(tmp).delete()
+      graft.Tables.writeFile(df, target)
       println(s"[scaleup] $t -> ${spark.read.parquet(target.toString).count()} rows")
     }
     /** Union of `factor` replicas of df, each transformed with its index. */
